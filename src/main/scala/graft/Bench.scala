@@ -27,33 +27,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // keep ObjectHashAggregate (TypedImperativeAggregate sketches) in
-      // hash mode instead of per-partition sort fallback at 128 groups
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // always use the sort-based shuffle writer (r15, guide §2.2): below
-      // 200 reduce partitions Spark's bypass writer opens one file PER
-      // (map task × reduce partition) — at local[32]×32 that is ~1024
-      // file creations per exchange, and executor stack samples showed
-      // tasks blocked in FileOutputStream.open, not compute. Production
-      // shuffles (R > 200) take the sort writer anyway — this makes the
-      // local bench exercise the same writer, one indexed file per map
-      // task at any R. Measured: −0.3..−0.6 s on every shuffle-dense
-      // query (sim_ivfpq_topk 2.9→2.4, dedup_ngram_jaccard 1.7→1.2).
-      // r16: parameterised via the same env knob BenchOne carries so the
-      // whole-suite A/B the r15 verdict asked for runs through THIS entry
-      // point with an identical harness; default unchanged (sort writer).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-bench", cpus.toInt)
 
     // full materialization of every output row, through the frame's own
     // QueryExecution (see scaladoc: keeps the planning tracker honest)

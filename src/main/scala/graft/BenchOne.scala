@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: time a single registered query N times on a given SF dir
   * (`runMain graft.BenchOne <name> [sfDir] [reps]`). Not part of the driver
   * contract — used to compare plan variants without the full bench. */
@@ -10,21 +8,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bench-one")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // sort-based shuffle writer by default (the Bench.scala r15 setting;
-      // production R > 200 shuffles use it anyway) — env knob kept for A/B
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-bench-one", 32)
     // SPARK_GRAFT_EXPLAIN=1 prints the formatted physical plan once before
     // timing — the plan-diff companion to the timings
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -8,6 +7,13 @@ import java.nio.file.{Files, Paths}
   * as reviewable evidence of plan quality (pushdown, pruning, broadcast
   * choice, codegen spans, custom operators). Regenerate with
   * `sbt "runMain graft.PlanReport"`.
+  *
+  * `sbt "runMain graft.PlanReport <suffix> <query>..."` instead dumps each
+  * named query's formatted plan to `plans/r16/<query>_<suffix>.txt`, the
+  * before/after plan evidence of an optimization round. That mode runs on
+  * SPARK_GRAFT_SF_DIR (default sf0.1, the bench SF) at local[32], so shape
+  * choosers (flood collapse, star-vs-min-label, driver-CC) route exactly
+  * as the bench sees them.
   */
 object PlanReport {
 
@@ -227,15 +233,25 @@ object PlanReport {
     "vecstore_probe_multiquery" ->
       "Serving-shape ANN on the pure top-k path (r15 — the hybridTopKSet doctrine without the lexical tower): the query set is a FRAME (vec_id % 23 — a panel disjoint from every other probe's), ranked against the broadcast packed codebook in one projection, explode(slice(ranked, …)) fans each query to its probed cells, and ONE cell equi-join against the maintained generation binds to the partition column — dynamic partition pruning lists only the probed cell directories regardless of |queries|. One rank window partitioned by query_id. Adding a query adds broadcast rows and probe keys, never a second pass over the index.")
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) writePlansMd() else dumpPlans(args.head, args.tail.toSeq)
+
+  private def dumpPlans(suffix: String, names: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.build("graft-plan-report", 32)
+    names.foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(FormattedMode)
+      val p = Paths.get(s"plans/r16/${name}_$suffix.txt")
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, plan)
+      println(s"wrote $p (${plan.length} chars)")
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(): Unit = {
+    val spark = Session.build("graft-plan-report", 8)
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")

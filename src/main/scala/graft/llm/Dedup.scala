@@ -60,11 +60,11 @@ object Dedup {
 
   /** The batch-vs-maintained dedup regime chooser (the [[chooseStar]] /
     * [[collapseForShape]] doctrine on the MAINTENANCE axis) — r12 shipped
-    * both regimes answer-identical (DedupDeltaSweep asserts label
-    * equality at every step) but left the choice a deployment knob; this
-    * makes it a measured boundary. The corrected DedupDeltaSweep run
+    * both regimes answer-identical (the r13 dedup delta sweep asserted
+    * label equality at every step) but left the choice a deployment knob;
+    * this makes it a measured boundary. The corrected sweep run
     * (SCALING.md "Incremental dedup", sf0.1 base × char-bijection
-    * replicas) fits: batch re-dedup wall ≈ [[BatchDedupInterceptMs]] +
+    * replicas; a frozen record) fits: batch re-dedup wall ≈ [[BatchDedupInterceptMs]] +
     * [[BatchDedupSlopeUsPerDoc]]·N µs (re-shingle + re-band + re-pair the
     * whole corpus-so-far, linear), incremental landing ≈
     * [[MaintainedLandingFloorMs]] near-flat (+12 % over 8× corpus
@@ -92,8 +92,8 @@ object Dedup {
     * holds a signature-identical flood (mirror pages, boilerplate — all
     * N copies share every band bucket, so the naive self-join emits
     * ~bands·N²/2 rows that a DISTINCT must absorb before verification
-    * sees them; LshSkewSweep measures 1.0M joined rows at a 10% flood of
-    * sf0.1 vs ~800 guarded), identical-signature documents collapse to
+    * sees them; the r12 skew sweep in SCALING.md measured 1.0M joined
+    * rows at a 10% flood of sf0.1 vs ~800 guarded), identical-signature documents collapse to
     * one representative BEFORE banding and the verified rep-level pairs
     * expand back through group membership AFTER. The output is PROVABLY
     * plan-independent — est_jaccard is a function of the signature

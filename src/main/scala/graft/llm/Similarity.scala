@@ -821,30 +821,6 @@ object Similarity {
     (qe, cents, cbRow, cbn, codes)
   }
 
-  /** Encode a quantized corpus under GIVEN IVFADC artifacts (coarse
-    * cells + packed residual sub-codebooks) WITHOUT retraining — the
-    * frozen-codebook counterfactual [[graft.sources.IvfPqDriftSweep]]
-    * measures retrain-at-cadence against: same assignment and code
-    * arithmetic as the training encode, codebooks supplied instead of
-    * derived. */
-  private[graft] def ivfPqEncodeWith(qe0: DataFrame, cents: DataFrame,
-      cbRow: DataFrame): DataFrame = {
-    val qe = qe0.localCheckpoint(eager = false)
-    val centPick = "cqvs[CAST(array_position(cids, ranked[0].id) AS INT) - 1]"
-    val resid = assignRanked(qe, cents)
-      .select(col("vec_id"), col("label"),
-        expr("ranked[0].id").as("cell"),
-        expr(s"zip_with(qv, $centPick, (x, c) -> x - c)").as("rv"))
-    val subs = pqSplit(resid, "rv", Seq("vec_id", "label", "cell"))
-    val codeCols2 = (0 until PqM).map(m =>
-      max(when(col("m") === m, col("code"))).as(s"code$m"))
-    pqAssign(subs, cbRow)
-      .select(col("vec_id"), col("label"), col("cell"), col("m"),
-        expr("best.id").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("label")).as("label"), (min(col("cell")).as("cell") +: codeCols2): _*)
-  }
-
   /** The probe side only: queries rank the coarse codebook, build one ADC
     * table per (query, probed cell), score codes joined ON THE CELL ID,
     * shortlist, exact rerank. `codes` may be the freshly-encoded frame or

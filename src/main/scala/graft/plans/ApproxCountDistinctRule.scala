@@ -41,7 +41,7 @@ object ApproxCountDistinctRule extends Rule[LogicalPlan] {
 }
 
 /** Session-extensions entry point for graft's planner additions:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+  * `.withExtensions(new GraftExtensions)` on a session builder. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ApproxCountDistinctRule)

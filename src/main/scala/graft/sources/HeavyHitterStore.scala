@@ -68,7 +68,7 @@ object HeavyHitterStore {
   /** Counters kept per day (the summary's K). */
   val K = 20
 
-  /** The K-sizing rule [[HhSlackSim]]'s year-long measurement implies,
+  /** The K-sizing rule the year-long maintenance simulation implies,
     * codified ([[ErasureStore.bucketsFor]]'s spec-pinned style): the
     * degradation in K is a CLIFF, not a slope — at K at or below the
     * day-grain churn cohort (the keys that can out-count the persistent
@@ -128,11 +128,6 @@ object HeavyHitterStore {
       s"$k beside finalized days kept at $prev, a store consistent with " +
       "NEITHER. Pass the store's own K (storedK), or rebuild"
 
-  private def withTopK(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-
   /** Exact per-(day, key) counts of a slice of events — the partial the
     * streaming path lands and the fold sums. */
   private def dayCounts(events: DataFrame): DataFrame =
@@ -146,7 +141,7 @@ object HeavyHitterStore {
     * truncation threshold as cnt (user_id = -1). */
   private[sources] def summarize(s: SparkSession, counts: DataFrame,
       k: Int = K): DataFrame = {
-    withTopK(s)
+    graft.plans.TopKPerKeyStrategy.setup(s)
     val topK1 = graft.plans.TopKPerKey(counts,
       keys = Seq("day"), orderBy = Seq(("cnt", true), ("user_id", false)), k = k + 1)
     // rank within the ≤ K+1 surviving rows per day (bounded window)

@@ -120,7 +120,7 @@ object IvfPqLog {
   }
 
   /** Measured per-candidate cost of the EXACT delta leg relative to the
-    * ADC leg (c_exact / c_adc), from graft.sources.IvfPqDeltaSweep on
+    * ADC leg (c_exact / c_adc), from the r13 delta sweep (SCALING.md) on
     * this geometry: the delta leg's 64-dim codegen'd fixed-point dot is
     * CHEAPER per candidate than the ADC leg's 8 × (array_position over
     * 32 ids + element_at) interpreted array ops, but both are dominated
@@ -200,61 +200,6 @@ object IvfPqLog {
     fold
   }
 
-  /** foreachBatch landing hook of the streaming loop: the meter wire's
-    * derived embedding side channel landed as a train-free delta epoch
-    * (the [[VecStoreLog.landWireEpoch]] twin on the compressed index). */
-  def landWireEpoch(parsed: DataFrame, dir: String, batchId: Long): Long =
-    appendBatch(VecStoreLog.readingEmbeddings(parsed), dir, batchId)
-
-  /** [[appendBatchAuto]] for the chunked layout — the fold is
-    * [[compactChunked]] so the retention axis survives retraining. */
-  def appendBatchChunkedAuto(embeddings: DataFrame, dir: String, batchId: Long,
-      maxRatio: Double = MaxProbeRatio): Boolean = {
-    val s = embeddings.sparkSession
-    appendBatchChunked(embeddings, dir, batchId)
-    val fold = shouldCompact(s, dir, maxRatio)
-    if (fold) compactChunked(s, dir)
-    fold
-  }
-
-  /** [[landWireEpoch]] for the chunked layout (crawl day = the reading's
-    * own date — the [[VecStoreLog.landWireEpochChunked]] twin). */
-  def landWireEpochChunked(parsed: DataFrame, dir: String, batchId: Long): Long =
-    VecStoreLog.landWireEpochChunked(parsed, dir, batchId)
-
-  /** [[landWireEpochChunked]] through THIS store's auto-cadence landing —
-    * the chunked streaming loop's per-batch hook on the compressed index
-    * (the fold is [[compactChunked]]: retraining, retention axis kept). */
-  def landWireEpochChunkedAuto(parsed: DataFrame, dir: String,
-      batchId: Long): Boolean =
-    appendBatchChunkedAuto(
-      VecStoreLog.readingEmbeddingsCore(parsed, withDate = true), dir, batchId)
-
-  /** [[compactWithStats]] for the chunked layout — (codes rows, coarse k,
-    * wall ms) of one offline CHUNKED retraining fold. */
-  def compactChunkedWithStats(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    compactChunked(spark, dir)
-    val wall = (System.nanoTime() - t0) / 1000000L
-    val f = CubeLog.view(spark, dir).foldedDir.getOrElse(
-      sys.error(s"maintained IVF-PQ store $dir has no generation after compact"))
-    (spark.read.parquet(s"$f/codes").count(),
-      spark.read.parquet(s"$f/cells").count(), wall)
-  }
-
-  /** One offline retraining fold with its cost surfaced: (corpus rows in
-    * the new generation, coarse k, wall ms) — the attribution numbers for
-    * the streaming sweep's note. */
-  def compactWithStats(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    compact(spark, dir)
-    val wall = (System.nanoTime() - t0) / 1000000L
-    val f = CubeLog.view(spark, dir).foldedDir.getOrElse(
-      sys.error(s"maintained IVF-PQ store $dir has no generation after compact"))
-    (spark.read.parquet(s"$f/codes").count(),
-      spark.read.parquet(s"$f/cells").count(), wall)
-  }
-
   /** Encoded rows the store currently answers from (fold codes + live
     * delta epochs, read per root) — the retention receipt's audit number. */
   def storedRows(spark: SparkSession, dir: String): Long = {
@@ -279,6 +224,29 @@ object IvfPqLog {
       .getOrElse(throw new IllegalArgumentException(s"empty IVF-PQ store: $dir"))
   }
 
+  /** Lands a fold's codebook (`cells`, `cells_packed`,
+    * `codebooks_packed`) and its `_ck` sidecar. The sidecar records the
+    * coarse cells Lloyd TRAINED, not the k the fold asked for: a cell
+    * that ends a round empty drops out, so k can exceed the trained count
+    * (duplicate-heavy input, or unlucky seeds on a small corpus), and
+    * probes size their width from the sidecar. */
+  private def landCodebook(spark: SparkSession, dir: String, out: String,
+      cents: DataFrame, cbRow: DataFrame): Unit = {
+    val trained = cents.count()
+    // fail BEFORE the commit marker, never after: an empty codebook
+    // (training bug, empty input) would write _SUCCESS-only codes dirs
+    // and commit an UNREADABLE generation — crash-before-marker leaves
+    // the previous generation serving and the orphan fold swept later
+    require(trained > 0L && cbRow.limit(1).count() == 1L,
+      s"IVF-PQ fold over $dir trained an empty codebook — refusing to " +
+        "commit an unreadable generation (is the input empty?)")
+    writeCk(spark, out, trained.toInt)
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$out/cells")
+    Similarity.centsRow(cents).coalesce(1).write.mode("overwrite")
+      .parquet(s"$out/cells_packed")
+    cbRow.coalesce(1).write.mode("overwrite").parquet(s"$out/codebooks_packed")
+  }
+
   /** Retraining compaction: fold base ∪ delta into a new IVFADC
     * generation under the CubeLog crash-safe ordering. `coarseK` defaults
     * to the √n rule over the post-fold corpus ([[coarseKFor]]); the
@@ -297,18 +265,7 @@ object IvfPqLog {
         .localCheckpoint(eager = true) // the source dirs are swept below
       val k = coarseK.getOrElse(coarseKFor(all.count()))
       val (qe, cents, cbRow, _, codes) = Similarity.ivfPqTrainFramesFrom(all, k)
-      writeCk(spark, out, k)
-      // fail BEFORE the commit marker, never after: an empty codebook
-      // (training bug, empty input) would write _SUCCESS-only codes dirs
-      // and commit an UNREADABLE generation — crash-before-marker leaves
-      // the previous generation serving and the orphan fold swept later
-      require(cents.limit(1).count() == 1L && cbRow.limit(1).count() == 1L,
-        s"IVF-PQ fold over $dir trained an empty codebook — refusing to " +
-          "commit an unreadable generation (is the input empty?)")
-      cents.coalesce(1).write.mode("overwrite").parquet(s"$out/cells")
-      Similarity.centsRow(cents).coalesce(1).write.mode("overwrite")
-        .parquet(s"$out/cells_packed")
-      cbRow.coalesce(1).write.mode("overwrite").parquet(s"$out/codebooks_packed")
+      landCodebook(spark, dir, out, cents, cbRow)
       val n = spark.sessionState.conf.numShufflePartitions
       codes.repartition(n, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
@@ -343,14 +300,7 @@ object IvfPqLog {
       val k = coarseK.getOrElse(coarseKFor(all.count()))
       val (qe, cents, cbRow, _, codes) = Similarity.ivfPqTrainFramesFrom(
         all.select(col("vec_id"), col("label"), col("qv"), col("norm2")), k)
-      writeCk(spark, out, k)
-      require(cents.limit(1).count() == 1L && cbRow.limit(1).count() == 1L,
-        s"IVF-PQ fold over $dir trained an empty codebook — refusing to " +
-          "commit an unreadable generation (is the input empty?)")
-      cents.coalesce(1).write.mode("overwrite").parquet(s"$out/cells")
-      Similarity.centsRow(cents).coalesce(1).write.mode("overwrite")
-        .parquet(s"$out/cells_packed")
-      cbRow.coalesce(1).write.mode("overwrite").parquet(s"$out/codebooks_packed")
+      landCodebook(spark, dir, out, cents, cbRow)
       val n = spark.sessionState.conf.numShufflePartitions
       codes.join(dates, Seq("vec_id"))
         .repartition(n, col("cell"), col("chunk_date"))

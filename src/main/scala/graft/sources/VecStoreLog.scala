@@ -248,18 +248,6 @@ object VecStoreLog {
   def landWireEpoch(parsed: DataFrame, dir: String, batchId: Long): Long =
     appendBatch(readingEmbeddings(parsed), dir, batchId)
 
-  /** One offline fold with its cost surfaced: returns (corpus rows in the
-    * new generation, trained k, wall ms) — the numbers the streaming
-    * sweep's note attributes the compaction with. */
-  def compactWithStats(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    compact(spark, dir)
-    val wall = (System.nanoTime() - t0) / 1000000L
-    val f = CubeLog.view(spark, dir).foldedDir.getOrElse(
-      sys.error(s"maintained vector store $dir has no generation after compact"))
-    (spark.read.parquet(f).count(), VecStore.centroids(spark, f).count(), wall)
-  }
-
   /** Every vector the store currently answers from: committed generation
     * + live delta epochs. */
   def vectors(spark: SparkSession, dir: String): DataFrame = {
@@ -373,29 +361,6 @@ object VecStoreLog {
   def landWireEpochChunked(parsed: DataFrame, dir: String, batchId: Long): Long =
     appendBatchChunked(readingEmbeddingsCore(parsed, withDate = true),
       dir, batchId)
-
-  /** [[landWireEpochChunked]] through the AUTO-CADENCE landing
-    * ([[appendBatchChunkedAuto]]) — the chunked streaming loop's
-    * per-batch hook: the derived fold trigger rides the landing itself,
-    * so the live delta stays bounded by code under a wire stream exactly
-    * as under the batch drive. Returns true when this landing's fold
-    * fired. */
-  def landWireEpochChunkedAuto(parsed: DataFrame, dir: String,
-      batchId: Long): Boolean =
-    appendBatchChunkedAuto(readingEmbeddingsCore(parsed, withDate = true),
-      dir, batchId)
-
-  /** [[compactWithStats]] for the chunked layout — the offline
-    * maintenance fold the streaming sweep runs BESIDE chunked landings,
-    * with the same (rows, k, wall ms) attribution triple. */
-  def compactChunkedWithStats(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    compactChunked(spark, dir)
-    val wall = (System.nanoTime() - t0) / 1000000L
-    val f = CubeLog.view(spark, dir).foldedDir.getOrElse(
-      sys.error(s"maintained vector store $dir has no generation after compact"))
-    (spark.read.parquet(f).count(), VecStore.centroids(spark, f).count(), wall)
-  }
 
   /** Retention: drop every chunk strictly BEFORE `cutoff` (ISO date) from
     * EVERY root on disk — live epochs (`chunk_date=` at the root), the

@@ -28,59 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object DocStream {
 
-  /** Document-bearing stride of the meter wire — matches
-    * [[graft.sources.VecStoreLog.WireEmbeddingStride]]: 1 reading in 16
-    * carries an attached document, the realistic LLM-pipeline ratio where
-    * the corpus stream is a side channel of a much faster event stream. */
-  val WireDocStride = 16
-
-  /** Token count and vocabulary of the derived wire document. The vocab
-    * must SATISFY every Gopher rule the curation gate applies, or the
-    * sweep's corpus rows silently measure an empty landing path: 40
-    * alphabetic words of length 3–6 (mean word length ≈ 4.5 ∈ [3, 10]),
-    * two stopwords (uniform draws ⇒ stop_frac ≈ 0.05 ≥ 0.02), and —
-    * the rule the original 12-word vocab FAILED, discovered r15 when the
-    * maint row's rebucket found a store no batch had ever landed into —
-    * enough distinct words that 64 uniform draws give distinct_frac ≈
-    * 0.5 ≥ the 0.3 repetition floor (12 words capped it at 12/64 =
-    * 0.19, so every wire doc was policy-rejected and the corpus rows
-    * streamed zero documents). */
-  private val WireDocTokens = 64
-  private val WireDocVocab = Seq(
-    "the", "a", "data", "join", "scan", "grid", "meter", "stream",
-    "batch", "window", "merge", "index", "probe", "shard", "fold",
-    "epoch", "table", "query", "plan", "cache", "store", "wire",
-    "crawl", "token", "label", "graph", "node", "edge", "range",
-    "delta", "bound", "hash", "cell", "code", "rank", "score",
-    "text", "word", "page", "site")
-
-  /** The document side channel of the parsed meter wire, derived
-    * DETERMINISTICALLY so the streaming corpus loop can land real epochs
-    * without a crawler in the container ([[graft.sources.VecStoreLog
-    * .readingEmbeddings]]'s convention on the TEXT surface): every
-    * [[WireDocStride]]-th meter's readings are document-bearing; doc_id
-    * composes (meter, second) injectively, event_time is the reading's
-    * own timestamp (so the chunked loop's crawl day is the CONTENT's
-    * day), and the text is a [[WireDocTokens]]-token xxhash64 projection
-    * over a fixed vocabulary — pure codegen'd built-ins, no UDF, so the
-    * derivation never bounds the landing rate. A real deployment swaps
-    * this projection for its crawler's columns; everything downstream
-    * (curation, bronze, posting, dedup, retention) only sees the
-    * (doc_id, event_time, lang, source, text) shape. */
-  def readingDocs(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(pmod(col("meter_id"), lit(WireDocStride)) === 0)
-      .select(col("meter_id").cast("long").as("m"),
-        unix_timestamp(col("reading_timestamp")).as("ts_s"),
-        col("reading_timestamp").as("event_time"))
-      .select(
-        (col("m") * lit(10000000000L) + col("ts_s")).as("doc_id"),
-        col("event_time"), lit("en").as("lang"), lit("wire").as("source"),
-        expr(s"""array_join(transform(sequence(0, ${WireDocTokens - 1}),
-                |  i -> element_at(array(${WireDocVocab.map(w => s"'$w'").mkString(", ")}),
-                |    CAST(pmod(xxhash64(m, ts_s, i), ${WireDocVocab.size}) AS INT) + 1)),
-                |  ' ')""".stripMargin).as("text"))
-
   /** Curate a document stream: hash → watermark → in-horizon exact dedup
     * → policy gate. Works identically on a batch frame (minus the
     * watermark/dedup state semantics), which the spec exploits. */

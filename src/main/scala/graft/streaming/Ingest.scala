@@ -1,13 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming re-expression of the reference's ingest path
-  * (SURVEY.md §2.8, §3.1): Kafka/JSON wire → parse + validate → idempotent
-  * partitioned bronze sink with exactly-once semantics.
+  * (SURVEY.md §2.8, §3.1): JSON or Avro wire → parse + validate →
+  * idempotent partitioned bronze sink with exactly-once semantics. The
+  * wire arrives through checkpointed memory or file sources; there is no
+  * Kafka endpoint, because no Kafka connector is on the classpath.
   *
   * Reference behaviors mapped:
   *  - S4 JSON decode + required-field validation with drop counting
@@ -35,29 +37,6 @@ object Ingest {
     StructField("reading_consumption_milliwatts", LongType),
     StructField("reading_production_milliwatts", LongType),
     StructField("status", StringType)))
-
-  /** PRODUCTION DEFAULT wire format (r14): the BINARY (Avro) wire.
-    * Decided from the sweep, not taste (STREAMING_LATENCY.md): at the
-    * reference's 160 K rec/s anchor the JSON wire is parse-bound at
-    * proc/input ~0.93 while the binary twin sustains ~1.01 on identical
-    * data and validation, and at 640 K the per-core decode gap is ~6×
-    * (avro-core ~86 K rows/s/core vs from_json ~13-17 K). The reference's
-    * snappy-compressed JSON (producer/meter_simulator.py:244-250) stays
-    * fully supported as the COMPAT wire for interop with its producers.
-    * Override per deployment with SPARK_GRAFT_WIRE=json|avro; the sweep's
-    * `ingest-default-wire` row exercises whatever this resolves to. */
-  def DefaultWireFormat: String = sys.env.getOrElse("SPARK_GRAFT_WIRE", "avro")
-
-  /** Decode + validate through the CONFIGURED wire — the one dispatch
-    * point the gold loop, the sweep, and a deployment share, so switching
-    * the wire is a config change, not a code edit. */
-  def parseAndValidateWire(raw: DataFrame,
-      format: String = DefaultWireFormat): DataFrame = format match {
-    case "avro" => parseAndValidateAvro(raw)
-    case "json" => parseAndValidate(raw)
-    case other => throw new IllegalArgumentException(
-      s"unknown wire format '$other' — supported: json (reference compat), avro (default)")
-  }
 
   /** Parse the `value` JSON column and apply the consumer's validation:
     * required meter_id + reading_timestamp; malformed JSON ⇒ null struct ⇒
@@ -330,35 +309,6 @@ object Ingest {
       .partitionBy("batch_id")
       .parquet(quarantineDir)
   }
-
-  // ---- Kafka wiring (S1/S2) — configuration only; this container has no
-  // broker, so tests drive the same pipeline through memory/file sources.
-
-  /** Kafka source configured like the reference consumer
-    * (consumer/meter_consumer.py:185-196): earliest offsets (offset
-    * tracking is replaced by checkpointing), bounded per-trigger reads as
-    * the backpressure control (ST9, the BufferError-retry analogue). */
-  def kafkaSource(
-      spark: SparkSession, servers: String, topic: String,
-      maxOffsetsPerTrigger: Long = 100000): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
-      .load()
-
-  /** Kafka sink configured like the reference producer
-    * (producer/meter_simulator.py:255-313): key = meter_id for per-meter
-    * partition ordering (ST5), snappy batching is broker/client config.
-    * Input must carry `key`/`value` columns ([[RateSimulator.toWire]]). */
-  def kafkaSink(
-      wire: DataFrame, servers: String, topic: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    wire.writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
 
   // ---- ST8: stream-side cumulative→delta with per-meter state ----
 

@@ -4,14 +4,11 @@ import graft.meter.MeterGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming reading generator — the producer's two emission modes
+/** Streaming reading generator — the producer's burst emission mode
   * (SURVEY.md §2.8 ST11, `producer/meter_simulator.py:351-391`,
-  * `.env:20-22`) on Spark's `rate` source:
-  *
-  *  - continuous mode: `rowsPerSecond = meterCount / intervalSeconds`, each
-  *    rate tick mapped to one meter's reading, spread evenly in time
-  *  - burst mode: `rate-micro-batch` emits `meterCount` rows per batch —
-  *    all meters at once per interval, like the producer's batch loop
+  * `.env:20-22`) on Spark's `rate-micro-batch` source: `meterCount` rows
+  * per batch, all meters at once per interval, like the producer's batch
+  * loop.
   *
   * The value model is IDENTICAL to the batch generator ([[MeterGen]]) — the
   * same deterministic hash-uniform columns keyed by (meter, interval), so a
@@ -55,21 +52,6 @@ object RateSimulator {
           .when(col("us") * 100 < 99.5, "E")
           .otherwise("R").as("status"))
 
-  /** Continuous mode: one meter-reading per rate tick, `meterCount /
-    * intervalSeconds` rows per second (producer/meter_simulator.py:364-371). */
-  def continuous(
-      spark: SparkSession, meterCount: Long, intervalSeconds: Int,
-      nIntervals: Long): DataFrame = {
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", math.max(1L, meterCount / intervalSeconds))
-      .load()
-    readingColumns(
-      rate.select(
-        (col("value") % meterCount + 1).as("meter_id"),
-        (col("value") / meterCount).cast("long").as("i")),
-      nIntervals)
-  }
-
   /** Burst mode: every micro-batch carries ALL meters for one interval
     * (producer/meter_simulator.py:351-353). */
   def burst(spark: SparkSession, meterCount: Long, nIntervals: Long): DataFrame = {
@@ -96,15 +78,4 @@ object RateSimulator {
         col("consumption_inc_mwh").as("reading_consumption_milliwatts"),
         col("production_inc_mwh").as("reading_production_milliwatts"),
         col("status"))).as("value"))
-
-  /** Binary twin of [[toWire]]: the same column mapping framed by
-    * [[Ingest.toAvroWire]]'s per-partition avro-core encoder — for
-    * measuring the JSON-vs-binary wire-decode cost on identical data. */
-  def toAvroWire(readings: DataFrame): DataFrame =
-    Ingest.toAvroWire(readings.select(
-      col("meter_id"),
-      col("reading_timestamp"),
-      col("consumption_inc_mwh").as("reading_consumption_milliwatts"),
-      col("production_inc_mwh").as("reading_production_milliwatts"),
-      col("status")))
 }

@@ -11,11 +11,8 @@ import org.apache.spark.sql.expressions.Window
 class TopKPerKeySpec extends SparkSpec {
 
   private def registered[T](f: => T): T = {
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    try f
-    finally spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKPerKeyStrategy)
+    TopKPerKeyStrategy.setup(spark)
+    f
   }
 
   test("top-3 events per user equals the window formulation") {
@@ -129,5 +126,11 @@ class TopKPerKeySpec extends SparkSpec {
       val all = TopKPerKey(ev, Seq("user_id"), Seq(("event_id", false)), 1000000)
       assert(all.count() == ev.count())
     }
+  }
+
+  test("setup registers the strategy once, however often it is called") {
+    TopKPerKeyStrategy.setup(spark)
+    TopKPerKeyStrategy.setup(spark)
+    assert(spark.experimental.extraStrategies.count(_ == TopKPerKeyStrategy) === 1)
   }
 }

@@ -119,7 +119,7 @@ class IvfPqLogSpec extends SparkSpec {
   }
 
   test("sparse wire-composed ids: fold trains full codebooks and the store answers (the pq seeding regression)") {
-    // the streaming sweep's id space: vec_id = meter_id·10¹⁰ + seconds —
+    // the streaming wire's id space: vec_id = meter_id·10¹⁰ + seconds —
     // nothing below PqK=32, so the old `vec_id < PqK` sub-codebook
     // seeding trained ZERO centroids, every pqAssign join emptied, and
     // the fold committed a generation with _SUCCESS-only codes dirs (an
@@ -262,5 +262,24 @@ class IvfPqLogSpec extends SparkSpec {
     val findings = StoreCheck.checkIvfPqLog(spark, dir)
     assert(findings.exists(f => f.severity == "error" && f.check == "coarse-k-mismatch"),
       findings.mkString("; "))
+  }
+
+  test("the _ck sidecar records the coarse cells the fold trained, not the k it asked for") {
+    // 40 vectors with only 3 distinct embeddings: the 8 Lloyd seeds
+    // collapse onto 3 points, ties go to the smallest centroid id, and
+    // the other 5 cells end the first round empty and drop out
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_ck_").toString + "/idx"
+    val emb = (0 until 40).map { i =>
+      val c = i % 3
+      (i.toLong, c, Array.tabulate(64)(j => (((c * 7 + j * 13) % 11) - 5) / 5.0f))
+    }.toDF("vec_id", "label", "embedding")
+    IvfPqLog.appendBatch(emb, dir, 0L)
+    IvfPqLog.compact(spark, dir, coarseK = Some(8))
+    val gen = CubeLog.view(spark, dir).foldedDir.get
+    val trained = spark.read.parquet(s"$gen/cells").count()
+    assert(trained < 8L, s"the fixture must make Lloyd drop cells (trained $trained)")
+    assert(IvfPqLog.storedCoarseK(spark, gen).toLong === trained)
+    val findings = StoreCheck.checkIvfPqLog(spark, dir)
+    assert(!findings.exists(_.check == "coarse-k-mismatch"), findings.mkString("; "))
   }
 }

@@ -92,10 +92,10 @@ class VecStoreSpec extends SparkSpec {
     // The shipped registered query fixes k=16 (its DuckDB oracle trains
     // the identical chain); a real build derives k from corpus size. The
     // √n rule is measured, not assumed: at sf0.1 (n=2000 → k=45, probe
-    // 11) recall@5 is 0.625 at 24.4% probed, and one decade up (ScaleGen
-    // sf1, n=20000 → k=141, probe 35) it RISES to 0.727 at 24.8% — while
-    // k frozen at 16 degrades to 0.547 at the same budget (SCALING.md r9
-    // rows, graft.sources.VecStoreRecall). This test pins the sf0.1
+    // 11) recall@5 is 0.625 at 24.4% probed, and one decade up (a
+    // synthetic sf1, n=20000 → k=141, probe 35) it RISES to 0.727 at
+    // 24.8% — while k frozen at 16 degrades to 0.547 at the same budget
+    // (SCALING.md r9 rows, a frozen record). This test pins the sf0.1
     // point end-to-end through build(cellKFor)/probeTopK(probeCellsFor).
     val sf01 = "/root/testdata/sf0.1"
     val emb = spark.read.parquet(s"$sf01/embeddings.parquet")

@@ -7,8 +7,8 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The maintained ANN index driven from the streaming gold loop
-  * ([[VecStoreLog.landWireEpoch]] — the same foreachBatch hook the
-  * StreamLatencyReport `ingest+vec-index` row measures). Contracts:
+  * ([[VecStoreLog.landWireEpoch]], the gold loop's foreachBatch hook).
+  * Contracts:
   *
   *  1. stream-built ≡ batch-built: any micro-batch slicing of the wire,
   *     WITH a mid-stream compaction interleaved between landings, folds
@@ -53,7 +53,7 @@ class VecStreamSpec extends SparkSpec {
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         landed.addAndGet(VecStoreLog.landWireEpoch(b, streamDir, id))
         // the offline compactor interleaves with the landings: fold after
-        // the second epoch, exactly the StreamLatencyReport mid-run shape
+        // the second epoch, a fold beside live landings
         if (id == 1L) VecStoreLog.compact(spark, streamDir)
         ()
       }

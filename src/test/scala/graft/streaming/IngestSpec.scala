@@ -30,9 +30,7 @@ class IngestSpec extends SparkSpec {
     assert(out.filter(col("meter_id") === 2).head().getAs[Long]("reading_production_milliwatts") == 50L)
   }
 
-  test("wire dispatcher: default resolves to the binary wire; both formats decode identical rows; unknown format fails loudly") {
-    assert(Ingest.DefaultWireFormat === "avro",
-      "the shipped default is the binary wire (override via SPARK_GRAFT_WIRE)")
+  test("JSON and Avro wires decode to identical rows") {
     val readings = Seq(
       (1, "2026-01-01T00:00:00+00:00", 100L, Some(50L), "VALID"),
       (2, "2026-01-01T00:15:00+00:00", 200L, None, "VALID"))
@@ -44,14 +42,9 @@ class IngestSpec extends SparkSpec {
       .select($"meter_id", $"reading_timestamp".cast("long"),
         $"reading_consumption_milliwatts", $"reading_production_milliwatts", $"status")
       .as[(Int, Long, Long, Option[Long], String)].collect().toSet
-    val viaJson = rows(Ingest.parseAndValidateWire(jsonWire, "json"))
-    val viaAvro = rows(Ingest.parseAndValidateWire(avroWire, "avro"))
-    val viaDefault = rows(Ingest.parseAndValidateWire(avroWire))
-    assert(viaJson === viaAvro && viaAvro === viaDefault && viaJson.size === 2)
-    val ex = intercept[IllegalArgumentException] {
-      Ingest.parseAndValidateWire(jsonWire, "protobuf")
-    }
-    assert(ex.getMessage.contains("unknown wire format"))
+    val viaJson = rows(Ingest.parseAndValidate(jsonWire))
+    val viaAvro = rows(Ingest.parseAndValidateAvro(avroWire))
+    assert(viaJson === viaAvro && viaJson.size === 2)
   }
 
   test("idempotent sink: duplicate delivery and batch replay write no extra rows (S5/ST4)") {
