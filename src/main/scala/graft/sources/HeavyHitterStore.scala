@@ -308,17 +308,23 @@ object HeavyHitterStore {
       .groupBy(to_date(col("ts")).as("day"), col("user_id"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("user_id")).agg(sum(col("n")).as("exact_n"))
-    val top10 = broadcast(tot
-      .orderBy(col("exact_n").desc, col("user_id")).limit(10))
-    // estimate + slack FROM THE STORE against the 10-row broadcast
-    val est = top10.join(kept, Seq("user_id"), "left")
-      .groupBy(col("user_id")).agg(coalesce(sum(col("cnt")), lit(0L)).as("est_n"))
-    val slack = top10.select(col("user_id")).crossJoin(broadcast(thr))
+    val top10 = tot.orderBy(col("exact_n").desc, col("user_id")).limit(10)
+    // estimate + slack FROM THE STORE against the 10-row broadcast of the
+    // top-10 ids. Every broadcast sits on a side its join can build (the
+    // right of a semi or left outer join, either side of an inner one):
+    // the preserved left side of an outer join cannot be built, and Spark
+    // drops a hint placed there.
+    val ids = broadcast(top10.select(col("user_id")))
+    val est = kept.join(ids, Seq("user_id"), "left_semi")
+      .groupBy(col("user_id")).agg(sum(col("cnt")).as("est_n"))
+    val slack = ids.crossJoin(broadcast(thr))
       .join(kept.select(col("day"), col("user_id"), lit(1).as("present")),
         Seq("day", "user_id"), "left")
       .groupBy(col("user_id"))
       .agg(sum(when(col("present").isNull, col("t")).otherwise(0L)).as("slack_n"))
-    top10.join(est, "user_id").join(slack, "user_id")
+    top10.join(broadcast(est), Seq("user_id"), "left")
+      .withColumn("est_n", coalesce(col("est_n"), lit(0L)))
+      .join(broadcast(slack), "user_id")
       .select(col("user_id"), col("exact_n"), col("est_n"), col("slack_n"),
         (col("est_n") <= col("exact_n")
           && col("exact_n") <= col("est_n") + col("slack_n")).as("within_bound"))

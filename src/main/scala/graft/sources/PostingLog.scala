@@ -1136,14 +1136,6 @@ object PostingLog {
       .select(col("query_id"), col("doc_id"), col("bm25_rank"))
   }
 
-  def bm25TopKMulti(spark: SparkSession, dir: String,
-      querySet: Seq[(Long, Seq[String])], k: Int = 10): DataFrame = {
-    import spark.implicits._
-    val qterms = querySet.flatMap { case (q, ts) => ts.map(q -> _) }
-      .toDF("query_id", "term")
-    bm25TopKTerms(spark, dir, qterms, querySet.flatMap(_._2).distinct, k)
-  }
-
   /** Hybrid retrieval for a QUERY-SET FRAME — the serving-shape API (r14,
     * generalizing the fixed three-query form): `queries` is a DataFrame
     * (query_id, terms ARRAY<STRING>, embedding ARRAY<FLOAT>) and the

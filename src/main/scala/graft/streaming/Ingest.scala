@@ -149,6 +149,16 @@ object Ingest {
     observed.filter(col("meter_id").isNotNull && col("reading_timestamp").isNotNull)
   }
 
+  /** What one [[idempotentAppend]] did to bronze, as ISO date strings:
+    *
+    *  - `touched`: the batch's distinct `reading_date`s, whether or not
+    *    any of its rows were new (empty for an empty batch);
+    *  - `landed`: the touched dates that received at least one new row —
+    *    empty for an exact replay;
+    *  - `before`: bronze's `reading_date=` partitions listed before the
+    *    write, so bronze afterwards holds exactly `before ∪ landed`. */
+  final case class Landing(touched: Seq[String], landed: Seq[String], before: Seq[String])
+
   /** Idempotent append of one (micro-)batch into the date-partitioned
     * bronze table: in-batch dedup on the composite key, then a left-anti
     * join against only the already-present keys that could possibly
@@ -173,63 +183,100 @@ object Ingest {
     *     exactly its own original landing; a backfill reads only the
     *     region it overlaps. Cost is O(batch), not O(day-so-far).
     *
-    * The batch is persisted for its three consumers (range bounds,
-    * touched-dates prune, the landing write) — one parse instead of
-    * three re-parses of the wire format.
+    * The parsed batch is persisted for its two consumers (range bounds
+    * and touched dates, the landing write) — one parse instead of two
+    * re-parses of the wire format. The bounds are taken BEFORE the
+    * in-batch dedup (min, max and the date set are the same with or
+    * without duplicates), so the bounds job has no shuffle; the dedup
+    * runs inside the write's plan.
     *
-    * Returns the landed batch's touched dates (ISO strings, empty for an
-    * empty batch) — already computed here for the anti-join prune, and
-    * exactly what a downstream partition-scoped refresh needs; returning
-    * them saves the caller a whole extra pass over the batch. Bounded by
-    * |distinct DAYS in the batch| by construction. */
-  def idempotentAppend(batch: DataFrame, bronzeDir: String): Seq[String] = {
+    * Returns the [[Landing]]: the touched dates, the landed dates and
+    * the pre-write partition listing. `landed` is counted by the write
+    * itself: each row that reaches the writer adds its day to an
+    * accumulator, whose task updates the scheduler merges on the driver
+    * before the write's job returns (no listener bus, no extra job, no
+    * listing of the touched partitions, so its cost does not grow with
+    * the files a day has already landed). A downstream partition-scoped
+    * refresh uses it to skip an exact replay entirely (see
+    * [[StreamingMarts.startIngestWithMartRefresh]]). `beforeWrite` runs
+    * with the touched dates after the bounds are known and before the
+    * first bronze file is written (never for an empty batch) — the place
+    * for a crash-intent record that must be durable before bronze
+    * changes. */
+  def idempotentAppend(batch: DataFrame, bronzeDir: String,
+      beforeWrite: Seq[String] => Unit = _ => ()): Landing = {
     val spark = batch.sparkSession
-    val deduped = batch
+    // the first-batch case is an explicit EXISTENCE check, not a
+    // swallowed exception: a transient read failure after bronze exists
+    // must propagate (the batch retries) — treating it as "no bronze yet"
+    // would silently disable dedup for the batch and double-land rows
+    // into every downstream mart. "Exists" means at least one
+    // reading_date= PARTITION directory, not a bare non-empty listing: a
+    // dir holding only a _temporary leftover of a crashed in-flight first
+    // landing (or other non-data entries) would make the parquet read
+    // fail schema inference on every retry — a permanently wedged
+    // stream, worse than either honest outcome
+    val before = bronzeDates(spark, bronzeDir)
+    val parsed = batch
       .withColumn("arrived_at", current_timestamp())
       .withColumn("reading_date", to_date(col("reading_timestamp")))
-      .dropDuplicates("reading_timestamp", "meter_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // one pass over the persisted batch yields the key range AND the
       // touched-dates list (both tiny: 2 timestamps + |days| strings)
-      val bounds = deduped
+      val bounds = parsed
         .agg(min(col("reading_timestamp")), max(col("reading_timestamp")),
           collect_set(col("reading_date").cast("string"))).head()
-      if (bounds.isNullAt(0)) return Nil // empty batch: nothing to land
+      if (bounds.isNullAt(0)) return Landing(Nil, Nil, before) // empty batch
       val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
       val touched = bounds.getSeq[String](2).sorted
       // no isEmpty pre-probe: an anti-join against an empty pruned scan
       // costs nothing extra, while the probe was a whole scheduled job
       // per micro-batch — at a 1 s trigger, per-batch job count IS the
-      // fixed-cost floor the sustainable rate divides by.
-      // The first-batch case is an explicit EXISTENCE check, not a
-      // swallowed exception: a transient read failure after bronze
-      // exists must propagate (the batch retries) — treating it as
-      // "no bronze yet" would silently disable dedup for the batch and
-      // double-land rows into every downstream mart.
-      // "Exists" means at least one reading_date= PARTITION directory,
-      // not a bare non-empty listing: a dir holding only a _temporary
-      // leftover of a crashed in-flight first landing (or other non-data
-      // entries) would make the parquet read fail schema inference on
-      // every retry — a permanently wedged stream, worse than either
-      // honest outcome
-      val bronzePath = new org.apache.hadoop.fs.Path(bronzeDir)
-      val bronzeFs = bronzePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val existing =
-        if (!bronzeFs.exists(bronzePath) ||
-            !bronzeFs.listStatus(bronzePath).exists(st =>
-              st.isDirectory && st.getPath.getName.startsWith("reading_date="))) None
-        else Some(spark.read.parquet(bronzeDir)
+      // fixed-cost floor the sustainable rate divides by
+      val deduped = parsed.dropDuplicates("reading_timestamp", "meter_id")
+      val fresh =
+        if (before.isEmpty) deduped
+        else deduped.join(spark.read.parquet(bronzeDir)
           .filter(col("reading_timestamp").between(lit(lo), lit(hi))
             && col("reading_date").cast("string").isin(touched: _*))
-          .select(col("reading_timestamp"), col("meter_id")))
-      val fresh = existing match {
-        case Some(ex) => deduped.join(ex, Seq("reading_timestamp", "meter_id"), "left_anti")
-        case None => deduped
-      }
-      fresh.write.mode("append").partitionBy("reading_date").parquet(bronzeDir)
-      touched
-    } finally deduped.unpersist()
+          .select(col("reading_timestamp"), col("meter_id")),
+          Seq("reading_timestamp", "meter_id"), "left_anti")
+      // the always-true mark is nondeterministic, so it stays above the
+      // anti-join and sees exactly the rows the writer receives
+      val landedDays = new DaySet
+      spark.sparkContext.register(landedDays)
+      val mark = udf { (day: Int) => landedDays.add(day); true }.asNondeterministic()
+      beforeWrite(touched)
+      fresh.filter(mark(unix_date(col("reading_date"))))
+        .write.mode("append").partitionBy("reading_date").parquet(bronzeDir)
+      val landed = landedDays.value.map(d => java.time.LocalDate.ofEpochDay(d.toLong).toString)
+      Landing(touched, touched.filter(landed), before)
+    } finally parsed.unpersist()
+  }
+
+  /** The distinct epoch days added to it, merged across tasks. */
+  private final class DaySet(private var days: Set[Int] = Set.empty)
+      extends org.apache.spark.util.AccumulatorV2[Int, Set[Int]] {
+    def isZero: Boolean = days.isEmpty
+    def copy(): DaySet = new DaySet(days)
+    def reset(): Unit = days = Set.empty
+    def add(day: Int): Unit = days += day
+    def merge(other: org.apache.spark.util.AccumulatorV2[Int, Set[Int]]): Unit =
+      days ++= other.value
+    def value: Set[Int] = days
+  }
+
+  /** Driver-side listing of bronze's `reading_date=` partition
+    * directories — the landing high-water mark, no data scan. */
+  private[streaming] def bronzeDates(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("reading_date="))
+      .map(_.getPath.getName.stripPrefix("reading_date="))
   }
 
   /** The full streaming ingest: JSON source → validate → idempotent bronze.

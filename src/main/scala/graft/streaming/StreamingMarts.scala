@@ -200,12 +200,24 @@ object StreamingMarts {
     * ([[graft.sources.Store.refreshMartPartitions]]). Staging runs over
     * the full bronze history so cross-day LAG deltas stay exact; the mart
     * aggregation itself only ever scans the touched dates' staging slice.
-    * Batch replay is idempotent end to end: the bronze append writes zero
-    * rows and the partition rebuild recomputes the same content. This is
-    * the streaming twin of `meter_billing_daily_incremental` — the
-    * windowed [[dailyBilling]] keeps closed-window state in the engine;
-    * this variant keeps the MART ITSELF current on disk, the shape a
-    * 100 TB daily-gold pipeline runs continuously. */
+    * This is the streaming twin of `meter_billing_daily_incremental` —
+    * the windowed [[dailyBilling]] keeps closed-window state in the
+    * engine; this variant keeps the MART ITSELF current on disk, the
+    * shape a 100 TB daily-gold pipeline runs continuously.
+    *
+    * Replays pay only for what they land. A micro-batch rebuilds the mart
+    * iff it landed at least one new row or an earlier attempt left a
+    * rebuild unfinished; an exact re-delivery (at-least-once upstream)
+    * writes no bronze row and touches no mart file — the cost of one
+    * `ON CONFLICT DO NOTHING` insert attempt in the reference. "Left
+    * unfinished" is recorded by a crash-intent marker,
+    * `<checkpointDir>/_mart_pending`: before the batch's first bronze
+    * file is written it durably holds the batch's touched dates plus any
+    * dates a surviving marker still holds (temp file + rename), and it
+    * is deleted only after the mart write commits. A crash between
+    * landing and rebuild is therefore healed by the re-run of that batch:
+    * the re-run lands nothing but finds the marker, and rebuilds the
+    * batch's dates ∪ the marker's dates by the usual rebuild-set rule. */
   def startIngestWithMartRefresh(
       jsonLines: DataFrame, meters: DataFrame, customers: DataFrame,
       tariff: DataFrame, bronzeDir: String, martDir: String,
@@ -214,53 +226,90 @@ object StreamingMarts {
       // per-batch (landMs, rebuildMs) phase attribution hook — the
       // latency report uses it to tell which half of the gold loop bounds
       // the sustainable rate (bronze landing vs mart rebuild)
-      phaseSink: (Long, Long) => Unit = (_, _) => ()): StreamingQuery =
+      phaseSink: (Long, Long) => Unit = (_, _) => ()): StreamingQuery = {
+    val marker = new org.apache.hadoop.fs.Path(checkpointDir, "_mart_pending")
     Ingest.parseAndValidate(jsonLines).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, _: Long) =>
-        val t0 = System.nanoTime()
-        // the high-water mark BEFORE landing (one driver-side directory
-        // listing, no scan) decides whether this batch is in-order or
-        // carries late data — the normal path pays nothing for the late
-        // machinery
-        val maxDateBefore = bronzeDatesOnDisk(df.sparkSession, bronzeDir)
-          .reduceOption((a: String, b: String) => if (a >= b) a else b)
-        // the landing persists the batch internally (one wire parse) and
-        // returns the touched dates it already computed — empty for an
-        // empty micro-batch (sources ahead of their data emit one: the
-        // rate source's batch 0, a file source on an empty dir), in
-        // which case nothing landed, no partition is stale, and reading
-        // the not-yet-created bronze dir would die on schema inference
-        val touchedDates = Ingest.idempotentAppend(df, bronzeDir)
-        val t1 = System.nanoTime()
-        if (touchedDates.nonEmpty) {
         val spark = df.sparkSession
-        // REBUILD SET: in-order batches (every touched date ≥ the
-        // pre-landing high-water mark) stale exactly their touched
-        // dates — any successor whose LAG delta they change is either in
-        // the batch itself or doesn't exist yet. A batch carrying LATE
-        // dates additionally stales each late row's SUCCESSOR day,
-        // derived from the data (lead over the batch meters' bronze
-        // tail, MeterPipeline.invalidatedDates) — the same closure the
-        // batch repair path uses, so replay/backfill through the stream
-        // heals day+N partitions a constant touched-only (or touched+1)
-        // rule would leave stale.
-        val rebuildDates =
-          if (maxDateBefore.forall(touchedDates.min >= _)) touchedDates
-          else (touchedDates ++ graft.meter.MeterPipeline
-            .invalidatedDates(spark, spark.read.parquet(bronzeDir), df)
-            .map(_.toString)).distinct.sorted
-        val sliceInput = boundedStagingSlice(spark, bronzeDir, rebuildDates)
-        graft.sources.Store.refreshMartPartitions(
-          graft.meter.Marts.factCustomerBillingDaily(
-            sliceInput, meters, customers, tariff),
-          martDir, "billing_date")
+        val conf = spark.sparkContext.hadoopConfiguration
+        val t0 = System.nanoTime()
+        // dates an earlier attempt of this query landed without finishing
+        // their rebuild (empty on the normal path)
+        val pending = readMarker(marker, conf)
+        // the landing persists the batch internally (one wire parse),
+        // lists bronze's partitions once before writing (the high-water
+        // mark below) and reports which dates actually received rows. An
+        // empty micro-batch (sources ahead of their data emit one: the
+        // rate source's batch 0, a file source on an empty dir) lands
+        // nothing, so no partition is stale — and reading the
+        // not-yet-created bronze dir would die on schema inference
+        val landing = Ingest.idempotentAppend(df, bronzeDir,
+          touched => writeMarker(marker, conf, (touched ++ pending).distinct.sorted))
+        val t1 = System.nanoTime()
+        if (landing.landed.nonEmpty || pending.nonEmpty) {
+          val dates = (landing.touched ++ pending).distinct.sorted
+          // REBUILD SET: in-order batches (every date ≥ the pre-landing
+          // high-water mark) stale exactly their dates — any successor
+          // whose LAG delta they change is either in the batch itself or
+          // doesn't exist yet. A batch carrying LATE dates additionally
+          // stales each late row's SUCCESSOR day, derived from the data
+          // (lead over the batch meters' bronze tail,
+          // MeterPipeline.invalidatedDates) — the same closure the batch
+          // repair path uses, so replay/backfill through the stream heals
+          // day+N partitions a constant touched-only (or touched+1) rule
+          // would leave stale.
+          val maxDateBefore =
+            landing.before.reduceOption((a: String, b: String) => if (a >= b) a else b)
+          val rebuildDates =
+            if (maxDateBefore.forall(dates.min >= _)) dates
+            else (dates ++ graft.meter.MeterPipeline
+              .invalidatedDates(spark, spark.read.parquet(bronzeDir), df)
+              .map(_.toString)).distinct.sorted
+          val sliceInput = boundedStagingSlice(spark, bronzeDir, rebuildDates,
+            (landing.before ++ landing.landed).distinct)
+          graft.sources.Store.refreshMartPartitions(
+            graft.meter.Marts.factCustomerBillingDaily(
+              sliceInput, meters, customers, tariff),
+            martDir, "billing_date")
         }
+        marker.getFileSystem(conf).delete(marker, false)
         phaseSink((t1 - t0) / 1000000L, (System.nanoTime() - t1) / 1000000L)
       }
       .start()
+  }
+
+  /** The dates a surviving crash-intent marker holds, one per line
+    * (empty when there is no marker). */
+  private def readMarker(marker: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+    val fs = marker.getFileSystem(conf)
+    if (!fs.exists(marker)) Nil
+    else {
+      val in = fs.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
+      finally in.close()
+    }
+  }
+
+  /** Atomically replaces the marker: the dates go to a synced temp file
+    * that is then renamed over the marker, so a reader sees the old or
+    * the new date set, never a torn one. */
+  private def writeMarker(marker: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration, dates: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options}
+    val fc = FileContext.getFileContext(marker.toUri, conf)
+    val tmp = new org.apache.hadoop.fs.Path(marker.getParent, s".${marker.getName}.tmp")
+    val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      Options.CreateOpts.createParent())
+    try {
+      out.write(dates.mkString("", "\n", "\n").getBytes("UTF-8"))
+      out.hsync()
+    } finally out.close()
+    fc.rename(tmp, marker, Options.Rename.OVERWRITE)
+  }
 
   /** The rebuild's staging input, read from bronze with GAP-ROBUST
     * partition bounds. Base slice = rebuild dates ∪ each's previous day
@@ -283,7 +332,8 @@ object StreamingMarts {
     * is a per-meter last-seen silver index; at this engine's bronze
     * sizes the two-column pruned scan is cheaper than maintaining one.) */
   private[graft] def boundedStagingSlice(spark: org.apache.spark.sql.SparkSession,
-      bronzeDir: String, rebuildDates: Seq[String]): DataFrame = {
+      bronzeDir: String, rebuildDates: Seq[String],
+      bronzeDates: Seq[String]): DataFrame = {
     import spark.implicits._
     def bronzeAt(dates: Seq[String]) = spark.read.parquet(bronzeDir)
       .filter(col("reading_date").isin(dates: _*))
@@ -296,8 +346,9 @@ object StreamingMarts {
     // the base slice misses must live at a bronze date below the rebuild
     // ceiling and outside the base, so when no such partition exists —
     // the steady state of a ≤ 2-day-deep loop — the slice is provably
-    // complete and the hot path pays nothing
-    val outsideBase = bronzeDatesOnDisk(spark, bronzeDir)
+    // complete and the hot path pays nothing. `bronzeDates` is bronze's
+    // partition list, which the caller already holds
+    val outsideBase = bronzeDates
       .filter(d => d < rebuildDates.max && !base.contains(d))
     val predDates = if (outsideBase.isEmpty) Nil else {
       val present = bronzeAt(base)
@@ -326,17 +377,5 @@ object StreamingMarts {
         col("reading_production_milliwatts"), col("status")))
       .filter(to_date(col("reading_timestamp"))
         .cast("string").isin(rebuildDates: _*))
-  }
-
-  /** Driver-side listing of bronze's `reading_date=` partition
-    * directories — the landing high-water mark, no data scan. */
-  private def bronzeDatesOnDisk(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("reading_date="))
-      .map(_.stripPrefix("reading_date="))
   }
 }

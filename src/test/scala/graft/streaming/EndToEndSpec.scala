@@ -15,6 +15,39 @@ import java.nio.file.Files
 class EndToEndSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The 5-field JSON wire messages of `f`'s readings. */
+  private def wireOf(f: org.apache.spark.sql.DataFrame): Seq[String] = f
+    .select(to_json(struct(
+      col("meter_id"),
+      date_format(col("reading_timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("reading_timestamp"),
+      col("reading_consumption_milliwatts"),
+      col("reading_production_milliwatts"),
+      col("status"))).as("value"))
+    .as[String].collect().toSeq
+
+  /** Every mart parquet file with its mtime. */
+  private def martFiles(mart: String): Map[String, Long] =
+    Files.walk(java.nio.file.Paths.get(mart)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet"))
+      .map(p => p -> Files.getLastModifiedTime(java.nio.file.Paths.get(p)).toMillis).toMap
+
+  /** Asserts the on-disk billing mart equals `Marts.factCustomerBillingDaily`
+    * over the whole of bronze. */
+  private def assertMartExact(bronze: String, mart: String, nMeters: Long): Unit = {
+    val full = Marts.factCustomerBillingDaily(
+      Staging.stgMeterReadings(spark.read.parquet(bronze).select(
+        col("reading_timestamp"), col("meter_id"),
+        col("reading_consumption_milliwatts"),
+        col("reading_production_milliwatts"), col("status"))),
+      MeterGen.metersDim(spark, nMeters), MeterGen.customers(spark, nMeters),
+      MeterGen.tariffRates(spark))
+    val cols = full.columns.sorted.toIndexedSeq
+    val got = spark.read.parquet(mart).selectExpr(cols: _*)
+    assert(got.exceptAll(full.selectExpr(cols: _*)).count() == 0
+      && full.selectExpr(cols: _*).exceptAll(got).count() == 0,
+      "the billing mart must equal a full recompute over bronze")
+  }
+
   test("streamed wire-format ingest reproduces the batch billing mart exactly") {
     val nMeters = 10L
     val nIntervals = 96L
@@ -24,14 +57,7 @@ class EndToEndSpec extends SparkSpec {
     // the producer side: batch-generate the cumulative readings, frame
     // them as the 5-field JSON wire messages, and feed them through a
     // stream in two micro-batches (with a duplicate delivery)
-    val wire = MeterGen.readings(spark, nMeters, nIntervals)
-      .select(to_json(struct(
-        col("meter_id"),
-        date_format(col("reading_timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("reading_timestamp"),
-        col("reading_consumption_milliwatts"),
-        col("reading_production_milliwatts"),
-        col("status"))).as("value"))
-      .as[String].collect().toSeq
+    val wire = wireOf(MeterGen.readings(spark, nMeters, nIntervals))
 
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[String]
@@ -71,14 +97,6 @@ class EndToEndSpec extends SparkSpec {
     val dir = Files.createTempDirectory("e2e_mart").toString
 
     val readings = MeterGen.readings(spark, nMeters, nIntervals)
-    def wireOf(f: org.apache.spark.sql.DataFrame) = f
-      .select(to_json(struct(
-        col("meter_id"),
-        date_format(col("reading_timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("reading_timestamp"),
-        col("reading_consumption_milliwatts"),
-        col("reading_production_milliwatts"),
-        col("status"))).as("value"))
-      .as[String].collect().toSeq
     val day2 = col("reading_timestamp") >= lit("2026-01-02").cast("timestamp")
     val (w1, w2) = (wireOf(readings.filter(!day2)), wireOf(readings.filter(day2)))
 
@@ -130,15 +148,6 @@ class EndToEndSpec extends SparkSpec {
     val nMeters = 10L
     val nIntervals = 384L // 4 days: 2026-01-01 .. 2026-01-04
     val dir = Files.createTempDirectory("e2e_late").toString
-
-    def wireOf(f: org.apache.spark.sql.DataFrame) = f
-      .select(to_json(struct(
-        col("meter_id"),
-        date_format(col("reading_timestamp"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("reading_timestamp"),
-        col("reading_consumption_milliwatts"),
-        col("reading_production_milliwatts"),
-        col("status"))).as("value"))
-      .as[String].collect().toSeq
 
     // outage meters are silent on days 2-3 (those rows never exist);
     // their END of day 1 is replayed LATE, after day 4 already landed —
@@ -211,4 +220,88 @@ class EndToEndSpec extends SparkSpec {
     assert(got.selectExpr(cols: _*).except(full.selectExpr(cols: _*)).count() == 0)
     assert(full.selectExpr(cols: _*).except(got.selectExpr(cols: _*)).count() == 0)
   }
+
+  test("an exact re-delivery lands no row and rewrites no mart file") {
+    val nMeters = 10L
+    val dir = Files.createTempDirectory("e2e_replay").toString
+    val readings = MeterGen.readings(spark, nMeters, 192L)
+    val day2 = col("reading_timestamp") >= lit("2026-01-02").cast("timestamp")
+    val (w1, w2) = (wireOf(readings.filter(!day2)), wireOf(readings.filter(day2)))
+
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val q = StreamingMarts.startIngestWithMartRefresh(
+      mem.toDF(), MeterGen.metersDim(spark, nMeters), MeterGen.customers(spark, nMeters),
+      MeterGen.tariffRates(spark), s"$dir/bronze", s"$dir/mart", s"$dir/ckpt",
+      Trigger.ProcessingTime("1 second"))
+    try {
+      Seq(w1, w2).foreach { b => mem.addData(b); q.processAllAvailable() }
+      val filesBefore = martFiles(s"$dir/mart")
+      val bronzeBefore = spark.read.parquet(s"$dir/bronze").count()
+      assert(filesBefore.nonEmpty && bronzeBefore == nMeters * 192L)
+      Thread.sleep(1100)
+
+      Seq(w1, w2).foreach { b => mem.addData(b); q.processAllAvailable() }
+      assert(spark.read.parquet(s"$dir/bronze").count() == bronzeBefore)
+      assert(martFiles(s"$dir/mart") == filesBefore,
+        "a micro-batch that lands no row must not rebuild any mart partition")
+      assert(!Files.exists(java.nio.file.Paths.get(s"$dir/ckpt/_mart_pending")))
+    } finally q.stop()
+    assertMartExact(s"$dir/bronze", s"$dir/mart", nMeters)
+  }
+
+  test("a crash between landing and rebuild is healed by the batch's re-run through the pending marker") {
+    val nMeters = 10L
+    val dir = Files.createTempDirectory("e2e_crash").toString
+    val (bronze, mart, ckpt) = (s"$dir/bronze", s"$dir/mart", s"$dir/ckpt")
+    val marker = java.nio.file.Paths.get(s"$ckpt/_mart_pending")
+    // one day in two batches, so the crashed batch leaves the day-1 mart
+    // partition present but stale (first half only)
+    val readings = MeterGen.readings(spark, nMeters, 96L)
+    val pm = hour(col("reading_timestamp")) >= 12
+    val (am, rest) = (wireOf(readings.filter(!pm)), wireOf(readings.filter(pm)))
+    // the tariff dim is read only by the mart rebuild: failing it while
+    // armed kills the micro-batch after bronze landed and before the mart
+    // write, which is the on-disk state of a crash at that point
+    val crashGate = udf { () =>
+      if (EndToEndSpec.crashRebuild) throw new IllegalStateException("injected crash")
+      true
+    }.asNondeterministic()
+    val tariff = MeterGen.tariffRates(spark).filter(crashGate())
+
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[String]
+    def start() = StreamingMarts.startIngestWithMartRefresh(
+      mem.toDF(), MeterGen.metersDim(spark, nMeters), MeterGen.customers(spark, nMeters),
+      tariff, bronze, mart, ckpt, Trigger.ProcessingTime("1 second"))
+    val q1 = start()
+    try {
+      mem.addData(am)
+      q1.processAllAvailable()
+      EndToEndSpec.crashRebuild = true
+      mem.addData(rest)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+    } finally {
+      EndToEndSpec.crashRebuild = false
+      q1.stop()
+    }
+    assert(spark.read.parquet(bronze).count() == nMeters * 96L, "bronze holds the crashed batch")
+    assert(Files.readAllLines(marker).toArray.toSeq == Seq("2026-01-01"),
+      "the marker holds the crashed batch's dates")
+    val staleRows = spark.read.parquet(mart).agg(sum(col("total_reading_count"))).head().getLong(0)
+    assert(staleRows == nMeters * 48L, "the mart partition is stale: first batch only")
+
+    // restarting on the checkpoint re-runs the uncommitted batch (the
+    // at-least-once re-delivery): it lands nothing but finds the marker
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(spark.read.parquet(bronze).count() == nMeters * 96L)
+    assert(!Files.exists(marker), "the marker goes once the mart write committed")
+    assertMartExact(bronze, mart, nMeters)
+  }
+}
+
+object EndToEndSpec {
+  /** Makes the crash spec's mart rebuild fail while set. */
+  @volatile var crashRebuild = false
 }

@@ -76,13 +76,33 @@ class IngestSpec extends SparkSpec {
     val bronze = Files.createTempDirectory("bronze_tmp_leftover").toString + "/t"
     Files.createDirectories(java.nio.file.Paths.get(s"$bronze/_temporary/0"))
     val batch = Seq(json(7, "2026-01-02T00:00:00+00:00", 100, None, "V"))
-    val touched =
+    val landing =
       Ingest.idempotentAppend(Ingest.parseAndValidate(batch.toDF("value")), bronze)
-    assert(touched === Seq("2026-01-02"))
+    assert(landing.touched === Seq("2026-01-02"))
     assert(spark.read.parquet(bronze).count() === 1)
     // and the landing is still idempotent afterwards
     Ingest.idempotentAppend(Ingest.parseAndValidate(batch.toDF("value")), bronze)
     assert(spark.read.parquet(bronze).count() === 1)
+  }
+
+  test("landed dates: empty for an exact replay, only the fresh date for a half-replayed two-date batch") {
+    val bronze = Files.createTempDirectory("bronze_landed").toString + "/t"
+    def append(rows: String*) =
+      Ingest.idempotentAppend(Ingest.parseAndValidate(rows.toDF("value")), bronze)
+    val day1 = json(1, "2026-01-01T23:45:00+00:00", 100, None, "V")
+    val day2 = json(1, "2026-01-02T00:00:00+00:00", 150, None, "V")
+    val first = append(day1)
+    assert(first.touched === Seq("2026-01-01") && first.landed === Seq("2026-01-01")
+      && first.before.isEmpty)
+    val replay = append(day1)
+    assert(replay.touched === Seq("2026-01-01") && replay.landed.isEmpty,
+      "an exact replay lands no row, so it must report no landed date")
+    assert(replay.before === Seq("2026-01-01"))
+    val mixed = append(day1, day2)
+    assert(mixed.touched === Seq("2026-01-01", "2026-01-02"))
+    assert(mixed.landed === Seq("2026-01-02"),
+      "only the date that received a new row landed")
+    assert(spark.read.parquet(bronze).count() === 2)
   }
 
   test("streaming ingest end-to-end with checkpoint restart (ST2/ST4/ST10)") {

@@ -33,7 +33,8 @@ class StagingSliceSpec extends SparkSpec {
 
   private def assertSliceExact(full: org.apache.spark.sql.DataFrame,
       dir: String, day: String): Unit = {
-    val got = StreamingMarts.boundedStagingSlice(spark, dir, Seq(day))
+    val got = StreamingMarts.boundedStagingSlice(spark, dir, Seq(day),
+      Ingest.bronzeDates(spark, dir))
     val expect = stagedDay(full, day)
     val cols = expect.columns.sorted.toIndexedSeq
     assert(got.count() === expect.count())
