@@ -399,7 +399,9 @@ object DedupLog {
   def eraseDocs(spark: SparkSession, dir: String, ids: Seq[Long]): Long = {
     if (ids.isEmpty) return 0L
     import spark.implicits._
-    val req = broadcast(ids.toDF("doc_id"))
+    // no hint here: `repairLabels` also unions these ids, and a hint off a
+    // join side is dropped with a warning — each join below broadcasts it
+    val req = ids.toDF("doc_id")
     var removed = 0L
 
     // capture the pre-erase label state (label repair needs it after sig
@@ -409,7 +411,7 @@ object DedupLog {
     // runs (r15: a no-op replay paid two eager checkpoints it never read)
     val old = labelsView(spark, dir).localCheckpoint(eager = true)
     def members = old.join(
-      old.join(req.select(col("doc_id").as("node")), Seq("node"), "left_semi")
+      old.join(broadcast(req.select(col("doc_id").as("node"))), Seq("node"), "left_semi")
         .select(col("label")).distinct(),
       Seq("label"), "left_semi")
 
@@ -419,12 +421,12 @@ object DedupLog {
       val rootDf = spark.read.parquet(root)
       val chunked = rootDf.columns.contains("chunk_date")
       val slim = rootDf.select(col("doc_id"), col("sp"))
-      val affected = slim.join(req, Seq("doc_id"), "left_semi")
+      val affected = slim.join(broadcast(req), Seq("doc_id"), "left_semi")
         .select(col("sp").cast("long")).distinct().as[Long].collect().sorted
       if (affected.nonEmpty) {
         val slice = rootDf.filter(col("sp").isin(affected: _*))
-        removed += slice.join(req, Seq("doc_id"), "left_semi").count()
-        val kept = slice.join(req, Seq("doc_id"), "left_anti")
+        removed += slice.join(broadcast(req), Seq("doc_id"), "left_semi").count()
+        val kept = slice.join(broadcast(req), Seq("doc_id"), "left_anti")
           .localCheckpoint(eager = true)
         val (hfs, _) = fsOf(spark, root)
         if (chunked) {
@@ -463,7 +465,7 @@ object DedupLog {
     // it — so the repair also runs whenever any label source still
     // mentions an erased node, which is exactly the crashed state.
     val erasedStillLabeled = old
-      .join(req.select(col("doc_id").as("node")), Seq("node"), "left_semi")
+      .join(broadcast(req.select(col("doc_id").as("node"))), Seq("node"), "left_semi")
       .limit(1).count() > 0L
     if (removed == 0L && !erasedStillLabeled) return 0L // true no-op replay
 
@@ -483,7 +485,7 @@ object DedupLog {
   private def repairLabels(spark: SparkSession, dir: String,
       req: DataFrame, members: DataFrame): Unit = {
     val survivors = members
-      .join(req.select(col("doc_id").as("node")), Seq("node"), "left_anti")
+      .join(broadcast(req.select(col("doc_id").as("node"))), Seq("node"), "left_anti")
       .select(col("node").as("doc_id"))
     // a fully-erased store has no sig roots left — the repair then drops
     // every touched label (no survivor can pair)
@@ -595,7 +597,7 @@ object DedupLog {
         if (!anyLeft) hfs.delete(sigDir, true)
       }
     if (hasExpired)
-      repairLabels(spark, dir, broadcast(expiredIds), members.get)
+      repairLabels(spark, dir, expiredIds, members.get)
     dropped
   }
 

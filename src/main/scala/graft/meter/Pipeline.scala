@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run" equivalent): dims + readings → date-chunked bronze → lazy staging →
   * both marts, fully refreshed to partitioned parquet. Function composition
   * is the model DAG; Catalyst is the planner dbt lacked — the staging view
-  * stays lazy, so each mart build fuses generator→LAG→aggregate into one
-  * physical plan, and the window's (meter_id, ts) sort feeds both marts'
-  * first-level aggregations.
+  * stays lazy, so each mart build fuses bronze scan→LAG→aggregate into one
+  * physical plan. The two `Store.writeMart` calls are separate actions, so
+  * each runs its own window stage: the (meter_id, ts) sort happens once
+  * per mart, not once for both.
   */
 object Pipeline {
 

@@ -288,9 +288,7 @@ object StoreCheck {
           s"committed generation $f has no _centroids codebook — probes " +
             "cannot rank cells; retrain (compact) or restore the sidecar")
       else {
-        import spark.implicits._
-        val centIds = VecStore.centroids(spark, f)
-          .select(col("c_id").cast("long")).as[Long].collect().toSet
+        val centIds = VecStore.codebook(spark, f).cids.toSet
         val cellDirs = hfs.listStatus(new org.apache.hadoop.fs.Path(f))
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
           .flatMap(st => scala.util.Try(

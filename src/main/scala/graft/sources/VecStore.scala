@@ -4,9 +4,13 @@ import graft.GraftQuery
 import graft.GraftQuery.q
 import graft.llm.Similarity
 import graft.ops.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{CosRankCells, FixedPointDotMulti}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Persisted ANN index layout on TRAINED IVF coarse cells: embeddings are
   * PHYSICALLY partitioned by their nearest Lloyd-trained centroid, with
@@ -95,7 +99,7 @@ object VecStore {
       qe.select(col("vec_id"), col("qv"), col("norm2")),
       cellK, Similarity.CentroidIters)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/_centroids")
-    appendThrough(qe, cents, dir)
+    appendThrough(qe, Similarity.centsRow(cents), dir)
   }
 
   /** [[build]] with the calendar retention axis: `embeddings` carries a
@@ -129,24 +133,92 @@ object VecStore {
     val spark = embeddings.sparkSession
     appendThrough(
       qn(embeddings.select(col("vec_id"), col("label"), col("embedding"))),
-      centroids(spark, dir), dir)
+      codebook(spark, dir).packed(spark), dir)
   }
 
-  private def appendThrough(qe: DataFrame, cents: DataFrame, dir: String): Unit = {
+  private def appendThrough(qe: DataFrame, packed: DataFrame, dir: String): Unit = {
     // pinned partition count: an un-numbered repartition lets AQE coalesce
     // the tiny shuffle to ONE task, which then creates every cell's
     // parquet file serially — writer setup, not data volume, is the cost
     val n = qe.sparkSession.sessionState.conf.numShufflePartitions
-    Similarity.assignRanked(qe, cents)
+    Similarity.assignRankedPacked(qe, packed)
       .select(col("vec_id"), col("label"), col("embedding"),
         expr("ranked[0].id").as("cell"))
       .repartition(n, col("cell"))
       .write.mode("append").partitionBy("cell").parquet(dir)
   }
 
-  /** The k-row trained codebook stored beside the index. */
-  def centroids(spark: SparkSession, dir: String): DataFrame =
-    Tables.cachedParquet(spark, s"$dir/_centroids")
+  /** The trained codebook on the driver — the arrays of the one packed row
+    * [[Similarity.centsRow]] builds: cell ids ascending, each with its
+    * fixed-point vector and squared norm. */
+  private[sources] final case class Codebook(cids: Array[Long],
+      cqvs: Array[Array[Long]], cnorms: Array[Long]) {
+
+    /** Cell ids nearest first for one fixed-point query: ascending
+      * (−cosine, c_id) through the SQL path's own arithmetic. */
+    def rank(qv: Array[Long], norm2: Long): Array[Long] = {
+      val ranked = CosRankCells.compute(
+        FixedPointDotMulti.compute(new GenericArrayData(qv), Codebook.nested(cqvs)),
+        new GenericArrayData(cnorms), new GenericArrayData(cids), norm2)
+      Array.tabulate(ranked.numElements())(i => ranked.getStruct(i, 2).getLong(1))
+    }
+
+    /** The packed one-row frame [[Similarity.assignRankedPacked]] crossJoins. */
+    def packed(spark: SparkSession): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(Row(cids, cqvs, cnorms)),
+      StructType(Seq(StructField("cids", ArrayType(LongType)),
+        StructField("cqvs", ArrayType(ArrayType(LongType))),
+        StructField("cnorms", ArrayType(LongType)))))
+  }
+
+  private[sources] object Codebook {
+    private def nested(vs: Array[Array[Long]]): GenericArrayData =
+      new GenericArrayData(vs.map(v => new GenericArrayData(v): Any))
+
+    /** A fixed-point vector's squared norm ([[qn]]'s `norm2`). */
+    def selfDot(v: Array[Long]): Long =
+      FixedPointDotMulti.compute(new GenericArrayData(v), nested(Array(v))).getLong(0)
+
+    def apply(cents: Seq[(Long, Seq[Long])]): Codebook = {
+      val sorted = cents.sortBy(_._1)
+      val cqvs = sorted.map(_._2.toArray).toArray
+      Codebook(sorted.map(_._1).toArray, cqvs, cqvs.map(selfDot))
+    }
+  }
+
+  /** The k-row trained codebook stored beside the index at
+    * `dir/_centroids`, read on the driver straight off its parquet data
+    * file(s): no Spark job, and no Spark file index (which treats the
+    * `_centroids` leaf itself as hidden and warns on every read). The
+    * reader takes the session's Hadoop conf (a fresh one would re-parse
+    * the Hadoop XML defaults on every probe). */
+  private[sources] def codebook(spark: SparkSession, dir: String): Codebook = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cents = new org.apache.hadoop.fs.Path(s"$dir/_centroids")
+    val files = cents.getFileSystem(conf).listStatus(cents).toSeq.map(_.getPath)
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+    Codebook(files.flatMap { path =>
+      val reader = ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
+          val rows = io.getRecordReader(rg,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+          Iterator.fill(rg.getRowCount.toInt)(rows.read())
+        }.map { g =>
+          // a parquet LIST: one repeated group holding one element each
+          val cqv = g.getGroup("cqv", 0)
+          (g.getLong("c_id", 0), Seq.tabulate(cqv.getFieldRepetitionCount(0))(
+            i => cqv.getGroup(0, i).getLong(0, 0)))
+        }.toVector
+      } finally reader.close()
+    })
+  }
 
   /** Vectors in one cell of the index — a partition-pruned scan (the
     * filter binds to the partition column, so only `dir/cell=K` is
@@ -272,9 +344,7 @@ object VecStore {
     val truth = qn(emb).as("b")
       .join(broadcast(qq.as("a")), col("b.vec_id") =!= col("a.vec_id"))
       .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("vec_id"),
-        (graft.functions.FixedPointDot(col("a.qv"), col("b.qv")).cast("double")
-          / (sqrt(col("a.norm2").cast("double")) * sqrt(col("b.norm2").cast("double"))))
-          .as("cosine"))
+        cosine(col("a.qv"), col("a.norm2"), col("b.qv"), col("b.norm2")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rank") <= 5)
@@ -296,40 +366,114 @@ object VecStore {
 
   /** Top-k probe set THROUGH the disk layout (shared by the registered
     * query and the scale-measurement runner): queries rank the STORED
-    * codebook (broadcast, k rows) and probe their top `probeCells` cells
-    * — a ×probeCells explode of the tiny broadcast side only; the index
-    * side's cell equi-join binds to the read-back PARTITION column, so
-    * pruning happens at directory listing, never a corpus scan. */
+    * codebook and probe their top `probeCells` cells; only the probed
+    * `cell=` directories are read (see [[probeScored]] for the two plans). */
   def probeTopK(s: SparkSession, dir: String, queryEmbeddings: DataFrame,
       probeCells: Int, k: Int = 5): DataFrame =
     rankTopK(probeScored(s, dir, queryEmbeddings, probeCells), k)
 
   /** The probe's SCORED candidate frame (query_id, vec_id, label, cell =
-    * query's own cell, cosine) before ranking — split out so
-    * [[VecStoreLog]] can union the live delta's brute-scored candidates
-    * in before the shared top-k rank. */
+    * query's own cell, cosine) before ranking: the generation at `dir`
+    * scored in each query's top `probeCells` cells, plus every vector of
+    * the live epochs `deltaDirs` brute-scored ([[VecStoreLog]]'s delta
+    * leg). The codebook is read once, on the driver ([[codebook]]). Two
+    * plans, one arithmetic:
+    *
+    *  - **driver-planned**, when the query frame is one row already on
+    *    the driver ([[localQuery]]): the query's cells are ranked there,
+    *    the generation is read under a static `cell IN (…)` partition
+    *    filter, and the query scores as a literal — no codebook scan, no
+    *    dynamic-pruning subquery;
+    *  - **distributed** otherwise: the packed codebook crossJoins the
+    *    queries, and the cell equi-join against the broadcast probe set
+    *    prunes the generation's cells dynamically.
+    *
+    * Both quantize through [[qn]] and rank cells through
+    * [[graft.functions.FixedPointDotMulti]] and
+    * [[graft.functions.CosRankCells]], so candidates, cosines and cells
+    * agree bit for bit (VecStoreLogSpec pins it). */
   private[sources] def probeScored(s: SparkSession, dir: String,
-      queryEmbeddings: DataFrame, probeCells: Int): DataFrame = {
-    val queries = qn(queryEmbeddings)
-      .select(col("vec_id"), col("qv"), col("norm2"))
-    val probes = Similarity.assignRanked(queries, centroids(s, dir))
-      .select(col("vec_id"), col("qv"), col("norm2"),
-        expr("ranked[0].id").cast("long").as("cell"),
-        explode(expr(s"slice(ranked, 1, $probeCells)")).as("pr"))
-      .select(col("vec_id"), col("qv"), col("norm2"), col("cell"),
-        col("pr.id").as("probe_cell"))
-    // the index side re-quantizes off the stored floats (bit-identical
-    // parquet round trip)
-    val index = qn(Tables.cachedParquet(s, dir))
-    index.as("b")
+      queryEmbeddings: DataFrame, probeCells: Int,
+      deltaDirs: Seq[String] = Nil): DataFrame = {
+    require(probeCells > 0, s"a probe reads at least one cell, got $probeCells")
+    val book = codebook(s, dir)
+    val stored = Tables.cachedParquet(s, dir)
+    val live = if (deltaDirs.isEmpty) None else Some(Tables.cachedParquet(s, deltaDirs: _*))
+    localQuery(queryEmbeddings) match {
+      case Some(q) =>
+        // the query's vector, norm and cell are literals, so each leg is
+        // one scan-filter-project
+        val ranked = book.rank(q.qv, q.norm2)
+        val id = lit(q.id).cast(queryEmbeddings.schema("vec_id").dataType)
+        def scoredAgainst(side: DataFrame, keep: Column): DataFrame =
+          side.where(keep && col("vec_id") =!= id)
+            .select(id.as("query_id"), col("vec_id"), col("label"),
+              lit(ranked.head).as("cell"),
+              cosine(typedLit(q.qv.toSeq), lit(q.norm2), quantExpr,
+                graft.functions.FixedPointDot(quantExpr, quantExpr)))
+        (scoredAgainst(stored, col("cell").isin(ranked.take(probeCells): _*)) +:
+          live.toSeq.map(scoredAgainst(_, lit(true)))).reduce(_ unionByName _)
+      case None =>
+        val queries = qn(queryEmbeddings).select(col("vec_id"), col("qv"), col("norm2"))
+        val probes = Similarity.assignRankedPacked(queries, book.packed(s))
+          .select(col("vec_id"), col("qv"), col("norm2"),
+            expr("ranked[0].id").cast("long").as("cell"),
+            explode(expr(s"slice(ranked, 1, $probeCells)")).as("pr"))
+          .select(col("vec_id"), col("qv"), col("norm2"), col("cell"),
+            col("pr.id").as("probe_cell"))
+        // the index side re-quantizes off the stored floats (bit-identical
+        // parquet round trip)
+        scoredJoin(qn(stored),
+          live.map(d => qn(d.select(col("vec_id"), col("label"), col("embedding")))),
+          probes)
+    }
+  }
+
+  /** The one query of a frame already on the driver: its id as stored, its
+    * fixed-point vector and squared norm. */
+  private[sources] final case class LocalQuery(id: Any, qv: Array[Long], norm2: Long)
+
+  /** The query when the frame is one row already on the driver: quantized
+    * by [[qn]]'s own expression, whose projection the optimizer folds into
+    * a LocalRelation input, so collecting it runs no job. Frames of
+    * several rows take the distributed plan. */
+  private[sources] def localQuery(queries: DataFrame): Option[LocalQuery] = {
+    val quantized = queries.select(col("vec_id"), quantExpr.as("qv"))
+    quantized.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.length == 1 =>
+        val r = quantized.collect().head
+        val qv = r.getSeq[Long](1).toArray
+        Some(LocalQuery(r.get(0), qv, Codebook.selfDot(qv)))
+      case _ => None
+    }
+  }
+
+  /** Score the probed generation cells and the live delta against a probe
+    * set (vec_id, qv, norm2, cell, probe_cell): one row per query and
+    * probed cell, so the delta leg takes each query's own-cell row. A
+    * vector lives in exactly one cell, so a candidate matches at most one
+    * probe row and the join needs no distinct. */
+  private def scoredJoin(index: DataFrame, delta: Option[DataFrame],
+      probes: DataFrame): DataFrame = {
+    val cols = Seq(col("a.vec_id").as("query_id"), col("b.vec_id").as("vec_id"),
+      col("b.label").as("label"), col("a.cell").as("cell"),
+      cosine(col("a.qv"), col("a.norm2"), col("b.qv"), col("b.norm2")))
+    val base = index.as("b")
       .join(broadcast(probes.as("a")),
         col("a.probe_cell") === col("b.cell") && col("b.vec_id") =!= col("a.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("vec_id"),
-        col("b.label").as("label"), col("a.cell").as("cell"),
-        (graft.functions.FixedPointDot(col("a.qv"), col("b.qv")).cast("double")
-          / (sqrt(col("a.norm2").cast("double")) * sqrt(col("b.norm2").cast("double"))))
-          .as("cosine"))
+      .select(cols: _*)
+    delta.fold(base) { d =>
+      val qcell = probes.filter(col("probe_cell") === col("cell"))
+      base.unionByName(d.as("b")
+        .join(broadcast(qcell.as("a")), col("b.vec_id") =!= col("a.vec_id"))
+        .select(cols: _*))
+    }
   }
+
+  /** Exact fixed-point cosine, in the oracle's operation order. */
+  private def cosine(aQv: Column, aNorm2: Column, bQv: Column, bNorm2: Column): Column =
+    (graft.functions.FixedPointDot(aQv, bQv).cast("double")
+      / (sqrt(aNorm2.cast("double")) * sqrt(bNorm2.cast("double")))).as("cosine")
 
   /** Shared top-k rank over a scored candidate frame. */
   private[sources] def rankTopK(scored: DataFrame, k: Int): DataFrame =
@@ -343,21 +487,16 @@ object VecStore {
         col("n_cands"), col("cosine"), col("rank"))
 
   /** The cell a raw float-array embedding is assigned to under a trained
-    * codebook (driver-side helper for single-query probes; mirrors the
-    * stored arithmetic — quantization, exact integer dots, cosine ranking
-    * with ties to the smallest c_id). */
+    * codebook (driver-side helper for single-query probes): quantization
+    * as stored, then [[Codebook.rank]] — exact integer dots, cosine
+    * ranking with ties to the smallest c_id. */
   def cellOf(embedding: Seq[Float], cents: Seq[(Long, Seq[Long])]): Long = {
     // SQL round() is HALF_UP away from zero; Math.round is half-up toward
     // +infinity — they disagree at negative exact-.5 products, which would
     // send a probe to the wrong cell directory. Mirror the stored
     // arithmetic exactly.
     def sqlRound(v: Double): Long = if (v < 0) -Math.round(-v) else Math.round(v)
-    val qv = embedding.map(x => sqlRound(x.toDouble * Similarity.Q))
-    val norm = math.sqrt(qv.map(x => x.toDouble * x).sum)
-    cents.map { case (cid, cqv) =>
-      val dot = qv.zip(cqv).map { case (a, b) => a * b }.sum
-      val cn = math.sqrt(cqv.map(x => x.toDouble * x).sum)
-      (-(dot.toDouble / (norm * cn)), cid)
-    }.min._2
+    val qv = embedding.map(x => sqlRound(x.toDouble * Similarity.Q)).toArray
+    Codebook(cents).rank(qv, Codebook.selfDot(qv)).head
   }
 }

@@ -152,10 +152,10 @@ object VecStoreLog {
     * r·s ≥ 1 the ratio is capped at 1/s < r for ANY delta, so the
     * guarantee cannot break — the budget-share rule (f ≥ s) remains as
     * the floor so folds still happen and the epoch file count stays
-    * bounded. Costs three parquet METADATA counts (base, delta, k-row
-    * codebook) — no data read. A store with no committed generation
-    * compacts on any live data: it cannot answer probes at all until a
-    * first fold exists.
+    * bounded. Costs two parquet METADATA counts (base, delta) and the
+    * k-row codebook read on the driver — no vector data read. A store
+    * with no committed generation compacts on any live data: it cannot
+    * answer probes at all until a first fold exists.
     *
     * `probeCells` ≤ 0 (the default) means "the probe width this store's
     * own k derives" ([[VecStore.probeCellsFor]]) — the width
@@ -172,10 +172,10 @@ object VecStoreLog {
       case Some(f) =>
         val base = spark.read.parquet(f).count()
         val delta = spark.read.parquet(v.liveBatches.map(_._2): _*).count()
-        val cellK = VecStore.centroids(spark, f).count()
+        val cellK = VecStore.codebook(spark, f).cids.length
         val pc =
           if (probeCells > 0) probeCells
-          else VecStore.probeCellsFor(cellK.toInt)
+          else VecStore.probeCellsFor(cellK)
         val s = pc.toDouble / cellK
         val fThresh =
           if (maxRatio * s >= 1.0) s
@@ -478,34 +478,31 @@ object VecStoreLog {
   /** Top-k probe over the MAINTAINED store: cell-pruned candidates from
     * the committed generation ∪ brute-scored candidates from the live
     * delta, ranked together. `n_cands` counts both legs — the pruning
-    * evidence plus the (bounded) delta cost, visible per query. */
+    * evidence plus the (bounded) delta cost, visible per query.
+    *
+    * Two plans, routed by where the queries are ([[VecStore.probeScored]]):
+    *  - a one-row query frame already on the driver (its optimized plan
+    *    is a one-row LocalRelation — `Seq(...).toDF`, so collecting it
+    *    runs no job) is planned there: the committed codebook is read once
+    *    off its parquet file, the query's cells are ranked with the SQL
+    *    path's arithmetic, and the generation is scanned under a static
+    *    `cell IN (…)` partition filter beside the live epochs, the query
+    *    scored as a literal. Such a probe submits two jobs (the rank
+    *    window's shuffle and its result) once each root's parquet schema
+    *    is cached ([[graft.ops.Tables.cachedParquet]]);
+    *  - any other frame (several rows, or read from parquet as the
+    *    registered queries' are) keeps the distributed plan: the codebook,
+    *    packed once on the driver, crossJoins the queries, and both legs
+    *    join the broadcast probe set, the generation's cells pruned
+    *    dynamically.
+    * Every output column and tie agrees between the two (VecStoreLogSpec). */
   def probeTopK(s: SparkSession, dir: String, queryEmbeddings: DataFrame,
       probeCells: Int, k: Int = 5): DataFrame = {
     val v = CubeLog.view(s, dir)
     require(v.foldedDir.nonEmpty,
       s"maintained vector store $dir has no committed generation — compact first")
-    val baseDir = v.foldedDir.get
-    val baseScored = VecStore.probeScored(s, baseDir, queryEmbeddings, probeCells)
-    val scored = v.liveBatches.map(_._2) match {
-      case Seq() => baseScored
-      case deltaDirs =>
-        val queries = VecStore.qn(queryEmbeddings)
-          .select(col("vec_id"), col("qv"), col("norm2"))
-        val qcell = Similarity.assignRanked(queries, VecStore.centroids(s, baseDir))
-          .select(col("vec_id"), col("qv"), col("norm2"),
-            expr("ranked[0].id").cast("long").as("cell"))
-        val delta = VecStore.qn(Tables.cachedParquet(s, deltaDirs: _*)
-          .select(col("vec_id"), col("label"), col("embedding")))
-        val deltaScored = delta.as("b")
-          .join(broadcast(qcell.as("a")), col("b.vec_id") =!= col("a.vec_id"))
-          .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("vec_id"),
-            col("b.label").as("label"), col("a.cell").as("cell"),
-            (graft.functions.FixedPointDot(col("a.qv"), col("b.qv")).cast("double")
-              / (sqrt(col("a.norm2").cast("double"))
-                * sqrt(col("b.norm2").cast("double")))).as("cosine"))
-        baseScored.unionByName(deltaScored)
-    }
-    VecStore.rankTopK(scored, k)
+    VecStore.rankTopK(VecStore.probeScored(s, v.foldedDir.get, queryEmbeddings,
+      probeCells, v.liveBatches.map(_._2)), k)
   }
 
   /** RTBF for the maintained ANN index — the one governance discipline

@@ -241,4 +241,15 @@ class DedupLogSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("mix two layouts"))
   }
+
+  test("erase and expiry put every broadcast hint on a join side") {
+    // a hint on a frame that is also unioned (the erased ids join the
+    // touched nodes) is dropped with a HintErrorLogger warning
+    val (_, dropped) = warningsOf("org.apache.spark.sql.catalyst.analysis.HintErrorLogger") {
+      Seq("dedup_incremental_erase", "dedup_expire_clusters").foreach { name =>
+        graft.SparkEntry.queries(name)(spark, sf0001).collect()
+      }
+    }
+    assert(dropped.isEmpty, s"a broadcast hint was dropped: $dropped")
+  }
 }

@@ -85,27 +85,10 @@ class HeavyHitterStoreSpec extends SparkSpec {
     // Spark drops a hint on a side the join cannot build (the preserved
     // left of a left outer join) and reports it only as a HintErrorLogger
     // warning, so the spec listens on that logger while the probe plans
-    // and runs (adaptive execution re-plans each stage)
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val dropped = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("hint-errors", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = dropped.add(e.getMessage.getFormattedMessage)
+    // and runs
+    val (_, dropped) = warningsOf("org.apache.spark.sql.catalyst.analysis.HintErrorLogger") {
+      graft.SparkEntry.queries("hh_store_probe")(spark, sf0001).collect()
     }
-    appender.start()
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
-    val level = logger.getLevel
-    logger.addAppender(appender)
-    logger.setLevel(Level.WARN)
-    try graft.SparkEntry.queries("hh_store_probe")(spark, sf0001).collect()
-    finally {
-      logger.removeAppender(appender)
-      logger.setLevel(level)
-      appender.stop()
-    }
-    assert(dropped.isEmpty, "a broadcast hint was dropped")
+    assert(dropped.isEmpty, s"a broadcast hint was dropped: $dropped")
   }
 }

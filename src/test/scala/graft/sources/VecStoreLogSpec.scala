@@ -140,8 +140,8 @@ class VecStoreLogSpec extends SparkSpec {
     val small = emb.filter($"vec_id" < 100)
     VecStoreLog.appendBatch(small, dir, 0L)
     VecStoreLog.compact(spark, dir) // derived k over ~100 vectors
-    val k1 = VecStore.centroids(spark,
-      CubeLog.view(spark, dir).foldedDir.get).count()
+    val k1 = VecStore.codebook(spark,
+      CubeLog.view(spark, dir).foldedDir.get).cids.length
     assert(k1 === VecStore.cellKFor(small.count()))
 
     VecStoreLog.appendBatch(emb.filter($"vec_id" >= 100), dir, 1L)
@@ -154,12 +154,110 @@ class VecStoreLogSpec extends SparkSpec {
 
     VecStoreLog.compact(spark, dir)
     val v = CubeLog.view(spark, dir)
-    val k2 = VecStore.centroids(spark, v.foldedDir.get).count()
+    val k2 = VecStore.codebook(spark, v.foldedDir.get).cids.length
     assert(k2 === VecStore.cellKFor(emb.count()),
       "the sqrt(n) rule must be re-applied over the grown corpus")
     assert(k2 > k1)
     // the orphan gen was swept by the successful compaction's cleanup
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/folded_gen=9")))
+  }
+
+  /** A probe's every output column, in (query_id, rank) order. */
+  private def answer(df: org.apache.spark.sql.DataFrame) =
+    (df.schema.map(f => (f.name, f.dataType)),
+      df.orderBy($"query_id", $"rank").collect().toSeq)
+
+  test("driver-planned probes ≡ the distributed plan on every column, across store shapes") {
+    val part = emb.filter($"vec_id" < 300).localCheckpoint(eager = true)
+    val vecs = part.select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toMap
+    // (query id, whose embedding): frames built from driver-side rows
+    // (LocalRelation); each frame's repartitioned twin is the same rows
+    // on the distributed plan. One-row frames are driver-planned; the
+    // several-row frame takes the distributed plan from either side
+    def frame(qs: (Long, Long)*) =
+      qs.map { case (id, src) => (id, vecs(src)) }.toDF("vec_id", "embedding")
+    val frames = Seq(
+      "one query, id not stored" -> frame(-1L -> 7L),
+      "one query whose id is a stored vec_id" -> frame(7L -> 7L),
+      "several queries" -> frame(7L -> 7L, -2L -> 123L, 45L -> 45L))
+    def agree(store: String, dir: String): Unit = frames.foreach { case (name, q) =>
+      val twin = q.repartition(1)
+      assert(VecStore.localQuery(q).isDefined === (q.count() == 1L) &&
+        VecStore.localQuery(twin).isEmpty, s"$store, $name: routing")
+      val got = answer(VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells))
+      assert(got._2.nonEmpty, s"$store, $name: no rows")
+      assert(got === answer(VecStoreLog.probeTopK(spark, dir, twin, VecStore.ProbeCells)),
+        s"$store, $name")
+    }
+    def flatStore(dir: String, vs: org.apache.spark.sql.DataFrame): Unit = {
+      (0L to 1L).foreach(ep =>
+        VecStoreLog.appendBatch(vs.filter(pmod($"vec_id", lit(3L)) === ep), dir, ep))
+      VecStoreLog.compact(spark, dir, Some(VecStore.CellK))
+    }
+
+    val dir = java.nio.file.Files.createTempDirectory("vlog_local_").toString + "/idx"
+    flatStore(dir, part)
+    agree("flat, all folded", dir)
+    VecStoreLog.appendBatch(part.filter(pmod($"vec_id", lit(3L)) === 2L), dir, 2L)
+    agree("flat, one live epoch", dir)
+    assert(VecStoreLog.eraseByIds(spark, dir, (0L until 300L by 37L)) > 0L)
+    agree("flat, after an in-place erase", dir)
+
+    val chunked = java.nio.file.Files.createTempDirectory("vlog_local_ch_").toString + "/idx"
+    val dated = VecStoreLog.withCrawlDates(part)
+    VecStoreLog.appendBatchChunked(dated.filter(pmod($"vec_id", lit(2L)) === 0L), chunked, 0L)
+    VecStoreLog.compactChunked(spark, chunked, Some(VecStore.CellK))
+    VecStoreLog.appendBatchChunked(dated.filter(pmod($"vec_id", lit(2L)) === 1L), chunked, 1L)
+    agree("chunked, one live epoch", chunked)
+
+    // the same path deleted and re-created over other vectors: a new
+    // codebook, which the driver plan must read afresh
+    val other = emb.filter($"vec_id" >= 300 && $"vec_id" < 600)
+    val fresh = java.nio.file.Files.createTempDirectory("vlog_local_fr_").toString + "/idx"
+    flatStore(fresh, other)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    flatStore(dir, other)
+    agree("re-created at the same path", dir)
+    frames.foreach { case (name, q) =>
+      assert(answer(VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells)) ===
+        answer(VecStoreLog.probeTopK(spark, fresh, q, VecStore.ProbeCells)),
+        s"re-created store answers like a new one, $name")
+    }
+  }
+
+  /** A folded store with one live epoch, for the probe-cost guards. */
+  private lazy val liveStore: String = {
+    val dir = java.nio.file.Files.createTempDirectory("vlog_guard_").toString + "/idx"
+    VecStoreLog.appendBatch(emb.filter($"vec_id" < 200), dir, 0L)
+    VecStoreLog.compact(spark, dir, Some(VecStore.CellK))
+    VecStoreLog.appendBatch(emb.filter($"vec_id" >= 200 && $"vec_id" < 260), dir, 1L)
+    dir
+  }
+
+  private def oneQuery(id: Long) = emb.filter($"vec_id" === id)
+    .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toSeq
+    .toDF("vec_id", "embedding")
+
+  test("a single-query driver-planned probe submits at most two Spark jobs") {
+    // the first probe of a store reads each root's parquet schema once
+    // (Tables.cachedParquet); the guard counts a later probe: the rank
+    // window's shuffle and its result, no codebook scan, no pruning subquery
+    VecStoreLog.probeTopK(spark, liveStore, oneQuery(3L), VecStore.ProbeCells).collect()
+    val q = oneQuery(11L)
+    val (top, jobs) = jobsOf(
+      VecStoreLog.probeTopK(spark, liveStore, q, VecStore.ProbeCells).collect())
+    assert(top.length === 5)
+    assert(jobs <= 2, s"a one-query probe submitted $jobs jobs")
+  }
+
+  test("a probe reads the codebook without an ignored-path warning") {
+    val (_, warned) = warningsOf("org.apache.spark.sql.execution.datasources.DataSource") {
+      VecStoreLog.probeTopK(spark, liveStore, oneQuery(5L), VecStore.ProbeCells).collect()
+      VecStoreLog.probeTopK(spark, liveStore, oneQuery(5L).repartition(1),
+        VecStore.ProbeCells).collect()
+      StoreCheck.checkVecStoreLog(spark, liveStore)
+    }
+    assert(!warned.exists(_.contains("All paths were ignored")), warned.mkString("\n"))
   }
 }

@@ -18,8 +18,8 @@ class VecStoreSpec extends SparkSpec {
 
     // the codebook is stored beside the index (hidden from the index's own
     // parquet discovery by the underscore prefix)
-    val cents = VecStore.centroids(spark, dir)
-    assert(cents.count() <= 16 && cents.count() >= 2)
+    val cents = VecStore.codebook(spark, dir)
+    assert(cents.cids.length <= 16 && cents.cids.length >= 2)
 
     // pick the most occupied cell deterministically (partition-column
     // inference reads cell= back as int — normalize to long)
@@ -44,7 +44,8 @@ class VecStoreSpec extends SparkSpec {
 
     // 3) additive append THROUGH THE STORED CODEBOOK (no retrain):
     // existing files untouched, new rows visible, codebook unchanged
-    val centsBefore = cents.orderBy("c_id").collect().toSeq
+    def entries(book: VecStore.Codebook) = book.cids.toSeq.zip(book.cqvs.map(_.toSeq))
+    val centsBefore = entries(cents)
     val before = spark.read.parquet(dir).select(input_file_name()).distinct()
       .as[String].collect().toSet
     VecStore.append(emb.filter($"vec_id" >= 400), dir)
@@ -52,7 +53,7 @@ class VecStoreSpec extends SparkSpec {
       .as[String].collect().toSet
     assert(before.subsetOf(after), "append must not rewrite existing files")
     assert(spark.read.parquet(dir).count() == emb.count())
-    assert(VecStore.centroids(spark, dir).orderBy("c_id").collect().toSeq == centsBefore,
+    assert(entries(VecStore.codebook(spark, dir)) == centsBefore,
       "append must not retrain the codebook")
   }
 
@@ -132,10 +133,8 @@ class VecStoreSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("vecstore-cellof").toString
     VecStore.build(emb, dir)
-    val cents = VecStore.centroids(spark, dir)
-      .orderBy("c_id")
-      .select($"c_id", $"cqv")
-      .as[(Long, Seq[Long])].collect().toSeq
+    val book = VecStore.codebook(spark, dir)
+    val cents = book.cids.toSeq.zip(book.cqvs.map(_.toSeq))
     val stored = spark.read.parquet(dir)
       .filter($"vec_id" < 25)
       .select($"vec_id", $"embedding", $"cell".cast("long"))
