@@ -29,11 +29,20 @@ object Session {
     // whole-suite A/B on one host: sort writer 204.5 s, bypass 220.5 s.
     "spark.shuffle.sort.bypassMergeThreshold" -> "0",
     "spark.sql.session.timeZone" -> "UTC",
+    // the corpus has shipped events.ts as parquet TIMESTAMP(NANOS), which
+    // Spark 4 reads only as a raw epoch-ns BIGINT ([[graft.ops.Tables.events]]
+    // normalizes both encodings)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
+  /** The session, with the engine's planner additions
+    * ([[graft.plans.GraftExtensions]]: the TopKPerKey strategy, and the
+    * approximate-distinct rule, inert unless its conf key is set) injected
+    * here once, so no query body mutates the live session. */
   def build(appName: String, cpus: Int,
       extra: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]").appName(appName)
+      .withExtensions(new graft.plans.GraftExtensions)
     (engineConfs(cpus) ++ extra).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

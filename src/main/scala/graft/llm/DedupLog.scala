@@ -167,41 +167,18 @@ object DedupLog {
   /** Land one document epoch: store its signatures, discover the pairs
     * it creates (delta × committed ∪ delta × delta), and relabel ONLY
     * the touched components. Returns the number of new verified pairs.
-    * Watermark-guarded like every cube landing. */
-  def appendEpoch(docs: DataFrame, dir: String, batchId: Long): Long =
-    appendEpochImpl(docs, dir, batchId, chunked = false)
-
-  /** [[appendEpoch]] with the calendar axis: `docs` must carry a
-    * `crawl_date` DATE column; stored signatures ride under
-    * `chunk_date=<d>/sp=<p>` so [[expireBefore]] can drop a crawl day
-    * driver-side. Pairing, labels, cadence, and RTBF are identical —
-    * only the signature layout gains the axis. */
-  def appendEpochChunked(docs: DataFrame, dir: String, batchId: Long): Long = {
-    require(docs.columns.contains("crawl_date"),
-      "appendEpochChunked needs a crawl_date column (the retention axis)")
-    appendEpochImpl(docs, dir, batchId, chunked = true)
-  }
-
-  /** One store, ONE retention-axis layout: landing a chunked epoch into a
-    * flat store (or vice versa) would mix two sig schemas whose
-    * unionByName fails at the NEXT compact/expire — fail loudly at the
-    * landing instead (the `_sp` mismatch discipline on the axis). */
-  private def requireAxisConsistent(spark: SparkSession, dir: String,
-      chunked: Boolean): Unit =
-    sigRoots(spark, dir).headOption.foreach { r =>
-      val storeChunked = spark.read.parquet(r).columns.contains("chunk_date")
-      require(storeChunked == chunked,
-        s"dedup store $dir was landed ${if (storeChunked) "WITH" else "WITHOUT"} " +
-          s"the chunk_date retention axis but this landing is " +
-          s"${if (chunked) "calendar-chunked" else "flat"} — one store keeps " +
-          "one layout; land through the matching append variant")
-    }
-
-  private def appendEpochImpl(docs: DataFrame, dir: String, batchId: Long,
-      chunked: Boolean): Long = {
+    * Watermark-guarded like every cube landing. `docs` carrying a
+    * `crawl_date` DATE column land calendar-chunked: stored signatures
+    * ride under `chunk_date=<d>/sp=<p>` so [[expireBefore]] can drop a
+    * crawl day driver-side. Pairing, labels, cadence, and RTBF are
+    * identical — only the signature layout gains the axis. */
+  def appendEpoch(docs: DataFrame, dir: String, batchId: Long): Long = {
     val spark = docs.sparkSession
+    val chunked = CubeLog.carriesCrawlDate(docs)
     persistSigParts(spark, dir) // fail loudly BEFORE mixing two layouts
-    requireAxisConsistent(spark, dir, chunked)
+    // one store, ONE retention-axis layout: mixed sig schemas would fail
+    // the unionByName of the NEXT compact/expire — fail at the landing
+    CubeLog.requireLayout(spark, "dedup store", dir, sigRoots(spark, dir), chunked)
     if (CubeLog.isFolded(spark, dir, batchId)) return 0L
     CubeLog.claimEpoch(spark, dir, batchId) // single-writer guard
     val sigsD = Dedup.sigsOf(docs.select(col("doc_id"), col("text")))
@@ -314,13 +291,12 @@ object DedupLog {
   def appendEpochBatch(docs: DataFrame, dir: String, batchId: Long): Long = {
     val spark = docs.sparkSession
     persistSigParts(spark, dir)
-    // the batch regime serves BOTH layouts: docs carrying a crawl_date
-    // land chunked (the axis joins onto the sigs exactly as the
-    // incremental regime's chunked landing does), docs without it land
-    // flat — and either way the landing must match the store's layout, or
-    // sigsAllRaw's unionByName dies at the next compact/expire
-    val chunked = docs.columns.contains("crawl_date")
-    requireAxisConsistent(spark, dir, chunked)
+    // the batch regime serves BOTH layouts exactly as the incremental
+    // regime does: docs carrying a crawl_date land chunked, docs without
+    // it land flat — and either way the landing must match the store's
+    // layout, or sigsAllRaw's unionByName dies at the next compact/expire
+    val chunked = CubeLog.carriesCrawlDate(docs)
+    CubeLog.requireLayout(spark, "dedup store", dir, sigRoots(spark, dir), chunked)
     if (CubeLog.isFolded(spark, dir, batchId)) return 0L
     CubeLog.claimEpoch(spark, dir, batchId) // single-writer guard
     val sigsD = Dedup.sigsOf(docs.select(col("doc_id"), col("text")))
@@ -341,17 +317,6 @@ object DedupLog {
     // guard); older labels cannot exist either — pairs are monotone
     if (n > 0L)
       labels.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId/labels")
-    n
-  }
-
-  /** [[appendEpochAuto]] for the calendar-chunked layout — [[compact]]
-    * already preserves the axis (sigsAllRaw keeps chunk_date), so the
-    * cadence composes unchanged. The chunked streaming loop calls THIS. */
-  def appendEpochChunkedAuto(docs: DataFrame, dir: String, batchId: Long,
-      maxLive: Int = MaxLiveEpochs): Long = {
-    val n = appendEpochChunked(docs, dir, batchId)
-    if (shouldCompact(docs.sparkSession, dir, maxLive))
-      compact(docs.sparkSession, dir)
     n
   }
 
@@ -547,9 +512,9 @@ object DedupLog {
       s"cutoff must be an ISO date: $cutoff")
     val roots = sigRoots(spark, dir)
     if (roots.isEmpty) return 0L
-    require(spark.read.parquet(roots.head).columns.contains("chunk_date"),
-      s"dedup store $dir has no retention axis — land through " +
-        "appendEpochChunked to expire by crawl date")
+    require(CubeLog.isChunkedRoot(spark, roots.head),
+      s"dedup store $dir has no retention axis — land docs carrying " +
+        "crawl_date through appendEpoch to expire by crawl date")
     // the expired ids + the pre-expiry label state, captured BEFORE the
     // drops (the slices are date-pruned reads — bounded by what expires).
     // r15: when NOTHING expires (the idempotent replay of a cutoff) the
@@ -668,9 +633,9 @@ object DedupLog {
         val docs = Tables.documentsParallel(s, d).select(col("doc_id"), col("text"))
           .withColumn("crawl_date", date_add(lit("2026-01-01").cast("date"),
             pmod(col("doc_id"), lit(3L)).cast("int")))
-        appendEpochChunked(docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), dir, 0L)
+        appendEpoch(docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), dir, 0L)
         compact(s, dir)
-        appendEpochChunked(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), dir, 1L)
+        appendEpoch(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), dir, 1L)
         dir
       })
     }

@@ -259,7 +259,6 @@ object TimeSeriesExt {
         |  SELECT event_id, user_id, value, row_number() OVER (
         |    PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
         |  FROM events) t WHERE rn <= 3""".stripMargin) { (s, d) =>
-      graft.plans.TopKPerKeyStrategy.setup(s)
       graft.plans.TopKPerKey(
         Tables.events(s, d).select(col("event_id"), col("user_id"), col("value")),
         keys = Seq("user_id"),

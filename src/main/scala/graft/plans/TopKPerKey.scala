@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -65,8 +65,8 @@ object TopKPerKey {
   /** DataFrame-level API: columns by name, `(name, descending?)` ordering
     * (resolved against the analyzed child — Spark 4 Columns carry lazy
     * ColumnNode expressions that custom nodes can't resolve themselves).
-    * Requires [[GraftExtensions]] or [[TopKPerKeyStrategy.setup]] on the
-    * session. */
+    * Requires [[GraftExtensions]] on the session ([[graft.Session.build]]
+    * registers it). */
   def apply(df: DataFrame, keys: Seq[String], orderBy: Seq[(String, Boolean)], k: Int)
       : DataFrame = {
     val analyzed = df.queryExecution.analyzed
@@ -82,18 +82,6 @@ object TopKPerKey {
 }
 
 object TopKPerKeyStrategy extends SparkStrategy {
-  /** Registers this strategy on `spark` once (Pathling's idempotent
-    * `SqlStrategy.setup` idiom). Query code calls it before building a
-    * [[TopKPerKey]] plan; the lock keeps concurrent callers from losing
-    * each other's registration. */
-  def setup(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    ex.synchronized {
-      if (!ex.extraStrategies.contains(this))
-        ex.extraStrategies = ex.extraStrategies :+ this
-    }
-  }
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child) =>
       val maxKeys = SQLConf.get

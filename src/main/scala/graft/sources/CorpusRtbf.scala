@@ -327,34 +327,34 @@ object CorpusRtbf {
         // + dedup: fold + one live epoch, epochs sliced mod 2 so every
         // crawl day spans both legs.
         inParallel(Seq(
-          "bronze" -> (() => DocStore.appendDedupedChunked(s, docs, bronze, 0L)),
+          "bronze" -> (() => DocStore.appendDeduped(s, docs, bronze, 0L)),
           "posting" -> { () =>
-            PostingLog.appendBatchChunked(
+            PostingLog.appendBatch(
               docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), posting, 0L)
-            PostingLog.compactChunked(s, posting)
-            PostingLog.appendBatchChunked(
+            PostingLog.compact(s, posting)
+            PostingLog.appendBatch(
               docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), posting, 1L)
           },
           "dedup" -> { () =>
-            graft.llm.DedupLog.appendEpochChunked(
+            graft.llm.DedupLog.appendEpoch(
               docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), dedup, 0L)
             graft.llm.DedupLog.compact(s, dedup)
-            graft.llm.DedupLog.appendEpochChunked(
+            graft.llm.DedupLog.appendEpoch(
               docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), dedup, 1L)
           },
           "vec" -> { () =>
             (0L to 2L).foreach { e =>
-              VecStoreLog.appendBatchChunked(
+              VecStoreLog.appendBatch(
                 emb.filter(pmod(col("vec_id"), lit(3L)) === e), vec, e)
             }
-            VecStoreLog.compactChunked(s, vec, cellK = Some(VecStore.CellK))
+            VecStoreLog.compact(s, vec, cellK = Some(VecStore.CellK))
           },
           "ivfpq" -> { () =>
             (0L to 2L).foreach { e =>
-              IvfPqLog.appendBatchChunked(
+              IvfPqLog.appendBatch(
                 emb.filter(pmod(col("vec_id"), lit(3L)) === e), ivfpq, e)
             }
-            IvfPqLog.compactChunked(s, ivfpq)
+            IvfPqLog.compact(s, ivfpq)
           }))
         // the VERIFIED drive (r15): the cutoff ends with the cross-surface
         // + per-store fscks; the receipt carries the clean bit the oracle

@@ -84,6 +84,65 @@ object CubeLog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  // ---------------------------------------------------------------- //
+  // Layout — flat or calendar-chunked — is a STORE property. The input
+  // decides it (a landing frame carrying `crawl_date` lands under
+  // `chunk_date=` directories, any other frame lands flat) and the store
+  // remembers it in the directory names it writes, so folds, expiry,
+  // erase and fsck read it back without a schema inference.
+  // ---------------------------------------------------------------- //
+
+  /** True iff a landing frame asks for the calendar-chunked layout. */
+  private[graft] def carriesCrawlDate(df: DataFrame): Boolean =
+    df.columns.contains("crawl_date")
+
+  /** The partition axis a layout adds to every row: `chunk_date` when
+    * chunked, nothing when flat. */
+  private[graft] def axis(chunked: Boolean): Seq[String] =
+    if (chunked) Seq("chunk_date") else Nil
+
+  /** True iff a store root carries the calendar retention axis — decided
+    * from DIRECTORY NAMES (a few bounded listings, never a Spark job):
+    * epoch roots and the bronze/dedup trees hold `chunk_date=` children
+    * directly, vector generations hold them under `cell=`
+    * ([[VecStoreLog]]) or `codes/cell=` ([[IvfPqLog]]). */
+  private[graft] def isChunkedRoot(spark: SparkSession, root: String): Boolean = {
+    val (hfs, p) = fs(spark, root)
+    if (!hfs.exists(p)) return false
+    def hasDateChild(d: org.apache.hadoop.fs.Path): Boolean =
+      hfs.exists(d) && hfs.listStatus(d).exists(st =>
+        st.isDirectory && st.getPath.getName.startsWith("chunk_date="))
+    def firstCellOf(d: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
+      if (!hfs.exists(d)) None
+      else hfs.listStatus(d).find(st =>
+        st.isDirectory && st.getPath.getName.startsWith("cell=")).map(_.getPath)
+    hfs.listStatus(p).exists(st =>
+      st.isDirectory && st.getPath.getName.startsWith("chunk_date=")) ||
+      firstCellOf(p).exists(hasDateChild) ||
+      firstCellOf(new org.apache.hadoop.fs.Path(p, "codes")).exists(hasDateChild)
+  }
+
+  /** The layout a store was landed at, read off the first of its data
+    * `roots` (false for a store with none yet). */
+  private[graft] def chunkedStore(spark: SparkSession, roots: Seq[String]): Boolean =
+    roots.headOption.exists(isChunkedRoot(spark, _))
+
+  /** One store, ONE layout: a landing whose layout disagrees with the
+    * store's data `roots` would break the next fold's unionByName and the
+    * expiry's directory contract at a distance — fail at the landing,
+    * before anything is written. */
+  private[graft] def requireLayout(spark: SparkSession, what: String, dir: String,
+      roots: Seq[String], chunked: Boolean): Unit =
+    roots.headOption.foreach { r =>
+      val stored = isChunkedRoot(spark, r)
+      require(stored == chunked,
+        s"$what $dir was landed ${if (stored) "WITH" else "WITHOUT"} the " +
+          "chunk_date retention axis but this landing is " +
+          s"${if (chunked) "calendar-chunked" else "flat"} — one store keeps " +
+          "one layout; a frame carrying crawl_date lands chunked, any other " +
+          "frame lands flat")
+    }
+
   /** Resolve the reader view: latest committed generation, its epoch
     * watermark, live (unfolded) batch dirs, and root-level build files. */
   def view(spark: SparkSession, dir: String): View = {
@@ -388,7 +447,7 @@ object CubeLog {
     val newWatermark = (v.watermark +: v.liveBatches.map(_._1)).max
     // clear a crash orphan of the SAME generation before writing: some
     // writers land the generation with mode("append") per subtree
-    // (VecStore.build/buildChunked append cell partitions), and
+    // (VecStore.build appends cell partitions), and
     // purgeGraceRetained deliberately keeps newer-gen orphans — so a fold
     // that crashed mid-write would otherwise have this retry append the
     // full corpus ON TOP of its partial files and commit a generation

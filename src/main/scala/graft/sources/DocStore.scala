@@ -44,16 +44,31 @@ object DocStore {
     * batch landed nothing) — [[graft.streaming.DocStream.startIndexedIngest]]
     * feeds the SAME rows to the posting/dedup stores, so the derived
     * surfaces can never index a document the bronze rejected as a
-    * re-crawl. The frame is already materialized (localCheckpoint). */
+    * re-crawl. The frame is already materialized (localCheckpoint).
+    *
+    * `docs` carrying a `crawl_date` DATE column land calendar-chunked:
+    * both trees partition by (chunk_date, batch_id) — see the layout note
+    * at [[expireBefore]] — and a replayed batch rewrites exactly its own
+    * (date, batch) composites. One bronze keeps one layout: a landing
+    * that disagrees with the landed docs tree fails before writing
+    * anything ([[CubeLog.requireLayout]]) — a flat landing would miss the
+    * chunked hash index and land every history duplicate again. */
   def appendDedupedLanded(spark: SparkSession, docs: DataFrame,
       baseDir: String, batchId: Long): Option[DataFrame] = {
     val docsPath = s"$baseDir/docs"
     val indexPath = s"$baseDir/hash_index"
+    val chunked = CubeLog.carriesCrawlDate(docs)
+    CubeLog.requireLayout(spark, "doc store", baseDir,
+      Seq(docsPath).filter(landedTree(spark, _)), chunked)
+    val parts = CubeLog.axis(chunked) :+ "batch_id"
 
     // a document with no content is rejected, not landed: md5(null) is
     // null, and a null hash would never match itself in the anti-join —
     // one null-text row per batch would re-land forever
-    val withHash = docs.filter(col("text").isNotNull)
+    val withHash0 = docs.filter(col("text").isNotNull)
+    val withHash =
+      if (chunked) withHash0.withColumn("chunk_date", col("crawl_date").cast("date"))
+      else withHash0
     // reuse the hash when the caller (e.g. DocStream.curate) already
     // computed it — document bodies are the expensive thing to hash twice
     val hashed0 =
@@ -67,8 +82,10 @@ object DocStore {
         Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
 
+    val indexed =
+      if (chunked) chunkedExists(spark, indexPath) else indexExists(spark, indexPath)
     val fresh0 =
-      if (indexExists(spark, indexPath)) {
+      if (indexed) {
         val seen = spark.read.parquet(indexPath).select(col("content_hash"))
         hashed.join(seen, Seq("content_hash"), "left_anti")
       } else hashed
@@ -91,11 +108,11 @@ object DocStore {
     // the same rows instead of appending duplicates
     fresh.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(docsPath)
-    fresh.select(col("content_hash"), col("batch_id"))
+      .partitionBy(parts: _*).parquet(docsPath)
+    fresh.select((col("content_hash") +: parts.map(col)): _*)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexPath)
+      .partitionBy(parts: _*).parquet(indexPath)
     Some(fresh)
   }
 
@@ -197,7 +214,10 @@ object DocStore {
     * of tiny batch_id partitions (the same small-file decay
     * `Store.compactChunk` repairs on bronze). All hashes are folded into
     * the reserved history partition `batch_id = -1`, then the per-batch
-    * partitions are dropped.
+    * partitions are dropped. On a calendar-chunked index each date folds
+    * into its own `chunk_date=<d>/batch_id=-1` — the date axis survives
+    * compaction (it IS the retention key), only the per-batch
+    * fragmentation goes.
     *
     * Crash-safe and idempotent: the fold is written first (dynamic
     * overwrite of the -1 partition only), deletes happen after. A crash
@@ -217,30 +237,43 @@ object DocStore {
     * compacted hash count. */
   def compactIndex(spark: SparkSession, baseDir: String): Long = {
     val indexPath = s"$baseDir/hash_index"
-    if (!indexExists(spark, indexPath)) return 0L
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // snapshot: the per-batch partitions to fold AND later delete
-    val snapshot = fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id=")
-        && st.getPath.getName != "batch_id=-1")
-      .map(_.getPath)
-    if (snapshot.isEmpty) return 0L // nothing to fold; leave -1 as-is
-    // fold = snapshotted partitions ∪ the existing history partition
-    val historyDir = new org.apache.hadoop.fs.Path(indexPath, "batch_id=-1")
-    val foldDirs = (if (fs.exists(historyDir)) snapshot :+ historyDir else snapshot)
-      .map(_.toString)
-    val folded = spark.read.option("basePath", indexPath)
-      .parquet(foldDirs: _*)
-      .select(col("content_hash")).distinct()
-      .withColumn("batch_id", lit(-1L))
-      // materialize before rewriting the directory being read
-      .localCheckpoint(eager = true)
-    folded.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexPath)
-    snapshot.foreach(dir => fs.delete(dir, true))
-    folded.count()
+    if (!fs.exists(p)) return 0L
+    val chunked = CubeLog.isChunkedRoot(spark, indexPath)
+    // the fold units: each date dir of a chunked index, the whole flat one
+    val units: Seq[(org.apache.hadoop.fs.Path, Option[String])] =
+      if (!chunked) Seq(p -> None)
+      else fs.listStatus(p).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("chunk_date="))
+        .map(st => st.getPath -> Some(st.getPath.getName.stripPrefix("chunk_date=")))
+    var total = 0L
+    units.foreach { case (unit, date) =>
+      // snapshot: the per-batch partitions to fold AND later delete
+      val snapshot = fs.listStatus(unit)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id=")
+          && st.getPath.getName != "batch_id=-1")
+        .map(_.getPath)
+      if (snapshot.nonEmpty) { // else nothing to fold; leave -1 as-is
+        // fold = snapshotted partitions ∪ the existing history partition
+        val historyDir = new org.apache.hadoop.fs.Path(unit, "batch_id=-1")
+        val foldDirs = (if (fs.exists(historyDir)) snapshot :+ historyDir else snapshot)
+          .map(_.toString)
+        val hashes = spark.read.option("basePath", indexPath)
+          .parquet(foldDirs: _*)
+          .select(col("content_hash")).distinct()
+        val folded = date.fold(hashes)(d => hashes.withColumn("chunk_date", lit(d).cast("date")))
+          .withColumn("batch_id", lit(-1L))
+          // materialize before rewriting the directory being read
+          .localCheckpoint(eager = true)
+        folded.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(CubeLog.axis(chunked) :+ "batch_id": _*).parquet(indexPath)
+        snapshot.foreach(dir => fs.delete(dir, true))
+        total += folded.count()
+      }
+    }
+    total
   }
 
   /** RTBF for the bronze corpus + its content-derived indexes: remove the
@@ -274,11 +307,11 @@ object DocStore {
     val indexPath = s"$baseDir/hash_index"
     val sigPath = s"$baseDir/sig_index"
     val req = broadcast(ids.toDF("doc_id"))
-    // calendar-chunked bronzes ([[appendDedupedChunked]]) partition BOTH
-    // trees by (chunk_date, batch_id) — their rewrite must keep the axis
-    // (a batch_id-only dynamic overwrite would write a CONFLICTING flat
-    // layout beside the chunked one); dispatched to the composite twin
-    if (spark.read.parquet(docsPath).columns.contains("chunk_date"))
+    // calendar-chunked bronzes partition BOTH trees by (chunk_date,
+    // batch_id) — their rewrite must keep the axis (a batch_id-only
+    // dynamic overwrite would write a CONFLICTING flat layout beside the
+    // chunked one); dispatched to the composite rewrite
+    if (CubeLog.isChunkedRoot(spark, docsPath))
       return eraseDocsChunked(spark, baseDir, req)
 
     val slim = spark.read.parquet(docsPath).select(col("doc_id"), col("batch_id"))
@@ -434,13 +467,31 @@ object DocStore {
     * landings loses the batch from the index/dedup state forever. */
   def landedSlice(spark: SparkSession, baseDir: String,
       batchId: Long): Option[DataFrame] = {
-    val part = new org.apache.hadoop.fs.Path(s"$baseDir/docs/batch_id=$batchId")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(part)) return None
+    val docs = new org.apache.hadoop.fs.Path(s"$baseDir/docs")
+    val fs = docs.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a chunked bronze files the batch under each of its crawl days; its
+    // rows keep their crawl_date, so the derived landings land chunked too
+    val parents =
+      if (!CubeLog.isChunkedRoot(spark, docs.toString)) Seq(docs)
+      else fs.listStatus(docs).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("chunk_date="))
+        .map(_.getPath)
+    if (!parents.exists(d => fs.exists(new org.apache.hadoop.fs.Path(d, s"batch_id=$batchId"))))
+      return None
     val rows = spark.read.parquet(s"$baseDir/docs")
       .filter(col("batch_id") === batchId)
       .localCheckpoint(eager = true)
     if (rows.isEmpty) None else Some(rows)
+  }
+
+  /** True when a tree holds at least one landed partition of either
+    * layout — the trees whose layout a landing must match. */
+  private def landedTree(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(st => st.isDirectory &&
+      (st.getPath.getName.startsWith("batch_id=") ||
+        st.getPath.getName.startsWith("chunk_date=")))
   }
 
   /** True only when the index holds at least one real batch partition —
@@ -455,9 +506,9 @@ object DocStore {
   }
 
   // ---------------------------------------------------------------------
-  // Calendar-chunked twin (r12): the [[MeterBronze]] retention discipline
-  // on the corpus bronze, closing the layout asymmetry between the two
-  // bronzes. Layout:
+  // Calendar-chunked layout (r12): the [[MeterBronze]] retention
+  // discipline on the corpus bronze, closing the layout asymmetry between
+  // the two bronzes. A bronze landed from docs carrying `crawl_date`:
   //
   //   baseDir/docs/chunk_date=<d>/batch_id=<n>/        corpus text
   //   baseDir/hash_index/chunk_date=<d>/batch_id=<n>/  dedup memory
@@ -474,55 +525,6 @@ object DocStore {
   // re-sight — an O(duplicates) write amplification for a semantics no
   // retention policy asked for).
   // ---------------------------------------------------------------------
-
-  /** [[appendDeduped]] with the calendar axis: `docs` must carry a
-    * `crawl_date` DATE column (the crawl day of each document); landing
-    * partitions both trees by (chunk_date, batch_id). Exactly-once by the
-    * same dynamic-overwrite idiom — a replayed batch rewrites exactly its
-    * own (date, batch) composite partitions. Returns docs landed. */
-  def appendDedupedChunked(spark: SparkSession, docs: DataFrame,
-      baseDir: String, batchId: Long): Long =
-    appendDedupedChunkedLanded(spark, docs, baseDir, batchId)
-      .map(_.count()).getOrElse(0L) // already localCheckpointed — cheap
-
-  /** [[appendDedupedChunked]] returning the landed slice itself (None when
-    * the batch landed nothing) — the chunked streaming loop
-    * ([[graft.streaming.DocStream.startIndexedIngestChunked]]) feeds the
-    * SAME rows to the derived stores, exactly like the flat
-    * [[appendDedupedLanded]]. */
-  def appendDedupedChunkedLanded(spark: SparkSession, docs: DataFrame,
-      baseDir: String, batchId: Long): Option[DataFrame] = {
-    require(docs.columns.contains("crawl_date"),
-      "appendDedupedChunked needs a crawl_date column (the retention axis)")
-    val docsPath = s"$baseDir/docs"
-    val indexPath = s"$baseDir/hash_index"
-    val withHash = docs.filter(col("text").isNotNull)
-      .withColumn("chunk_date", col("crawl_date").cast("date"))
-    val hashed0 =
-      if (withHash.columns.contains("content_hash")) withHash
-      else withHash.withColumn("content_hash", md5(col("text")))
-    val hashed = hashed0
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))))
-      .filter(col("rn") === 1).drop("rn")
-    val fresh0 =
-      if (chunkedExists(spark, indexPath)) {
-        val seen = spark.read.parquet(indexPath).select(col("content_hash"))
-        hashed.join(seen, Seq("content_hash"), "left_anti")
-      } else hashed
-    val fresh = fresh0.withColumn("batch_id", lit(batchId))
-      .localCheckpoint(eager = true)
-    val landed = fresh.count()
-    if (landed == 0L) return None
-    fresh.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("chunk_date", "batch_id").parquet(docsPath)
-    fresh.select(col("content_hash"), col("chunk_date"), col("batch_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("chunk_date", "batch_id").parquet(indexPath)
-    Some(fresh)
-  }
 
   /** Retention: drop every chunk strictly BEFORE `cutoff` (ISO date) from
     * both trees — driver-side directory deletes, zero rows read.
@@ -544,45 +546,6 @@ object DocStore {
         }
     }
     dropped
-  }
-
-  /** [[compactIndex]] for the chunked layout: fold each date's per-batch
-    * index partitions into that date's reserved `batch_id=-1` — the date
-    * axis survives compaction (it IS the retention key), only the
-    * per-batch fragmentation goes. Same snapshot-first concurrency
-    * discipline; idempotent; returns compacted hash count. */
-  def compactIndexChunked(spark: SparkSession, baseDir: String): Long = {
-    val indexPath = s"$baseDir/hash_index"
-    if (!chunkedExists(spark, indexPath)) return 0L
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var total = 0L
-    fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("chunk_date="))
-      .foreach { dateDir =>
-        val snapshot = fs.listStatus(dateDir.getPath)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id=")
-            && st.getPath.getName != "batch_id=-1")
-          .map(_.getPath)
-        if (snapshot.nonEmpty) {
-          val historyDir = new org.apache.hadoop.fs.Path(dateDir.getPath, "batch_id=-1")
-          val foldDirs = (if (fs.exists(historyDir)) snapshot :+ historyDir
-            else snapshot).map(_.toString)
-          val date = dateDir.getPath.getName.stripPrefix("chunk_date=")
-          val folded = spark.read.option("basePath", indexPath)
-            .parquet(foldDirs: _*)
-            .select(col("content_hash")).distinct()
-            .withColumn("chunk_date", lit(date).cast("date"))
-            .withColumn("batch_id", lit(-1L))
-            .localCheckpoint(eager = true)
-          folded.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("chunk_date", "batch_id").parquet(indexPath)
-          snapshot.foreach(dir => fs.delete(dir, true))
-          total += folded.count()
-        }
-      }
-    total
   }
 
   /** Chunked-layout existence: at least one chunk_date= partition holding

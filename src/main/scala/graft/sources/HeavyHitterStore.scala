@@ -141,7 +141,6 @@ object HeavyHitterStore {
     * truncation threshold as cnt (user_id = -1). */
   private[sources] def summarize(s: SparkSession, counts: DataFrame,
       k: Int = K): DataFrame = {
-    graft.plans.TopKPerKeyStrategy.setup(s)
     val topK1 = graft.plans.TopKPerKey(counts,
       keys = Seq("day"), orderBy = Seq(("cnt", true), ("user_id", false)), k = k + 1)
     // rank within the ≤ K+1 surviving rows per day (bounded window)

@@ -48,15 +48,11 @@ import org.apache.spark.sql.functions._
 object IvfPqLog {
 
   /** Land one raw delta epoch (the [[VecStoreLog]] landing verbatim —
-    * same guard, same multi-file sizing). */
+    * same guard, same multi-file sizing, the same calendar-chunked layout
+    * for `embeddings` carrying `crawl_date`: raw delta epochs are
+    * layout-identical across both vector stores). */
   def appendBatch(embeddings: DataFrame, dir: String, batchId: Long): Long =
     VecStoreLog.appendBatch(embeddings, dir, batchId)
-
-  /** [[appendBatch]] with the calendar retention axis (the
-    * [[VecStoreLog.appendBatchChunked]] landing verbatim — raw delta
-    * epochs are layout-identical across both vector stores). */
-  def appendBatchChunked(embeddings: DataFrame, dir: String, batchId: Long): Long =
-    VecStoreLog.appendBatchChunked(embeddings, dir, batchId)
 
   /** Coarse cells the committed generation probes out of
     * ([[Similarity]]'s fixed IVFADC geometry: k = CentroidK = 8 cells,
@@ -251,66 +247,44 @@ object IvfPqLog {
     * generation under the CubeLog crash-safe ordering. `coarseK` defaults
     * to the √n rule over the post-fold corpus ([[coarseKFor]]); the
     * registered queries pin it to the oracle-matched [[CoarseK]] — the
-    * [[VecStoreLog.compact]] convention on the compressed index. */
-  def compact(spark: SparkSession, dir: String,
-      coarseK: Option[Int] = None): Long =
-    CubeLog.compactFrom(spark, dir) { (v, out) =>
-      val base = v.foldedDir.map(f => spark.read.parquet(s"$f/vectors")
-        .select(col("vec_id"), col("label"), col("qv"), col("norm2")))
-      val delta = v.liveBatches.map(_._2).map(p =>
-        VecStore.qn(spark.read.parquet(p)
-          .select(col("vec_id"), col("label"), col("embedding")))
-          .select(col("vec_id"), col("label"), col("qv"), col("norm2")))
-      val all = (base.toSeq ++ delta).reduce(_ unionByName _)
-        .localCheckpoint(eager = true) // the source dirs are swept below
-      val k = coarseK.getOrElse(coarseKFor(all.count()))
-      val (qe, cents, cbRow, _, codes) = Similarity.ivfPqTrainFramesFrom(all, k)
-      landCodebook(spark, dir, out, cents, cbRow)
-      val n = spark.sessionState.conf.numShufflePartitions
-      codes.repartition(n, col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-      // vectors carry their coarse cell and partition by it, so an RTBF
-      // rewrite touches only affected cell dirs on BOTH trees (the cell
-      // IS the bucket — the ErasureStore discipline on the ANN axis)
-      qe.join(codes.select(col("vec_id"), col("cell")), Seq("vec_id"))
-        .repartition(n, col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/vectors")
-    }
-
-  /** Retraining fold for the CALENDAR-CHUNKED layout: identical training
-    * (coarse Lloyd + residual sub-codebooks over base ∪ delta) but both
+    * [[VecStoreLog.compact]] convention on the compressed index. On a
+    * calendar-chunked store training is identical, and both
     * cell-partitioned trees land the retention axis INNER
     * (`codes/cell=K/chunk_date=D/`, `vectors/cell=K/chunk_date=D/`) — the
     * ADC probe prunes on cell exactly as before, while expiring a crawl
     * day is bounded directory deletes on both trees. */
-  def compactChunked(spark: SparkSession, dir: String,
+  def compact(spark: SparkSession, dir: String,
       coarseK: Option[Int] = None): Long =
     CubeLog.compactFrom(spark, dir) { (v, out) =>
-      val base = v.foldedDir.map(f => spark.read.parquet(s"$f/vectors")
-        .select(col("vec_id"), col("label"), col("qv"), col("norm2"),
-          col("chunk_date")))
+      val axis = CubeLog.axis(CubeLog.chunkedStore(spark,
+        v.foldedDir.toSeq ++ v.liveBatches.map(_._2)))
+      val quantized = (Seq("vec_id", "label", "qv", "norm2") ++ axis).map(col)
+      val base = v.foldedDir.map(f =>
+        spark.read.parquet(s"$f/vectors").select(quantized: _*))
       val delta = v.liveBatches.map(_._2).map(p =>
         VecStore.qn(spark.read.parquet(p)
-          .select(col("vec_id"), col("label"), col("embedding"), col("chunk_date")))
-          .select(col("vec_id"), col("label"), col("qv"), col("norm2"),
-            col("chunk_date")))
+          .select((Seq("vec_id", "label", "embedding") ++ axis).map(col): _*))
+          .select(quantized: _*))
       val all = (base.toSeq ++ delta).reduce(_ unionByName _)
         .localCheckpoint(eager = true) // the source dirs are swept below
-      val dates = all.select(col("vec_id"), col("chunk_date"))
       val k = coarseK.getOrElse(coarseKFor(all.count()))
       val (qe, cents, cbRow, _, codes) = Similarity.ivfPqTrainFramesFrom(
         all.select(col("vec_id"), col("label"), col("qv"), col("norm2")), k)
       landCodebook(spark, dir, out, cents, cbRow)
       val n = spark.sessionState.conf.numShufflePartitions
-      codes.join(dates, Seq("vec_id"))
-        .repartition(n, col("cell"), col("chunk_date"))
-        .write.mode("overwrite").partitionBy("cell", "chunk_date")
-        .parquet(s"$out/codes")
-      qe.join(codes.select(col("vec_id"), col("cell")), Seq("vec_id"))
-        .join(dates, Seq("vec_id"))
-        .repartition(n, col("cell"), col("chunk_date"))
-        .write.mode("overwrite").partitionBy("cell", "chunk_date")
-        .parquet(s"$out/vectors")
+      val parts = "cell" +: axis
+      // a chunked store's rows carry their crawl date back from the fold input
+      def dated(df: DataFrame): DataFrame =
+        if (axis.isEmpty) df
+        else df.join(all.select((col("vec_id") +: axis.map(col)): _*), Seq("vec_id"))
+      dated(codes).repartition(n, parts.map(col): _*)
+        .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$out/codes")
+      // vectors carry their coarse cell and partition by it, so an RTBF
+      // rewrite touches only affected cell dirs on BOTH trees (the cell
+      // IS the bucket — the ErasureStore discipline on the ANN axis)
+      dated(qe.join(codes.select(col("vec_id"), col("cell")), Seq("vec_id")))
+        .repartition(n, parts.map(col): _*)
+        .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$out/vectors")
     }
 
   /** Retention on the compressed index: drop every chunk strictly BEFORE
@@ -327,9 +301,9 @@ object IvfPqLog {
     if (!hfs.exists(root)) return 0L
     val v = CubeLog.view(spark, dir)
     (v.foldedDir.toSeq ++ v.liveBatches.map(_._2)).headOption.foreach { r =>
-      require(VecStoreLog.isChunkedRoot(spark, r),
-        s"IVF-PQ store $dir has no retention axis — land through " +
-          "appendBatchChunked to expire by crawl date")
+      require(CubeLog.isChunkedRoot(spark, r),
+        s"IVF-PQ store $dir has no retention axis — land embeddings " +
+          "carrying crawl_date through appendBatch to expire by crawl date")
     }
     // refuse a cutoff that would leave the serving state empty — the
     // committed generation's code tree, or the live epochs of a
@@ -409,7 +383,7 @@ object IvfPqLog {
     v.foldedDir.foreach { f =>
       val hfs = new org.apache.hadoop.fs.Path(f)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (VecStoreLog.isChunkedRoot(spark, f)) {
+      if (CubeLog.isChunkedRoot(spark, f)) {
         // chunked generation: the rewrite unit is the affected
         // (cell, chunk_date) COMPOSITE on BOTH trees (codes and vectors
         // partition identically — same rows, same keys); rewriting whole
@@ -566,10 +540,10 @@ object IvfPqLog {
           graft.ops.Tables.embeddingsParallel(s, d)
             .select(col("vec_id"), col("label"), col("embedding")))
         (0L to 2L).foreach { epoch =>
-          appendBatchChunked(emb.filter(pmod(col("vec_id"), lit(3L)) === epoch),
+          appendBatch(emb.filter(pmod(col("vec_id"), lit(3L)) === epoch),
             dir, epoch)
         }
-        compactChunked(s, dir, Some(CoarseK)) // oracle-pinned geometry
+        compact(s, dir, Some(CoarseK)) // oracle-pinned geometry
         dir
       })
     }

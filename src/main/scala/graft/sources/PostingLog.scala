@@ -186,39 +186,46 @@ object PostingLog {
     * Positions (1-based, sorted) make the index POSITIONAL: phrase and
     * proximity queries answer from probed buckets instead of a corpus
     * scan — the standard Lucene-style posting payload, ~4 B per
-    * occurrence on top of the bare posting. */
-  private def postingRows(docs: DataFrame, nb: Long): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
-        posexplode(col("ws")).as(Seq("pos0", "term")))
-      .select(col("doc_id"), col("dl"), col("term"),
-        (col("pos0") + 1).as("pos"))
+    * occurrence on top of the bare posting. On the chunked layout
+    * (`axis` = `chunk_date`) every row carries its doc's crawl day. */
+  private def postingRows(docs: DataFrame, nb: Long, axis: Seq[String]): DataFrame = {
+    val keys = col("doc_id") +: axis.map(col)
+    val dated =
+      if (axis.isEmpty) docs else docs.withColumn("chunk_date", col("crawl_date").cast("date"))
+    val toks = dated
+      .select(keys :+ TextAnalysis.words(col("text")).as("ws"): _*)
+      .select(keys ++ Seq(size(col("ws")).cast("long").as("dl"),
+        posexplode(col("ws")).as(Seq("pos0", "term"))): _*)
+      .select(keys ++ Seq(col("dl"), col("term"), (col("pos0") + 1).as("pos")): _*)
     toks
-      .groupBy(col("doc_id"), col("dl"), col("term")) // dl is functionally
+      .groupBy(keys ++ Seq(col("dl"), col("term")): _*) // dl is functionally
       // dependent on doc_id — grouping on it is free, carrying it is the point
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("pos"))).as("positions"))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
+      .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl"),
         col("positions"),
-        pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)).as("tb"))
+        pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)).as("tb")) ++
+        axis.map(col): _*)
   }
 
-  /** The epoch's additive stats row, derived FROM its postings — not from
-    * the doc frame — so a doc counts iff it holds ≥ 1 posting. Counting
-    * the doc frame instead would count null-text docs that land zero
-    * postings, and then the erase (which recovers its stats decrement
-    * from the postings being erased) and the fsck recount (which counts
-    * docs over postings) would both drift from the landing permanently. */
-  private def statsRowOf(postings: DataFrame): DataFrame =
+  /** The epoch's additive stats rows (one per crawl day on the chunked
+    * layout, one in all on the flat one), derived FROM its postings — not
+    * from the doc frame — so a doc counts iff it holds ≥ 1 posting.
+    * Counting the doc frame instead would count null-text docs that land
+    * zero postings, and then the erase (which recovers its stats
+    * decrement from the postings being erased) and the fsck recount
+    * (which counts docs over postings) would both drift from the landing
+    * permanently. */
+  private def statsRowOf(postings: DataFrame, axis: Seq[String]): DataFrame =
     postings
-      .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+      .groupBy(axis.map(col) :+ col("doc_id"): _*).agg(max(col("dl")).as("dl"))
+      .groupBy(axis.map(col): _*)
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
-      .select(lit("").as("term"), lit(-1L).as("doc_id"),
+      .select(Seq(lit("").as("term"), lit(-1L).as("doc_id"),
         col("n_docs").as("tf"), col("total_dl").as("dl"),
         array().cast("array<int>").as("positions"),
-        lit(StatsBucket).as("tb"))
+        lit(StatsBucket).as("tb")) ++ axis.map(col): _*)
 
   /** All five data columns of a store row — shared by the fold and the
     * RTBF rewrite so a payload column can never be silently dropped. */
@@ -231,14 +238,18 @@ object PostingLog {
     * `nBuckets` ≤ 0 means the store's landing count (first landings
     * default to [[NBuckets]]); a scale-aware deployment's FIRST landing
     * passes [[bucketsFor]](corpus) and every later landing inherits it
-    * from the sidecar. */
+    * from the sidecar. `docs` carrying a `crawl_date` DATE column land
+    * calendar-chunked (see the layout note below) and the store keeps
+    * that layout ([[CubeLog.requireLayout]]). */
   def appendBatch(docs: DataFrame, dir: String, batchId: Long,
       nBuckets: Long = -1L): Long = {
     val s = docs.sparkSession
+    val axis = CubeLog.axis(CubeLog.carriesCrawlDate(docs))
+    CubeLog.requireLayout(s, "posting store", dir, dataRoots(s, dir), axis.nonEmpty)
     val nb = resolveLandingCount(s, dir, nBuckets)
     if (CubeLog.isFolded(s, dir, batchId)) return 0L
     CubeLog.claimEpoch(s, dir, batchId) // single-writer guard
-    val postings = postingRows(docs, nb)
+    val postings = postingRows(docs, nb, axis)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // an empty epoch (empty micro-batch at stream start, or all-null
@@ -247,9 +258,10 @@ object PostingLog {
       // shouldCompact fan-in bound forever (the DedupLog.appendEpoch guard)
       if (postings.isEmpty) { CubeLog.releaseClaim(s, dir, batchId); return 0L }
       val epochDir = s"$dir/batch_id=$batchId"
-      postings.unionByName(statsRowOf(postings))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("tb"))
-        .write.mode("overwrite").partitionBy("tb")
+      val parts = axis :+ "tb"
+      postings.unionByName(statsRowOf(postings, axis))
+        .repartition(s.sessionState.conf.numShufflePartitions, parts.map(col): _*)
+        .write.mode("overwrite").partitionBy(parts: _*)
         .parquet(epochDir)
       writeNb(s, epochDir, nb) // the layout is self-describing per root
       1L
@@ -264,26 +276,31 @@ object PostingLog {
     * fragment per epoch until the fold rewrites it contiguous. The fold
     * RE-DERIVES `tb` at the store's landing count (`force` re-folds with
     * no live epochs — [[rebucket]]'s one-fold resize), so a store whose
-    * roots were landed at mixed counts unifies here. */
+    * roots were landed at mixed counts unifies here. On the chunked
+    * layout the stats sum PER DATE — the date axis survives compaction
+    * (it IS the retention key). */
   def compact(spark: SparkSession, dir: String, force: Boolean = false): Long = {
     val nb = landingCount(spark, dir)
     CubeLog.compactFrom(spark, dir, force) { (v, out) =>
-      val all = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
-        .filter(hasDataDirs(spark, _)) // a fully-expired fold root folds as zero rows
-        .map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .select(RowCols: _*)
+      // a fully-expired fold root folds as zero rows
+      val roots = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2)).filter(hasDataDirs(spark, _))
+      val axis = CubeLog.axis(CubeLog.chunkedStore(spark, roots))
+      val all = roots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        .select(RowCols ++ axis.map(col): _*)
       val postings = all.filter(col("tb") =!= StatsBucket)
         .withColumn("tb", pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)))
       val stats = all.filter(col("tb") === StatsBucket)
+        .groupBy(axis.map(col): _*)
         .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-        .select(lit("").as("term"), lit(-1L).as("doc_id"),
+        .select(Seq(lit("").as("term"), lit(-1L).as("doc_id"),
           col("tf"), col("dl"), array().cast("array<int>").as("positions"),
-          lit(StatsBucket).as("tb"))
+          lit(StatsBucket).as("tb")) ++ axis.map(col): _*)
+      val parts = axis :+ "tb"
       postings.unionByName(stats)
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("tb"))
+        .repartition(spark.sessionState.conf.numShufflePartitions, parts.map(col): _*)
         // sever lineage: the source epoch dirs are deleted by the cleanup
         .localCheckpoint(eager = true)
-        .write.mode("overwrite").partitionBy("tb").parquet(out)
+        .write.mode("overwrite").partitionBy(parts: _*).parquet(out)
       writeNb(spark, out, nb)
     }
   }
@@ -494,8 +511,7 @@ object PostingLog {
     val v = CubeLog.view(spark, dir)
     // calendar-chunked stores carry the retention axis — their rewrite is
     // date-sliced (a doc's postings live in exactly its crawl chunk)
-    val anyRoot = dataRoots(spark, dir).headOption
-    if (anyRoot.exists(r => spark.read.parquet(r).columns.contains("chunk_date")))
+    if (CubeLog.chunkedStore(spark, dataRoots(spark, dir)))
       return eraseDocsChunked(spark, dir, req)
     var removed = 0L
 
@@ -561,10 +577,11 @@ object PostingLog {
   }
 
   // ---------------------------------------------------------------- //
-  // Calendar-chunked twin (r13): [[DocStore.appendDedupedChunked]]'s
-  // retention discipline on the DERIVED retrieval index — r12 gave the
-  // corpus bronze calendar chunks, but the postings of an expired crawl
-  // day lived on until RTBF'd. Layout per root:
+  // Calendar-chunked layout (r13): [[DocStore]]'s retention discipline on
+  // the DERIVED retrieval index — r12 gave the corpus bronze calendar
+  // chunks, but the postings of an expired crawl day lived on until
+  // RTBF'd. A store landed from docs carrying `crawl_date` keeps, per
+  // root:
   //
   //   batch_id=<N>/chunk_date=<D>/tb=<B>/    live epoch postings
   //   folded_gen=<G>/chunk_date=<D>/tb=<B>/  merged postings
@@ -576,98 +593,6 @@ object PostingLog {
   // decrements the BM25 globals exactly, by construction: each date's
   // stats row lives inside the dropped directory.
   // ---------------------------------------------------------------- //
-
-  /** [[RowCols]] + the retention axis — shared by the chunked fold and
-    * the chunked RTBF rewrite. */
-  private val ChunkCols =
-    Seq("term", "doc_id", "tf", "dl", "positions", "tb", "chunk_date")
-
-  private def postingRowsChunked(docs: DataFrame, nb: Long): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), col("crawl_date").cast("date").as("chunk_date"),
-        TextAnalysis.words(col("text")).as("ws"))
-      .select(col("doc_id"), col("chunk_date"),
-        size(col("ws")).cast("long").as("dl"),
-        posexplode(col("ws")).as(Seq("pos0", "term")))
-      .select(col("doc_id"), col("chunk_date"), col("dl"), col("term"),
-        (col("pos0") + 1).as("pos"))
-    toks
-      .groupBy(col("doc_id"), col("chunk_date"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        col("positions"),
-        pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)).as("tb"),
-        col("chunk_date"))
-  }
-
-  /** Per-DATE additive stats rows of an epoch, from its postings. */
-  private def statsRowsChunkedOf(postings: DataFrame): DataFrame =
-    postings
-      .groupBy(col("chunk_date"), col("doc_id")).agg(max(col("dl")).as("dl"))
-      .groupBy(col("chunk_date"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
-      .select(lit("").as("term"), lit(-1L).as("doc_id"),
-        col("n_docs").as("tf"), col("total_dl").as("dl"),
-        array().cast("array<int>").as("positions"),
-        lit(StatsBucket).as("tb"), col("chunk_date"))
-
-  /** [[appendBatch]] with the calendar axis: `docs` must carry a
-    * `crawl_date` DATE column. Same landing contract (replay overwrite +
-    * watermark guard + empty guard + `_nb` sidecar). */
-  def appendBatchChunked(docs: DataFrame, dir: String, batchId: Long,
-      nBuckets: Long = -1L): Long = {
-    val s = docs.sparkSession
-    require(docs.columns.contains("crawl_date"),
-      "appendBatchChunked needs a crawl_date column (the retention axis)")
-    val nb = resolveLandingCount(s, dir, nBuckets)
-    if (CubeLog.isFolded(s, dir, batchId)) return 0L
-    CubeLog.claimEpoch(s, dir, batchId) // single-writer guard
-    val postings = postingRowsChunked(docs, nb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (postings.isEmpty) { CubeLog.releaseClaim(s, dir, batchId); return 0L }
-      val epochDir = s"$dir/batch_id=$batchId"
-      postings.unionByName(statsRowsChunkedOf(postings))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("chunk_date"), col("tb"))
-        .write.mode("overwrite").partitionBy("chunk_date", "tb")
-        .parquet(epochDir)
-      writeNb(s, epochDir, nb)
-      1L
-    } finally postings.unpersist()
-  }
-
-  /** Fold for the chunked layout: postings merge by union (tb re-derived
-    * at the store's landing count — the [[compact]] unification rule),
-    * stats sum PER DATE — the date axis survives compaction (it IS the
-    * retention key). */
-  def compactChunked(spark: SparkSession, dir: String,
-      force: Boolean = false): Long = {
-    val nb = landingCount(spark, dir)
-    CubeLog.compactFrom(spark, dir, force) { (v, out) =>
-      val all = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
-        .filter(hasDataDirs(spark, _)) // a fully-expired fold root folds as zero rows
-        .map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .select(ChunkCols.map(col): _*)
-      val postings = all.filter(col("tb") =!= StatsBucket)
-        .withColumn("tb", pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)))
-      // per-date stats: SUM the per-epoch rows (additive), one row per date
-      val statsSum = all.filter(col("tb") === StatsBucket)
-        .groupBy(col("chunk_date"))
-        .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-        .select(lit("").as("term"), lit(-1L).as("doc_id"),
-          col("tf"), col("dl"), array().cast("array<int>").as("positions"),
-          lit(StatsBucket).as("tb"), col("chunk_date"))
-      postings.unionByName(statsSum)
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("chunk_date"), col("tb"))
-        .localCheckpoint(eager = true)
-        .write.mode("overwrite").partitionBy("chunk_date", "tb").parquet(out)
-      writeNb(spark, out, nb)
-    }
-  }
 
   /** Resize the store to `newNb` term buckets as ONE FOLD — the resize
     * path [[bucketsFor]]'s doc promised, now code (r14). The bucket key
@@ -687,10 +612,7 @@ object PostingLog {
     * Returns the committed generation. */
   def rebucket(spark: SparkSession, dir: String, newNb: Long): Long = {
     rebucketDeferred(spark, dir, newNb)
-    val roots = dataRoots(spark, dir)
-    val chunked = spark.read.parquet(roots.head).columns.contains("chunk_date")
-    if (chunked) compactChunked(spark, dir, force = true)
-    else compact(spark, dir, force = true)
+    compact(spark, dir, force = true)
   }
 
   /** The FLIP half of [[rebucket]] alone — the streaming-native resize:
@@ -716,19 +638,6 @@ object PostingLog {
     if (cur != newNb) { writeNb(spark, dir, newNb); true } else false
   }
 
-  /** [[appendBatchAuto]] for the chunked layout — same fan-in cadence
-    * bound (a live epoch's read amplification is layout-independent), the
-    * fold is [[compactChunked]] so the retention axis survives. The
-    * chunked streaming loop calls THIS per micro-batch. */
-  def appendBatchChunkedAuto(docs: DataFrame, dir: String, batchId: Long,
-      maxLive: Int = MaxLiveEpochs): Boolean = {
-    val s = docs.sparkSession
-    appendBatchChunked(docs, dir, batchId)
-    val fold = shouldCompact(s, dir, maxLive)
-    if (fold) compactChunked(s, dir)
-    fold
-  }
-
   /** Retention: drop every chunk strictly BEFORE `cutoff` (ISO date) from
     * EVERY root on disk — the committed fold, live epochs, AND
     * grace-retained dirs (retention is a storage policy, it applies to
@@ -746,9 +655,9 @@ object PostingLog {
     // contract): silently dropping zero dirs would let an operator
     // believe data expired when nothing did
     dataRoots(spark, dir).headOption.foreach { r =>
-      require(spark.read.parquet(r).columns.contains("chunk_date"),
-        s"posting store $dir has no retention axis — land through " +
-          "appendBatchChunked to expire by crawl date")
+      require(CubeLog.isChunkedRoot(spark, r),
+        s"posting store $dir has no retention axis — land docs carrying " +
+          "crawl_date through appendBatch to expire by crawl date")
     }
     var dropped = 0L
     hfs.listStatus(root)
@@ -774,7 +683,7 @@ object PostingLog {
     * rewritten minus the requested docs with its stats row corrected,
     * every other date directory byte-identical. Grace dirs purged like
     * every erase. Called through [[eraseDocs]], which dispatches on the
-    * store's schema. */
+    * store's layout. */
   private def eraseDocsChunked(spark: SparkSession, dir: String,
       req: DataFrame): Long = {
     import spark.implicits._
@@ -788,7 +697,7 @@ object PostingLog {
       if (dates.nonEmpty) {
         val cur = spark.read.parquet(root)
           .filter(col("chunk_date").cast("string").isin(dates: _*))
-          .select(ChunkCols.map(col): _*)
+          .select(RowCols :+ col("chunk_date"): _*)
         // snapshot the slice's (chunk_date, tb) composite partitions
         // BEFORE the rewrite (the dynamic overwrite deletes the files this
         // plan reads): a composite whose postings ALL belong to erased
@@ -1290,9 +1199,9 @@ object PostingLog {
           .select(col("doc_id"), col("text"))
           .withColumn("crawl_date", date_add(lit("2026-01-01").cast("date"),
             pmod(col("doc_id"), lit(3L)).cast("int")))
-        appendBatchChunked(docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), dir, 0L)
-        compactChunked(s, dir)
-        appendBatchChunked(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), dir, 1L)
+        appendBatch(docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), dir, 0L)
+        compact(s, dir)
+        appendBatch(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), dir, 1L)
         dir
       })
     }

@@ -124,18 +124,16 @@ object StoreCheck {
     out.toSeq
   }
 
-  /** True iff a root's parquet schema carries the retention axis. */
-  private def rootChunked(spark: SparkSession, root: String): Boolean =
-    spark.read.parquet(root).columns.contains("chunk_date")
-
   /** One store, one retention-axis layout: roots disagreeing on the
     * presence of `chunk_date` mean a flat epoch landed into a chunked
     * store (or vice versa) — the next fold's unionByName dies and expiry
-    * silently misses the flat rows. The landing guards fail loudly now
-    * (r14), but a store landed by older builds needs the fsck to say so. */
+    * silently misses the flat rows. Every landing refuses the mix
+    * ([[CubeLog.requireLayout]]), but a store landed by older builds, or
+    * written behind the landings' back, needs the fsck to say so. Read
+    * off directory names ([[CubeLog.isChunkedRoot]]) — no Spark job. */
   private def axisFindings(spark: SparkSession, roots: Seq[String],
       what: String): Seq[Finding] = {
-    val byAxis = roots.groupBy(rootChunked(spark, _))
+    val byAxis = roots.groupBy(CubeLog.isChunkedRoot(spark, _))
     if (byAxis.size <= 1) Seq.empty
     else Seq(Finding("error", "mixed-retention-axis",
       s"$what mixes calendar-chunked and flat roots " +
@@ -167,7 +165,7 @@ object StoreCheck {
     if (roots.isEmpty) return out.toSeq
     out ++= axisFindings(spark, roots, s"posting store $dir")
     if (out.exists(_.severity == "error")) return out.toSeq
-    val chunked = rootChunked(spark, roots.head)
+    val chunked = CubeLog.isChunkedRoot(spark, roots.head)
     def all(cols: Seq[String]): DataFrame =
       roots.map(r => spark.read.parquet(r).select(cols.map(col): _*))
         .reduce(_ unionByName _)

@@ -91,39 +91,23 @@ object VecStore {
     * is the classic small-files explosion, and the shuffle this spends is
     * tiny against the write it saves. The default `cellK` keeps the
     * registered query's oracle-matched k=16; a scale-aware build passes
-    * [[cellKFor]](corpus count). */
+    * [[cellKFor]](corpus count).
+    *
+    * `embeddings` carrying a `chunk_date` DATE column (a calendar-chunked
+    * [[VecStoreLog]] fold) keep it as the INNER partition under each cell
+    * (`cell=K/chunk_date=D/`) — cell stays OUTER so probes prune
+    * directories exactly like the flat layout, while expiring a crawl day
+    * is ≤ k driver-side directory deletes. Training ignores the axis; a
+    * vector's cell is its nearest centroid either way. */
   def build(embeddings: DataFrame, dir: String, cellK: Int = CellK): Unit = {
-    val qe = qn(embeddings.select(col("vec_id"), col("label"), col("embedding")))
+    val axis = embeddings.columns.filter(_ == "chunk_date").toSeq
+    val qe = qn(embeddings.select((Seq("vec_id", "label", "embedding") ++ axis).map(col): _*))
       .localCheckpoint(eager = false) // feeds training AND assignment
     val cents = Similarity.lloydCentroids(
       qe.select(col("vec_id"), col("qv"), col("norm2")),
       cellK, Similarity.CentroidIters)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/_centroids")
-    appendThrough(qe, Similarity.centsRow(cents), dir)
-  }
-
-  /** [[build]] with the calendar retention axis: `embeddings` carries a
-    * `chunk_date` DATE column that survives assignment and lands as the
-    * INNER partition under each cell (`cell=K/chunk_date=D/`) — cell
-    * stays OUTER so probes prune directories exactly like the flat
-    * layout, while expiring a crawl day is ≤ k driver-side directory
-    * deletes (one per cell holding that day). Training ignores the axis;
-    * a vector's cell is its nearest centroid either way. */
-  private[sources] def buildChunked(embeddings: DataFrame, dir: String,
-      cellK: Int): Unit = {
-    val qe = qn(embeddings.select(col("vec_id"), col("label"), col("embedding"),
-      col("chunk_date")))
-      .localCheckpoint(eager = false) // feeds training AND assignment
-    val cents = Similarity.lloydCentroids(
-      qe.select(col("vec_id"), col("qv"), col("norm2")),
-      cellK, Similarity.CentroidIters)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/_centroids")
-    val n = qe.sparkSession.sessionState.conf.numShufflePartitions
-    Similarity.assignRanked(qe, cents)
-      .select(col("vec_id"), col("label"), col("embedding"), col("chunk_date"),
-        expr("ranked[0].id").as("cell"))
-      .repartition(n, col("cell"), col("chunk_date"))
-      .write.mode("append").partitionBy("cell", "chunk_date").parquet(dir)
+    appendThrough(qe, Similarity.centsRow(cents), dir, axis)
   }
 
   /** Additive append: assign through the STORED centroids (no retrain) and
@@ -136,16 +120,18 @@ object VecStore {
       codebook(spark, dir).packed(spark), dir)
   }
 
-  private def appendThrough(qe: DataFrame, packed: DataFrame, dir: String): Unit = {
+  private def appendThrough(qe: DataFrame, packed: DataFrame, dir: String,
+      axis: Seq[String] = Nil): Unit = {
     // pinned partition count: an un-numbered repartition lets AQE coalesce
     // the tiny shuffle to ONE task, which then creates every cell's
     // parquet file serially — writer setup, not data volume, is the cost
     val n = qe.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = "cell" +: axis
     Similarity.assignRankedPacked(qe, packed)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        expr("ranked[0].id").as("cell"))
-      .repartition(n, col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(dir)
+      .select((Seq("vec_id", "label", "embedding") ++ axis).map(col) :+
+        expr("ranked[0].id").as("cell"): _*)
+      .repartition(n, parts.map(col): _*)
+      .write.mode("append").partitionBy(parts: _*).parquet(dir)
   }
 
   /** The trained codebook on the driver — the arrays of the one packed row

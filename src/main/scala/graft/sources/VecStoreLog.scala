@@ -61,54 +61,23 @@ object VecStoreLog {
     * by many tasks instead of funneling through a single writer. */
   val EpochRowsPerFile = 500000L
 
-  /** True iff a store root carries the calendar retention axis — decided
-    * from DIRECTORY NAMES (two bounded listings, never a partition
-    * discovery pass): epoch roots hold `chunk_date=` children directly,
-    * generation roots hold them under `cell=` (this store) or
-    * `codes/cell=` ([[IvfPqLog]]'s artifact tree). */
-  private[sources] def isChunkedRoot(spark: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(p)) return false
-    def hasDateChild(d: org.apache.hadoop.fs.Path): Boolean =
-      hfs.exists(d) && hfs.listStatus(d).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("chunk_date="))
-    val kids = hfs.listStatus(p).filter(_.isDirectory)
-    def firstCellOf(d: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
-      if (!hfs.exists(d)) None
-      else hfs.listStatus(d).find(st =>
-        st.isDirectory && st.getPath.getName.startsWith("cell=")).map(_.getPath)
-    kids.exists(st => st.getPath.getName.startsWith("chunk_date=")) ||
-      firstCellOf(p).exists(hasDateChild) ||
-      firstCellOf(new org.apache.hadoop.fs.Path(p, "codes")).exists(hasDateChild)
-  }
-
-  /** One store, ONE retention-axis layout (the DedupLog `_sp` discipline
-    * on the axis): mixing a flat epoch into a chunked store — or vice
-    * versa — would break the fold's unionByName and the expiry's
-    * directory contract at a distance; fail loudly at the landing. */
-  private[sources] def requireAxis(spark: SparkSession, dir: String,
-      chunked: Boolean): Unit = {
-    val v = CubeLog.view(spark, dir)
-    (v.foldedDir.toSeq ++ v.liveBatches.map(_._2)).headOption.foreach { r =>
-      val stored = isChunkedRoot(spark, r)
-      require(stored == chunked,
-        s"vector store $dir was landed ${if (stored) "WITH" else "WITHOUT"} " +
-          s"the chunk_date retention axis but this landing is " +
-          s"${if (chunked) "calendar-chunked" else "flat"} — one store keeps " +
-          "one layout; land through the matching append variant")
-    }
-  }
-
   /** Land one delta epoch. Replay-idempotent (overwrite) and
     * folded-epoch-guarded (no-op at or under the commit watermark).
+    * `embeddings` carrying a `crawl_date` DATE column land calendar-
+    * chunked (`batch_id=<N>/chunk_date=<D>/`) and the store then keeps
+    * that layout through every fold ([[CubeLog.requireLayout]]).
     * Returns the rows landed (0 when the watermark guard no-ops). */
   def appendBatch(embeddings: DataFrame, dir: String, batchId: Long,
       rowsPerFile: Long = EpochRowsPerFile): Long = {
-    requireAxis(embeddings.sparkSession, dir, chunked = false)
-    if (CubeLog.isFolded(embeddings.sparkSession, dir, batchId)) return 0L
-    CubeLog.claimEpoch(embeddings.sparkSession, dir, batchId) // single-writer guard
-    val slim = embeddings.select(col("vec_id"), col("label"), col("embedding"))
+    val spark = embeddings.sparkSession
+    val chunked = CubeLog.carriesCrawlDate(embeddings)
+    val v = CubeLog.view(spark, dir)
+    CubeLog.requireLayout(spark, "vector store", dir,
+      v.foldedDir.toSeq ++ v.liveBatches.map(_._2), chunked)
+    if (CubeLog.isFolded(spark, dir, batchId)) return 0L
+    CubeLog.claimEpoch(spark, dir, batchId) // single-writer guard
+    val slim = embeddings.select(Seq(col("vec_id"), col("label"), col("embedding")) ++
+        (if (chunked) Seq(col("crawl_date").cast("date").as("chunk_date")) else Nil): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the count both sizes the write (multi-file above the threshold —
@@ -122,15 +91,22 @@ object VecStoreLog {
       // fan-in forever and an all-empty store would train an empty fold
       if (n == 0L) { // nothing to land: return the claim (no epoch dir
         // will ever commit, so a kept claim only reads as torn in fscks)
-        CubeLog.releaseClaim(embeddings.sparkSession, dir, batchId)
+        CubeLog.releaseClaim(spark, dir, batchId)
         return 0L
       }
       val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-      slim.coalesce(files)
-        .write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+      writeEpoch(slim, files, s"$dir/batch_id=$batchId")
       n
     } finally slim.unpersist()
   }
+
+  /** Whole-epoch overwrite in `files` files; a chunked epoch keeps its
+    * retention axis as the partition directory. */
+  private def writeEpoch(rows: DataFrame, files: Int, path: String): Unit =
+    if (rows.columns.contains("chunk_date"))
+      rows.repartition(files, col("chunk_date"))
+        .write.mode("overwrite").partitionBy("chunk_date").parquet(path)
+    else rows.coalesce(files).write.mode("overwrite").parquet(path)
 
   /** Probe-cost guarantee of the maintained store: the live delta may
     * never push a probe's mean candidate volume past this multiple of
@@ -217,33 +193,26 @@ object VecStoreLog {
     * deployment swaps this projection for the model's output columns;
     * everything downstream (epoch landing, cadence, fold, probe, RTBF)
     * only sees the (vec_id, label, embedding) shape. */
-  def readingEmbeddings(parsed: DataFrame): DataFrame =
-    readingEmbeddingsCore(parsed, withDate = false)
-
-  /** [[readingEmbeddings]] with the retention axis: crawl day = the
-    * READING's own date (content age, never landing wall-clock), so the
-    * chunked landing's partition key is replay-stable. */
-  private[sources] def readingEmbeddingsCore(parsed: DataFrame,
-      withDate: Boolean): DataFrame = {
-    val base = parsed
+  def readingEmbeddings(parsed: DataFrame): DataFrame = {
+    // a parsed frame carrying crawl_date (the reading's own date, so the
+    // chunked landing's partition key is replay-stable) keeps it
+    val dated = if (CubeLog.carriesCrawlDate(parsed)) Seq(col("crawl_date")) else Nil
+    parsed
       .filter(pmod(col("meter_id"), lit(WireEmbeddingStride)) === 0)
-      .select(col("meter_id").cast("long").as("m"),
-        unix_timestamp(col("reading_timestamp")).as("ts_s"),
-        to_date(col("reading_timestamp")).as("crawl_date"))
-    val cols = Seq(
-      (col("m") * lit(10000000000L) + col("ts_s")).as("vec_id"),
-      pmod(col("m"), lit(7)).cast("int").as("label"),
-      expr(s"""transform(sequence(0, ${WireEmbeddingDims - 1}),
-              |  i -> CAST((pmod(xxhash64(m, ts_s, i), 2001) - 1000) / 1000.0
-              |       AS FLOAT))""".stripMargin).as("embedding")) ++
-      (if (withDate) Seq(col("crawl_date")) else Nil)
-    base.select(cols: _*)
+      .select(Seq(col("meter_id").cast("long").as("m"),
+        unix_timestamp(col("reading_timestamp")).as("ts_s")) ++ dated: _*)
+      .select(Seq(
+        (col("m") * lit(10000000000L) + col("ts_s")).as("vec_id"),
+        pmod(col("m"), lit(7)).cast("int").as("label"),
+        expr(s"""transform(sequence(0, ${WireEmbeddingDims - 1}),
+                |  i -> CAST((pmod(xxhash64(m, ts_s, i), 2001) - 1000) / 1000.0
+                |       AS FLOAT))""".stripMargin).as("embedding")) ++ dated: _*)
   }
 
   /** foreachBatch landing hook of the streaming gold loop: derive the
     * wire's embedding side channel, land it as epoch `batchId` (replay-
-    * idempotent + watermark-guarded like every cube landing). Returns
-    * rows landed. The mid-run fold runs BESIDE this (an offline
+    * idempotent + watermark-guarded like every cube landing; chunked when
+    * `parsed` carries `crawl_date`). Returns rows landed. The mid-run fold runs BESIDE this (an offline
     * compactor), never inside it — landings stay train-free by design. */
   def landWireEpoch(parsed: DataFrame, dir: String, batchId: Long): Long =
     appendBatch(readingEmbeddings(parsed), dir, batchId)
@@ -263,15 +232,18 @@ object VecStoreLog {
 
   /** Fold the live delta into a freshly-trained generation. `cellK`
     * defaults to the √n rule over the FULL post-fold corpus; the
-    * registered query pins it to the oracle-matched [[VecStore.CellK]]. */
+    * registered query pins it to the oracle-matched [[VecStore.CellK]].
+    * A calendar-chunked store keeps its retention axis through the fold
+    * (`cell=<K>/chunk_date=<D>/` — cell OUTER so probes prune directories
+    * exactly like the flat store; [[VecStore.build]]). */
   def compact(spark: SparkSession, dir: String,
       cellK: Option[Int] = None): Long =
     CubeLog.compactFrom(spark, dir) { (v, out) =>
-      val base = v.foldedDir.map(f => spark.read.parquet(f)
-        .select(col("vec_id"), col("label"), col("embedding")))
-      val delta = v.liveBatches.map(_._2).map(p => spark.read.parquet(p)
-        .select(col("vec_id"), col("label"), col("embedding")))
-      val all = (base.toSeq ++ delta).reduce(_ unionByName _)
+      val roots = v.foldedDir.toSeq ++ v.liveBatches.map(_._2)
+      val cols = (Seq("vec_id", "label", "embedding") ++
+        CubeLog.axis(CubeLog.chunkedStore(spark, roots))).map(col)
+      val all = roots.map(p => spark.read.parquet(p).select(cols: _*))
+        .reduce(_ unionByName _)
         .localCheckpoint(eager = true) // count + train + assign, then the
       // source dirs are deleted by the cleanup — sever the lineage
       val k = cellK.getOrElse(VecStore.cellKFor(all.count()))
@@ -279,88 +251,21 @@ object VecStoreLog {
     }
 
   // ---------------------------------------------------------------- //
-  // Calendar-chunked twin (r14): the retention axis the TEXT surfaces
-  // earned in r13, on the raw ANN index — expiring a crawl day used to
-  // drop its text, postings, and signatures while its EMBEDDINGS lived
-  // on in both vector indexes until an explicit RTBF id list arrived
-  // (the r13 verdict's top item). Layout per root:
+  // Calendar retention (r14): expiring a crawl day used to drop its text,
+  // postings, and signatures while its EMBEDDINGS lived on in both vector
+  // indexes until an explicit RTBF id list arrived. A chunked store's
+  // layout per root:
   //
-  //   batch_id=<N>/chunk_date=<D>/          live delta epochs
+  //   batch_id=<N>/chunk_date=<D>/             live delta epochs
   //   folded_gen=<G>/cell=<K>/chunk_date=<D>/  the trained generation
   //
-  // cell stays OUTER so probes prune directories exactly like the flat
-  // store; chunk_date INNER makes expiring a day ≤ k directory deletes
-  // per generation (one per cell holding that day) plus one per epoch —
+  // chunk_date INNER makes expiring a day ≤ k directory deletes per
+  // generation (one per cell holding that day) plus one per epoch —
   // TimescaleDB drop_chunks (01_create_schema.sql:98-101) on the ANN
   // axis. The codebook is NOT touched by expiry (k coarse aggregates —
   // no vector is recoverable from it; the next retraining fold re-derives
   // it over the retained corpus anyway, the eraseByIds doctrine).
   // ---------------------------------------------------------------- //
-
-  /** [[appendBatch]] with the calendar axis: `embeddings` must carry a
-    * `crawl_date` DATE column. Same landing contract (replay overwrite,
-    * watermark guard, empty guard, multi-file sizing). */
-  def appendBatchChunked(embeddings: DataFrame, dir: String, batchId: Long,
-      rowsPerFile: Long = EpochRowsPerFile): Long = {
-    require(embeddings.columns.contains("crawl_date"),
-      "appendBatchChunked needs a crawl_date column (the retention axis)")
-    requireAxis(embeddings.sparkSession, dir, chunked = true)
-    if (CubeLog.isFolded(embeddings.sparkSession, dir, batchId)) return 0L
-    CubeLog.claimEpoch(embeddings.sparkSession, dir, batchId) // single-writer guard
-    val slim = embeddings.select(col("vec_id"), col("label"), col("embedding"),
-      col("crawl_date").cast("date").as("chunk_date"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = slim.count()
-      if (n == 0L) { // nothing to land: return the claim (no epoch dir
-        // will ever commit, so a kept claim only reads as torn in fscks)
-        CubeLog.releaseClaim(embeddings.sparkSession, dir, batchId)
-        return 0L
-      }
-      val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-      slim.repartition(files, col("chunk_date"))
-        .write.mode("overwrite").partitionBy("chunk_date")
-        .parquet(s"$dir/batch_id=$batchId")
-      n
-    } finally slim.unpersist()
-  }
-
-  /** Retraining fold for the chunked layout: train over base ∪ delta
-    * exactly like [[compact]], land cells with the date axis INNER — the
-    * retention key survives every fold. */
-  def compactChunked(spark: SparkSession, dir: String,
-      cellK: Option[Int] = None): Long =
-    CubeLog.compactFrom(spark, dir) { (v, out) =>
-      val cols = Seq("vec_id", "label", "embedding", "chunk_date").map(col)
-      val all = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
-        .map(p => spark.read.parquet(p).select(cols: _*))
-        .reduce(_ unionByName _)
-        .localCheckpoint(eager = true) // sever lineage from swept dirs
-      val k = cellK.getOrElse(VecStore.cellKFor(all.count()))
-      VecStore.buildChunked(all, out, k)
-    }
-
-  /** [[appendBatchAuto]] for the chunked layout — the same derived
-    * cadence trigger (probe cost is layout-independent: the delta leg is
-    * brute either way), the fold is [[compactChunked]] so the retention
-    * axis survives. The chunked streaming loop calls THIS. */
-  def appendBatchChunkedAuto(embeddings: DataFrame, dir: String, batchId: Long,
-      probeCells: Int = -1): Boolean = {
-    val s = embeddings.sparkSession
-    appendBatchChunked(embeddings, dir, batchId)
-    val fold = shouldCompact(s, dir, probeCells)
-    if (fold) compactChunked(s, dir)
-    fold
-  }
-
-  /** [[landWireEpoch]] for the chunked layout: the derived embedding side
-    * channel lands with its crawl day = the READING's own date (content
-    * age, not landing wall-clock — the [[graft.streaming.DocStream
-    * .startIndexedIngestChunked]] convention), so a stream-maintained ANN
-    * index can be aged out by [[expireBefore]] like every other surface. */
-  def landWireEpochChunked(parsed: DataFrame, dir: String, batchId: Long): Long =
-    appendBatchChunked(readingEmbeddingsCore(parsed, withDate = true),
-      dir, batchId)
 
   /** Retention: drop every chunk strictly BEFORE `cutoff` (ISO date) from
     * EVERY root on disk — live epochs (`chunk_date=` at the root), the
@@ -378,9 +283,9 @@ object VecStoreLog {
     if (!hfs.exists(root)) return 0L
     val v = CubeLog.view(spark, dir)
     (v.foldedDir.toSeq ++ v.liveBatches.map(_._2)).headOption.foreach { r =>
-      require(isChunkedRoot(spark, r),
-        s"vector store $dir has no retention axis — land through " +
-          "appendBatchChunked to expire by crawl date")
+      require(CubeLog.isChunkedRoot(spark, r),
+        s"vector store $dir has no retention axis — land embeddings " +
+          "carrying crawl_date through appendBatch to expire by crawl date")
     }
     // refuse a cutoff that would leave the serving state empty — the
     // committed generation, or the live epochs of a never-folded store
@@ -539,10 +444,9 @@ object VecStoreLog {
       v: CubeLog.View, req: DataFrame): Long = {
     var removed = 0L
     v.liveBatches.foreach { case (_, path) =>
-      val raw = Tables.cachedParquet(spark, path)
-      val chunked = raw.columns.contains("chunk_date")
+      val raw = Tables.cachedParquet(spark, path) // its schema is read anyway
       val epochCols = Seq("vec_id", "label", "embedding") ++
-        (if (chunked) Seq("chunk_date") else Nil)
+        CubeLog.axis(raw.columns.contains("chunk_date"))
       val epoch = raw.select(epochCols.map(col): _*)
       val hits = epoch.join(req, Seq("vec_id"), "left_semi").count()
       if (hits > 0L) {
@@ -551,13 +455,7 @@ object VecStoreLog {
           .localCheckpoint(eager = true) // sever lineage from the files replaced below
         val files = math.max(1L,
           (kept.count() + EpochRowsPerFile - 1) / EpochRowsPerFile).toInt
-        // whole-epoch overwrite (mode delete-then-write) either way — the
-        // chunked epoch keeps its retention axis through the rewrite
-        if (chunked)
-          kept.repartition(files, col("chunk_date"))
-            .write.mode("overwrite").partitionBy("chunk_date").parquet(path)
-        else
-          kept.coalesce(files).write.mode("overwrite").parquet(path)
+        writeEpoch(kept, files, path) // whole-epoch delete-then-write
       }
     }
     removed
@@ -572,7 +470,7 @@ object VecStoreLog {
     v.foldedDir.foreach { f =>
       val hfs = new org.apache.hadoop.fs.Path(f)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (isChunkedRoot(spark, f)) {
+      if (CubeLog.isChunkedRoot(spark, f)) {
         // chunked generation: the rewrite unit is the affected
         // (cell, chunk_date) COMPOSITE — a vector lives in exactly one, so
         // rewriting whole affected cells would churn every OTHER crawl
@@ -840,9 +738,9 @@ object VecStoreLog {
         // epochs sliced mod 2 so EVERY crawl day spans fold AND live legs:
         // expiry must drop date dirs from the generation's cell tree and
         // from a raw epoch dir in the same sweep
-        appendBatchChunked(emb.filter(pmod(col("vec_id"), lit(2L)) === 0L), dir, 0L)
-        compactChunked(s, dir, cellK = Some(VecStore.CellK))
-        appendBatchChunked(emb.filter(pmod(col("vec_id"), lit(2L)) === 1L), dir, 1L)
+        appendBatch(emb.filter(pmod(col("vec_id"), lit(2L)) === 0L), dir, 0L)
+        compact(s, dir, cellK = Some(VecStore.CellK))
+        appendBatch(emb.filter(pmod(col("vec_id"), lit(2L)) === 1L), dir, 1L)
         dir
       })
     }

@@ -30,9 +30,12 @@ object DocStream {
 
   /** Curate a document stream: hash → watermark → in-horizon exact dedup
     * → policy gate. Works identically on a batch frame (minus the
-    * watermark/dedup state semantics), which the spec exploits. */
+    * watermark/dedup state semantics), which the spec exploits. A
+    * `crawl_date` input column rides through, so dated documents land
+    * calendar-chunked downstream. */
   def curate(docs: DataFrame, watermark: String = "10 minutes"): DataFrame = {
     val g = TextPolicy.gopher(col("text"))
+    val dated = if (graft.sources.CubeLog.carriesCrawlDate(docs)) Seq(col("crawl_date")) else Nil
     docs
       .withColumn("content_hash", md5(col("text")))
       .withWatermark("event_time", watermark)
@@ -47,8 +50,8 @@ object DocStream {
         count(lit(1)).as("n_after_dedup"),
         sum(when(col("pass_gopher"), 0L).otherwise(1L)).as("n_policy_dropped"))
       .filter(col("pass_gopher"))
-      .select(col("doc_id"), col("event_time"), col("lang"), col("source"),
-        col("text"), col("content_hash"), col("n_words"))
+      .select(Seq(col("doc_id"), col("event_time"), col("lang"), col("source"),
+        col("text"), col("content_hash"), col("n_words")) ++ dated: _*)
   }
 
   /** The full online ingestion pipeline: [[curate]] (policy gate +
@@ -98,7 +101,15 @@ object DocStream {
     * are overwrite-idempotent + watermark-guarded, so re-landing
     * identical rows is a no-op in content. foreachBatch retries in order
     * (batch N before N+1), which is the in-order landing contract
-    * [[graft.llm.DedupLog.appendEpoch]] documents. */
+    * [[graft.llm.DedupLog.appendEpoch]] documents.
+    *
+    * A stream of documents carrying a `crawl_date` column (the crawl day
+    * of each document — its EVENT date, not the landing wall-clock, so a
+    * late-arriving document lands in ITS day and replays land in the
+    * chunk they landed in first) lands every surface calendar-chunked
+    * (`chunk_date=`), so [[graft.sources.CorpusRtbf.expireEverywhere]]
+    * can age the streamed corpus out with driver-side deletes; the folds
+    * keep the axis and `landedSlice` repairs from the chunked bronze. */
   def startIndexedIngest(
       docs: org.apache.spark.sql.DataFrame,
       baseDir: String,
@@ -134,62 +145,6 @@ object DocStream {
             val corpusRows = graft.llm.DedupLog.storedDocRows(spark, dedupDir)
             if (graft.llm.Dedup.chooseMaintained(corpusRows, landed.count()))
               graft.llm.DedupLog.appendEpochAuto(landed, dedupDir, batchId)
-            else
-              graft.llm.DedupLog.appendEpochBatchAuto(landed, dedupDir, batchId)
-          }
-        ()
-      }
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
-
-  /** [[startIndexedIngest]] landing the CALENDAR-CHUNKED layouts — the
-    * stream-maintained corpus earns the "retention = directory drop"
-    * story the batch path has ([[graft.sources.DocStore
-    * .appendDedupedChunked]], `PostingLog.appendBatchChunked`,
-    * `DedupLog.appendEpochChunked`): every surface lands under the
-    * document's crawl day (`chunk_date=`), so
-    * [[graft.sources.CorpusRtbf.expireEverywhere]] can age the streamed
-    * corpus out with driver-side deletes. The crawl day is the document's
-    * EVENT date (its crawl timestamp), not the landing wall-clock — a
-    * late-arriving document lands in ITS day, so expiry cuts by content
-    * age, and replays land in the same chunk they landed in first
-    * (exactly-once needs the partition key replay-stable).
-    *
-    * Same layered replay safety as the flat loop: chunked bronze dynamic
-    * overwrite, `landedSlice` crash repair (the chunked docs tree exposes
-    * the same batch_id axis; its `chunk_date` partition column maps back
-    * to `crawl_date` for the derived landings), auto-cadence folds on
-    * both derived stores with the chunked fold so the retention axis
-    * survives compaction, and the measured batch-vs-maintained dedup
-    * regime chooser — the batch regime lands the axis too
-    * ([[graft.llm.DedupLog.appendEpochBatch]]). */
-  def startIndexedIngestChunked(
-      docs: org.apache.spark.sql.DataFrame,
-      baseDir: String,
-      postingDir: String,
-      dedupDir: String,
-      checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger,
-      watermark: String = "10 minutes"): org.apache.spark.sql.streaming.StreamingQuery =
-    curate(docs, watermark).writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val dated = batch.withColumn("crawl_date", to_date(col("event_time")))
-        graft.sources.DocStore
-          .appendDedupedChunkedLanded(batch.sparkSession, dated, baseDir, batchId)
-          .orElse(graft.sources.DocStore
-            .landedSlice(batch.sparkSession, baseDir, batchId)
-            // the crash-repair slice read back from the chunked bronze
-            // carries chunk_date (the partition column); the derived
-            // landings expect the crawl_date input convention
-            .map(_.withColumn("crawl_date", col("chunk_date"))))
-          .foreach { landed =>
-            graft.sources.PostingLog.appendBatchChunkedAuto(landed, postingDir, batchId)
-            val spark = landed.sparkSession
-            val corpusRows = graft.llm.DedupLog.storedDocRows(spark, dedupDir)
-            if (graft.llm.Dedup.chooseMaintained(corpusRows, landed.count()))
-              graft.llm.DedupLog.appendEpochChunkedAuto(landed, dedupDir, batchId)
             else
               graft.llm.DedupLog.appendEpochBatchAuto(landed, dedupDir, batchId)
           }

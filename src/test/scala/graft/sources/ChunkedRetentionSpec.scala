@@ -35,12 +35,12 @@ class ChunkedRetentionSpec extends SparkSpec {
     val docs = datedDocs.localCheckpoint(eager = true)
     val dir = java.nio.file.Files.createTempDirectory("posting_chunk_").toString + "/idx"
     (0L to 1L).foreach { e =>
-      PostingLog.appendBatchChunked(docs.filter(pmod($"doc_id", lit(2L)) === e), dir, e)
+      PostingLog.appendBatch(docs.filter(pmod($"doc_id", lit(2L)) === e), dir, e)
     }
-    PostingLog.compactChunked(spark, dir)
+    PostingLog.compact(spark, dir)
     // one more live epoch: re-landing nothing new is not the point here —
     // use a disjoint slice so the live epoch carries all three dates too
-    PostingLog.appendBatchChunked(
+    PostingLog.appendBatch(
       docs.select(($"doc_id" + 100000L).as("doc_id"), $"text", $"crawl_date"), dir, 2L)
 
     def directTruth(surviving: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -128,11 +128,11 @@ class ChunkedRetentionSpec extends SparkSpec {
     val docs = datedDocs.localCheckpoint(eager = true)
     val dir = java.nio.file.Files.createTempDirectory("dedup_chunk_").toString + "/st"
     (0L to 1L).foreach { e =>
-      graft.llm.DedupLog.appendEpochChunked(
+      graft.llm.DedupLog.appendEpoch(
         docs.filter(pmod($"doc_id", lit(2L)) === e), dir, e)
     }
     graft.llm.DedupLog.compact(spark, dir)
-    graft.llm.DedupLog.appendEpochChunked(
+    graft.llm.DedupLog.appendEpoch(
       docs.select(($"doc_id" + 100000L).as("doc_id"), $"text", $"crawl_date"), dir, 2L)
 
     // batch truth via a fresh one-epoch store (a single landing's pair

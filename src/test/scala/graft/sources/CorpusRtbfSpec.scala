@@ -111,19 +111,19 @@ class CorpusRtbfSpec extends SparkSpec {
 
     // all five surfaces land CHUNKED on one crawl calendar
     (0L to 1L).foreach { e =>
-      DocStore.appendDedupedChunkedLanded(spark,
+      DocStore.appendDedupedLanded(spark,
         docs.filter(pmod($"doc_id", lit(2L)) === e), bronze, e)
         .foreach { landed =>
-          PostingLog.appendBatchChunked(
+          PostingLog.appendBatch(
             landed.withColumn("crawl_date", $"chunk_date"), postings, e)
-          graft.llm.DedupLog.appendEpochChunked(
+          graft.llm.DedupLog.appendEpoch(
             landed.withColumn("crawl_date", $"chunk_date"), dedup, e)
         }
-      VecStoreLog.appendBatchChunked(emb.filter(pmod($"vec_id", lit(2L)) === e), vec, e)
-      IvfPqLog.appendBatchChunked(emb.filter(pmod($"vec_id", lit(2L)) === e), ivfpq, e)
+      VecStoreLog.appendBatch(emb.filter(pmod($"vec_id", lit(2L)) === e), vec, e)
+      IvfPqLog.appendBatch(emb.filter(pmod($"vec_id", lit(2L)) === e), ivfpq, e)
     }
-    VecStoreLog.compactChunked(spark, vec, cellK = Some(VecStore.CellK))
-    IvfPqLog.compactChunked(spark, ivfpq)
+    VecStoreLog.compact(spark, vec, cellK = Some(VecStore.CellK))
+    IvfPqLog.compact(spark, ivfpq)
 
     def fsckAll(): Unit = {
       val findings =

@@ -126,8 +126,8 @@ class RebucketSpec extends SparkSpec {
         pmod($"doc_id", lit(2L)).cast("int")))
       .localCheckpoint(eager = true)
     val dir = Files.createTempDirectory("rebucket_chunked_").toString + "/idx"
-    PostingLog.appendBatchChunked(dated, dir, 0L, nBuckets = 32L)
-    PostingLog.compactChunked(spark, dir)
+    PostingLog.appendBatch(dated, dir, 0L, nBuckets = 32L)
+    PostingLog.compact(spark, dir)
     assert(PostingLog.rootNBuckets(spark,
       CubeLog.view(spark, dir).foldedDir.get) === Some(32L))
     val before = PostingLog.booleanAnd(spark, dir, terms)

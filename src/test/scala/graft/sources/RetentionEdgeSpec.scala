@@ -69,8 +69,8 @@ class RetentionEdgeSpec extends SparkSpec {
       .toDF("doc_id", "text", "d")
       .withColumn("crawl_date", col("d").cast("date")).drop("d")
     val dir = Files.createTempDirectory("posting_comp_").toString + "/idx"
-    PostingLog.appendBatchChunked(docs, dir, 0L)
-    PostingLog.compactChunked(spark, dir)
+    PostingLog.appendBatch(docs, dir, 0L)
+    PostingLog.compact(spark, dir)
 
     // erase doc 1: the ONLY holder of term t1 on 2026-01-01 — its
     // composite (2026-01-01, tb=b1) empties while the date keeps t2's
@@ -104,9 +104,9 @@ class RetentionEdgeSpec extends SparkSpec {
       .localCheckpoint(eager = true)
     val dir = Files.createTempDirectory("posting_expfold_").toString + "/idx"
     // fold holds ONLY day 1; the live epoch holds ONLY day 2
-    PostingLog.appendBatchChunked(docs.filter($"crawl_date" === lit("2026-01-01").cast("date")), dir, 0L)
-    PostingLog.compactChunked(spark, dir)
-    PostingLog.appendBatchChunked(docs.filter($"crawl_date" === lit("2026-01-02").cast("date")), dir, 1L)
+    PostingLog.appendBatch(docs.filter($"crawl_date" === lit("2026-01-01").cast("date")), dir, 0L)
+    PostingLog.compact(spark, dir)
+    PostingLog.appendBatch(docs.filter($"crawl_date" === lit("2026-01-02").cast("date")), dir, 1L)
 
     assert(PostingLog.expireBefore(spark, dir, "2026-01-02") > 0L)
     // the committed fold is now _SUCCESS-only — probes must answer from
@@ -117,7 +117,7 @@ class RetentionEdgeSpec extends SparkSpec {
       .agg(count(lit(1)), sum($"dl")).as[(Long, Long)].head()
     assert(PostingLog.stats(spark, dir).as[(Long, Long)].head() === expected)
     // folds still run over the surviving legs
-    PostingLog.compactChunked(spark, dir)
+    PostingLog.compact(spark, dir)
     assert(PostingLog.stats(spark, dir).as[(Long, Long)].head() === expected)
     // expire EVERYTHING: the store is empty and says so loudly
     assert(PostingLog.expireBefore(spark, dir, "2026-01-03") > 0L)
@@ -137,7 +137,7 @@ class RetentionEdgeSpec extends SparkSpec {
     // batch-regime landing WITH the axis, incremental landing beside it —
     // the regimes interleave on one chunked layout
     graft.llm.DedupLog.appendEpochBatch(docs.filter(pmod($"doc_id", lit(2L)) === 0L), dir, 0L)
-    graft.llm.DedupLog.appendEpochChunked(docs.filter(pmod($"doc_id", lit(2L)) === 1L), dir, 1L)
+    graft.llm.DedupLog.appendEpoch(docs.filter(pmod($"doc_id", lit(2L)) === 1L), dir, 1L)
     graft.llm.DedupLog.compact(spark, dir)
     // expiry works — the batch-regime epoch carried its dates
     graft.llm.DedupLog.expireBefore(spark, dir, "2026-01-02")
@@ -159,7 +159,7 @@ class RetentionEdgeSpec extends SparkSpec {
     val flatDir = Files.createTempDirectory("dedup_flat_").toString + "/st"
     graft.llm.DedupLog.appendEpoch(docs.select($"doc_id", $"text").limit(50), flatDir, 0L)
     val exChunk = intercept[IllegalArgumentException] {
-      graft.llm.DedupLog.appendEpochChunked(docs.limit(50), flatDir, 1L)
+      graft.llm.DedupLog.appendEpoch(docs.limit(50), flatDir, 1L)
     }
     assert(exChunk.getMessage.contains("one store keeps one layout"))
   }
@@ -254,7 +254,7 @@ class RetentionEdgeSpec extends SparkSpec {
       graft.ops.Tables.embeddingsParallel(spark, sf0001)
         .select($"vec_id", $"label", $"embedding").limit(300))
     val dir = Files.createTempDirectory("vec_nofold_").toString + "/st"
-    VecStoreLog.appendBatchChunked(dated, dir, 0L)
+    VecStoreLog.appendBatch(dated, dir, 0L)
     val ex = intercept[IllegalArgumentException] {
       VecStoreLog.expireBefore(spark, dir, "2027-01-01")
     }
@@ -265,7 +265,7 @@ class RetentionEdgeSpec extends SparkSpec {
       .filter($"chunk_date" < lit("2026-01-02").cast("date")).count() === 0L)
 
     val pq = Files.createTempDirectory("ivfpq_nofold_").toString + "/st"
-    IvfPqLog.appendBatchChunked(dated, pq, 0L)
+    IvfPqLog.appendBatch(dated, pq, 0L)
     val exPq = intercept[IllegalArgumentException] {
       IvfPqLog.expireBefore(spark, pq, "2027-01-01")
     }

@@ -34,9 +34,7 @@ class SingleWriterSpec extends SparkSpec {
       val rows =
         if (chunked) VecStoreLog.withCrawlDates(emb)
         else emb
-      def landHere(): Long =
-        if (chunked) VecStoreLog.appendBatchChunked(rows, dir, 0L)
-        else VecStoreLog.appendBatch(rows, dir, 0L)
+      def landHere(): Long = VecStoreLog.appendBatch(rows, dir, 0L)
 
       // foreign writer A claims and is mid-write (no data yet); THIS
       // job's landing must fail loudly, not interleave

@@ -111,8 +111,8 @@ class StoreCheckSpec extends SparkSpec {
       .select($"doc_id", $"text")
       .withColumn("crawl_date", date_add(lit("2026-01-01").cast("date"),
         pmod($"doc_id", lit(2L)).cast("int")))
-    PostingLog.appendBatchChunked(docs, dir, 0L)
-    PostingLog.compactChunked(spark, dir)
+    PostingLog.appendBatch(docs, dir, 0L)
+    PostingLog.compact(spark, dir)
     assert(errorsOf(StoreCheck.checkPostingLog(spark, dir)).isEmpty)
 
     // MOVE one populated tb dir from day 1 to day 2 (where that bucket is
@@ -133,7 +133,9 @@ class StoreCheckSpec extends SparkSpec {
 
     // a FLAT epoch dir inside the chunked store: the mixed-axis error
     val flatDocs = docs.select(($"doc_id" + 700000L).as("doc_id"), $"text")
-    // bypass the landing guard by writing the epoch shape directly
+    // every landing refuses a flat epoch into this chunked store, so land
+    // it in a scratch store and move the epoch dir in: the fsck must flag
+    // a store mixed behind the landings' back
     val flatDir = java.nio.file.Files.createTempDirectory("fsck_flat_src_").toString + "/idx"
     PostingLog.appendBatch(flatDocs.limit(50), flatDir, 0L)
     val flatEpoch = new java.io.File(flatDir, "batch_id=0")

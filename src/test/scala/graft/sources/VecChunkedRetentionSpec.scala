@@ -58,16 +58,16 @@ class VecChunkedRetentionSpec extends SparkSpec {
     Seq(0L, 1L).foreach { e =>
       VecStoreLog.appendBatch(dated.filter(pmod($"vec_id", lit(2L)) === e)
         .drop("crawl_date"), flat, e)
-      VecStoreLog.appendBatchChunked(
+      VecStoreLog.appendBatch(
         dated.filter(pmod($"vec_id", lit(2L)) === e), chunk, e)
     }
     VecStoreLog.compact(spark, flat, cellK = Some(VecStore.CellK))
-    VecStoreLog.compactChunked(spark, chunk, cellK = Some(VecStore.CellK))
+    VecStoreLog.compact(spark, chunk, cellK = Some(VecStore.CellK))
     assert(probeSet(chunk) === probeSet(flat),
       "the retention axis is layout, not semantics")
 
     // live leg: land one more epoch on the chunked store only
-    VecStoreLog.appendBatchChunked(
+    VecStoreLog.appendBatch(
       dated.select(($"vec_id" + 1000000L).as("vec_id"), $"label", $"embedding",
         $"crawl_date"), chunk, 2L)
 
@@ -99,7 +99,7 @@ class VecChunkedRetentionSpec extends SparkSpec {
     }
     assert(exMix.getMessage.contains("one store keeps one layout"))
     val exMix2 = intercept[IllegalArgumentException] {
-      VecStoreLog.appendBatchChunked(dated.limit(10), flat, 9L)
+      VecStoreLog.appendBatch(dated.limit(10), flat, 9L)
     }
     assert(exMix2.getMessage.contains("one store keeps one layout"))
 
@@ -131,25 +131,25 @@ class VecChunkedRetentionSpec extends SparkSpec {
   }
 
   test("chunked auto-cadence landings ≡ one chunked batch fold on both stores; the wire side channel carries its reading's date") {
-    // auto-cadence drive: epochs land through the *ChunkedAuto variants,
+    // auto-cadence drive: dated epochs land through appendBatchAuto,
     // folds fire at each store's own derived trigger — end state must
     // answer exactly like a single chunked batch build of the same corpus
     val queries = emb.filter($"vec_id" % 50 === 0).select($"vec_id", $"embedding")
     val auto = Files.createTempDirectory("vec_chunk_auto_").toString + "/st"
     val batch = Files.createTempDirectory("vec_chunk_batch_").toString + "/st"
     (0L to 3L).foreach { e =>
-      VecStoreLog.appendBatchChunkedAuto(
+      VecStoreLog.appendBatchAuto(
         dated.filter(pmod($"vec_id", lit(4L)) === e), auto, e)
     }
     // the auto path must have folded at least once (first landing folds:
     // a store with no generation cannot answer probes at all)
     assert(CubeLog.view(spark, auto).gen >= 1L)
-    VecStoreLog.appendBatchChunked(dated, batch, 0L)
-    VecStoreLog.compactChunked(spark, batch, cellK = None)
+    VecStoreLog.appendBatch(dated, batch, 0L)
+    VecStoreLog.compact(spark, batch, cellK = None)
     // compare at the same trained k: refold the auto store over the full
     // corpus (cellKFor(n) both sides) — training is deterministic, so the
     // two stores answer identically
-    VecStoreLog.compactChunked(spark, auto, cellK = None)
+    VecStoreLog.compact(spark, auto, cellK = None)
     def probeSet(dir: String) =
       VecStoreLog.probeTopK(spark, dir, queries, VecStore.ProbeCells)
         .select($"query_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
@@ -168,7 +168,8 @@ class VecChunkedRetentionSpec extends SparkSpec {
       (33, java.sql.Timestamp.valueOf("2026-03-02 12:00:00"))) // stride miss
       .toDF("meter_id", "reading_timestamp")
     val wireDir = Files.createTempDirectory("vec_wire_chunk_").toString + "/st"
-    assert(VecStoreLog.landWireEpochChunked(parsed, wireDir, 0L) === 2L)
+    assert(VecStoreLog.landWireEpoch(
+      parsed.withColumn("crawl_date", to_date($"reading_timestamp")), wireDir, 0L) === 2L)
     val landed = spark.read.parquet(s"$wireDir/batch_id=0")
       .select($"vec_id", $"chunk_date".cast("string")).as[(Long, String)]
       .collect().toMap
@@ -187,11 +188,11 @@ class VecChunkedRetentionSpec extends SparkSpec {
     (0L to 2L).foreach { e =>
       IvfPqLog.appendBatch(dated.filter(pmod($"vec_id", lit(3L)) === e)
         .drop("crawl_date"), flat, e)
-      IvfPqLog.appendBatchChunked(
+      IvfPqLog.appendBatch(
         dated.filter(pmod($"vec_id", lit(3L)) === e), chunk, e)
     }
     IvfPqLog.compact(spark, flat)
-    IvfPqLog.compactChunked(spark, chunk)
+    IvfPqLog.compact(spark, chunk)
     assert(probeSet(chunk) === probeSet(flat))
 
     // expiry hits codes AND vectors trees (+ grace), refuses the axis-less

@@ -206,9 +206,9 @@ class VecStoreLogSpec extends SparkSpec {
 
     val chunked = java.nio.file.Files.createTempDirectory("vlog_local_ch_").toString + "/idx"
     val dated = VecStoreLog.withCrawlDates(part)
-    VecStoreLog.appendBatchChunked(dated.filter(pmod($"vec_id", lit(2L)) === 0L), chunked, 0L)
-    VecStoreLog.compactChunked(spark, chunked, Some(VecStore.CellK))
-    VecStoreLog.appendBatchChunked(dated.filter(pmod($"vec_id", lit(2L)) === 1L), chunked, 1L)
+    VecStoreLog.appendBatch(dated.filter(pmod($"vec_id", lit(2L)) === 0L), chunked, 0L)
+    VecStoreLog.compact(spark, chunked, Some(VecStore.CellK))
+    VecStoreLog.appendBatch(dated.filter(pmod($"vec_id", lit(2L)) === 1L), chunked, 1L)
     agree("chunked, one live epoch", chunked)
 
     // the same path deleted and re-created over other vectors: a new

@@ -319,8 +319,9 @@ class DocStreamSpec extends SparkSpec {
     val byDay = docs.groupBy(_._1 % 3).toSeq.sortBy(_._1).map(_._2.sortBy(_._1))
 
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, String, String)]
-    val q = DocStream.startIndexedIngestChunked(
-      mem.toDF().toDF("doc_id", "event_time", "lang", "source", "text"),
+    val q = DocStream.startIndexedIngest(
+      mem.toDF().toDF("doc_id", "event_time", "lang", "source", "text")
+        .withColumn("crawl_date", to_date(col("event_time"))),
       s"$dir/store", s"$dir/postings", s"$dir/dedup", s"$dir/ckpt",
       org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {
@@ -348,7 +349,7 @@ class DocStreamSpec extends SparkSpec {
     // stream-built chunked posting store ≡ a batch-built chunked store
     // over the same landed corpus (one epoch, same layout)
     val batchPost = java.nio.file.Files.createTempDirectory("chunked_batch_post").toString + "/idx"
-    graft.sources.PostingLog.appendBatchChunked(
+    graft.sources.PostingLog.appendBatch(
       spark.read.parquet(s"$dir/store/docs")
         .select(col("doc_id"), col("text"), col("chunk_date").as("crawl_date")),
       batchPost, 0L)
