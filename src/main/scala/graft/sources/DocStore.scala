@@ -528,10 +528,19 @@ object DocStore {
 
   /** Retention: drop every chunk strictly BEFORE `cutoff` (ISO date) from
     * both trees — driver-side directory deletes, zero rows read.
-    * Idempotent; returns the number of date chunks dropped. */
+    * Idempotent; returns the number of date chunks dropped (0 for a bronze
+    * with nothing landed). A bronze landed flat fails, as every store
+    * without the retention axis does. */
   def expireBefore(spark: SparkSession, baseDir: String, cutoff: String): Long = {
     require(cutoff.matches("\\d{4}-\\d{2}-\\d{2}"),
       s"cutoff must be an ISO date: $cutoff")
+    // dropping zero dirs from a flat bronze would let an operator believe
+    // data expired when nothing did
+    val docsPath = s"$baseDir/docs"
+    if (landedTree(spark, docsPath))
+      require(CubeLog.isChunkedRoot(spark, docsPath),
+        s"bronze $baseDir has no retention axis — land docs carrying " +
+          "crawl_date through appendDeduped to expire by crawl date")
     var dropped = 0L
     Seq(s"$baseDir/docs", s"$baseDir/hash_index").foreach { root =>
       val p = new org.apache.hadoop.fs.Path(root)

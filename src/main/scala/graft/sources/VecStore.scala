@@ -5,12 +5,22 @@ import graft.GraftQuery.q
 import graft.llm.Similarity
 import graft.ops.Tables
 import graft.functions.{CosRankCells, FixedPointDotMulti}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Persisted ANN index layout on TRAINED IVF coarse cells: embeddings are
   * PHYSICALLY partitioned by their nearest Lloyd-trained centroid, with
@@ -162,8 +172,7 @@ object VecStore {
       new GenericArrayData(vs.map(v => new GenericArrayData(v): Any))
 
     /** A fixed-point vector's squared norm ([[qn]]'s `norm2`). */
-    def selfDot(v: Array[Long]): Long =
-      FixedPointDotMulti.compute(new GenericArrayData(v), nested(Array(v))).getLong(0)
+    def selfDot(v: Array[Long]): Long = dot(v, v)
 
     def apply(cents: Seq[(Long, Seq[Long])]): Codebook = {
       val sorted = cents.sortBy(_._1)
@@ -174,36 +183,54 @@ object VecStore {
 
   /** The k-row trained codebook stored beside the index at
     * `dir/_centroids`, read on the driver straight off its parquet data
-    * file(s): no Spark job, and no Spark file index (which treats the
-    * `_centroids` leaf itself as hidden and warns on every read). The
-    * reader takes the session's Hadoop conf (a fresh one would re-parse
-    * the Hadoop XML defaults on every probe). */
+    * file(s) ([[readOnDriver]]): no Spark job, and no Spark file index
+    * (which treats the `_centroids` leaf itself as hidden and warns on
+    * every read). */
   private[sources] def codebook(spark: SparkSession, dir: String): Codebook = {
-    import org.apache.parquet.hadoop.ParquetFileReader
+    val cents = new Path(s"$dir/_centroids")
+    val files = dataFiles(cents.getFileSystem(spark.sparkContext.hadoopConfiguration), cents)
+    Codebook(readOnDriver(spark, files) { (_, records) =>
+      records.map { g =>
+        // a parquet LIST: one repeated group holding one element each
+        val cqv = g.getGroup("cqv", 0)
+        (g.getLong("c_id", 0), Seq.tabulate(cqv.getFieldRepetitionCount(0))(
+          i => cqv.getGroup(0, i).getLong(0, 0)))
+      }.toVector
+    }.flatten)
+  }
+
+  /** The parquet data files under `dir`, in name order, descending into
+    * partition directories; names starting with `_` or `.` (`_SUCCESS`,
+    * checksums, `_centroids`) are skipped as Spark's file index skips
+    * them. */
+  private def dataFiles(hfs: FileSystem, dir: Path): Seq[FileStatus] =
+    hfs.listStatus(dir).toSeq
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .flatMap(st => if (st.isDirectory) dataFiles(hfs, st.getPath) else Seq(st))
+
+  /** One value per parquet file of `files`, read on the driver through
+    * parquet-hadoop's record API: `read` gets the file's footer and its
+    * records, and must consume the records before it returns. The reader
+    * takes the session's Hadoop conf (a fresh one would re-parse the
+    * Hadoop XML defaults on every probe) and the listed status (no extra
+    * stat per file). */
+  private def readOnDriver[T](spark: SparkSession, files: Seq[FileStatus])(
+      read: (FileMetaData, Iterator[Group]) => T): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val cents = new org.apache.hadoop.fs.Path(s"$dir/_centroids")
-    val files = cents.getFileSystem(conf).listStatus(cents).toSeq.map(_.getPath)
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-    Codebook(files.flatMap { path =>
-      val reader = ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
-        org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+    files.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath).build())
       try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
-        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
-          val rows = io.getRecordReader(rg,
-            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
-          Iterator.fill(rg.getRowCount.toInt)(rows.read())
-        }.map { g =>
-          // a parquet LIST: one repeated group holding one element each
-          val cqv = g.getGroup("cqv", 0)
-          (g.getLong("c_id", 0), Seq.tabulate(cqv.getFieldRepetitionCount(0))(
-            i => cqv.getGroup(0, i).getLong(0, 0)))
-        }.toVector
+        val meta = reader.getFooter.getFileMetaData
+        val io = new ColumnIOFactory().getColumnIO(meta.getSchema)
+        read(meta, Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { rg =>
+            val rows = io.getRecordReader(rg, new GroupRecordConverter(meta.getSchema))
+            Iterator.fill(rg.getRowCount.toInt)(rows.read())
+          })
       } finally reader.close()
-    })
+    }
   }
 
   /** Vectors in one cell of the index — a partition-pruned scan (the
@@ -353,66 +380,59 @@ object VecStore {
   /** Top-k probe set THROUGH the disk layout (shared by the registered
     * query and the scale-measurement runner): queries rank the STORED
     * codebook and probe their top `probeCells` cells; only the probed
-    * `cell=` directories are read (see [[probeScored]] for the two plans). */
+    * `cell=` directories are read (see [[probeRanked]] for the two plans). */
   def probeTopK(s: SparkSession, dir: String, queryEmbeddings: DataFrame,
       probeCells: Int, k: Int = 5): DataFrame =
-    rankTopK(probeScored(s, dir, queryEmbeddings, probeCells), k)
+    probeRanked(s, dir, queryEmbeddings, probeCells, k)
 
-  /** The probe's SCORED candidate frame (query_id, vec_id, label, cell =
-    * query's own cell, cosine) before ranking: the generation at `dir`
-    * scored in each query's top `probeCells` cells, plus every vector of
-    * the live epochs `deltaDirs` brute-scored ([[VecStoreLog]]'s delta
-    * leg). The codebook is read once, on the driver ([[codebook]]). Two
-    * plans, one arithmetic:
-    *
-    *  - **driver-planned**, when the query frame is one row already on
-    *    the driver ([[localQuery]]): the query's cells are ranked there,
-    *    the generation is read under a static `cell IN (…)` partition
-    *    filter, and the query scores as a literal — no codebook scan, no
-    *    dynamic-pruning subquery;
-    *  - **distributed** otherwise: the packed codebook crossJoins the
-    *    queries, and the cell equi-join against the broadcast probe set
-    *    prunes the generation's cells dynamically.
-    *
-    * Both quantize through [[qn]] and rank cells through
-    * [[graft.functions.FixedPointDotMulti]] and
-    * [[graft.functions.CosRankCells]], so candidates, cosines and cells
-    * agree bit for bit (VecStoreLogSpec pins it). */
-  private[sources] def probeScored(s: SparkSession, dir: String,
-      queryEmbeddings: DataFrame, probeCells: Int,
+  /** Probed bytes (data files of the probed cells plus the live epochs) at
+    * or under which a one-query probe is served on the driver. Sized by
+    * measurement on a 4-core host (CHANGES.md): the driver read, scored and
+    * ranked 4.2 MB of 64-dim vectors in 0.62 s with a C1-only JIT (0.25 s
+    * with C2), about the distributed plan's fixed cost (0.8–1.0 s, resp.
+    * 0.55–0.8 s, for its smallest probe); the driver's time grows about
+    * 0.14 s (0.05 s) per MB, the distributed plan's fixed cost does not. */
+  private[sources] val DriverProbeMaxBytes: Long = 4L << 20
+
+  /** The gate [[probeRanked]] applies to a one-query probe's probed bytes. */
+  private[sources] def servedOnDriver(probedBytes: Long): Boolean =
+    probedBytes <= DriverProbeMaxBytes
+
+  /** The top `k` per query over the generation at `dir` — each query's top
+    * `probeCells` cells — plus every vector of the live epochs `deltaDirs`
+    * ([[VecStoreLog]]'s delta leg), with the codebook read once on the
+    * driver. Two plans, one arithmetic ([[VecStoreLog.probeTopK]] tells
+    * them apart): [[onDriver]] for a one-row local frame under the byte
+    * gate, else the distributed [[probeScored]] + [[rankTopK]]. */
+  private[sources] def probeRanked(s: SparkSession, dir: String,
+      queryEmbeddings: DataFrame, probeCells: Int, k: Int,
       deltaDirs: Seq[String] = Nil): DataFrame = {
     require(probeCells > 0, s"a probe reads at least one cell, got $probeCells")
     val book = codebook(s, dir)
-    val stored = Tables.cachedParquet(s, dir)
-    val live = if (deltaDirs.isEmpty) None else Some(Tables.cachedParquet(s, deltaDirs: _*))
-    localQuery(queryEmbeddings) match {
-      case Some(q) =>
-        // the query's vector, norm and cell are literals, so each leg is
-        // one scan-filter-project
-        val ranked = book.rank(q.qv, q.norm2)
-        val id = lit(q.id).cast(queryEmbeddings.schema("vec_id").dataType)
-        def scoredAgainst(side: DataFrame, keep: Column): DataFrame =
-          side.where(keep && col("vec_id") =!= id)
-            .select(id.as("query_id"), col("vec_id"), col("label"),
-              lit(ranked.head).as("cell"),
-              cosine(typedLit(q.qv.toSeq), lit(q.norm2), quantExpr,
-                graft.functions.FixedPointDot(quantExpr, quantExpr)))
-        (scoredAgainst(stored, col("cell").isin(ranked.take(probeCells): _*)) +:
-          live.toSeq.map(scoredAgainst(_, lit(true)))).reduce(_ unionByName _)
-      case None =>
-        val queries = qn(queryEmbeddings).select(col("vec_id"), col("qv"), col("norm2"))
-        val probes = Similarity.assignRankedPacked(queries, book.packed(s))
-          .select(col("vec_id"), col("qv"), col("norm2"),
-            expr("ranked[0].id").cast("long").as("cell"),
-            explode(expr(s"slice(ranked, 1, $probeCells)")).as("pr"))
-          .select(col("vec_id"), col("qv"), col("norm2"), col("cell"),
-            col("pr.id").as("probe_cell"))
-        // the index side re-quantizes off the stored floats (bit-identical
-        // parquet round trip)
-        scoredJoin(qn(stored),
-          live.map(d => qn(d.select(col("vec_id"), col("label"), col("embedding")))),
-          probes)
-    }
+    localQuery(queryEmbeddings)
+      .flatMap(onDriver(s, dir, deltaDirs, book, _, queryEmbeddings.schema("vec_id"),
+        probeCells, k))
+      .getOrElse(rankTopK(probeScored(s, dir, book, queryEmbeddings, probeCells, deltaDirs), k))
+  }
+
+  /** The distributed plan's SCORED candidate frame (query_id, vec_id,
+    * label, cell = query's own cell, cosine) before ranking. */
+  private def probeScored(s: SparkSession, dir: String, book: Codebook,
+      queryEmbeddings: DataFrame, probeCells: Int, deltaDirs: Seq[String]): DataFrame = {
+    val queries = qn(queryEmbeddings).select(col("vec_id"), col("qv"), col("norm2"))
+    val probes = Similarity.assignRankedPacked(queries, book.packed(s))
+      .select(col("vec_id"), col("qv"), col("norm2"),
+        expr("ranked[0].id").cast("long").as("cell"),
+        explode(expr(s"slice(ranked, 1, $probeCells)")).as("pr"))
+      .select(col("vec_id"), col("qv"), col("norm2"), col("cell"),
+        col("pr.id").as("probe_cell"))
+    // the index side re-quantizes off the stored floats (bit-identical
+    // parquet round trip)
+    scoredJoin(qn(Tables.cachedParquet(s, dir)),
+      if (deltaDirs.isEmpty) None
+      else Some(qn(Tables.cachedParquet(s, deltaDirs: _*)
+        .select(col("vec_id"), col("label"), col("embedding")))),
+      probes)
   }
 
   /** The one query of a frame already on the driver: its id as stored, its
@@ -432,6 +452,125 @@ object VecStore {
         Some(LocalQuery(r.get(0), qv, Codebook.selfDot(qv)))
       case _ => None
     }
+  }
+
+  /** A stored vector as the driver plan scores it: its id as stored and as
+    * a long (for the self-match test), its label, fixed-point vector and
+    * squared norm. */
+  private final case class Stored(id: Any, key: Long, label: Any, qv: Array[Long], norm2: Long)
+
+  /** The driver-served plan: one listing of the probed `cell=` dirs (a
+    * cell an erase deleted holds nothing) and the live epochs; under the
+    * gate, those files read, scored and ranked in process, as a local
+    * relation of the distributed plan's schema. None sends the probe to
+    * the distributed plan: over the gate, or input whose SQL arithmetic
+    * this path does not mirror — an id that is not a long or int, a file
+    * without a Spark footer schema, types differing across files, a null,
+    * a value the quantizing cast rejects, or a zero norm (the SQL division
+    * fails under ANSI, or yields null). */
+  private def onDriver(s: SparkSession, dir: String, deltaDirs: Seq[String],
+      book: Codebook, q: LocalQuery, queryId: StructField, probeCells: Int,
+      k: Int): Option[DataFrame] = {
+    val qKey = q.id match {
+      case n @ (_: java.lang.Long | _: java.lang.Integer) => n.asInstanceOf[Number].longValue
+      case _ => return None
+    }
+    if (q.norm2 == 0L) return None
+    val cells = book.rank(q.qv, q.norm2)
+    val hfs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def listed(d: String) =
+      try dataFiles(hfs, new Path(d)) catch { case _: java.io.FileNotFoundException => Nil }
+    val files = cells.take(probeCells).toSeq.flatMap(c => listed(s"$dir/cell=$c")) ++
+      deltaDirs.flatMap(listed)
+    if (files.isEmpty || !servedOnDriver(files.map(_.getLen).sum)) return None
+    val read = readOnDriver(s, files)((meta, records) =>
+      storedDecoder(meta).map { case (types, decode) => (types, records.map(decode).toVector) })
+    if (read.exists(_.isEmpty) || read.flatten.map(_._1).distinct.size != 1) return None
+    val ((idType, labelType), decoded) = (read.head.get._1, read.flatten.flatMap(_._2))
+    if (decoded.exists(_.isEmpty)) return None
+    val cands = decoded.flatten.filter(_.key != qKey)
+    if (cands.exists(_.norm2 == 0L)) return None
+    val qNorm = math.sqrt(q.norm2.toDouble)
+    val cos = cands.map(v => dot(q.qv, v.qv).toDouble / (qNorm * math.sqrt(v.norm2.toDouble)))
+    // cosine DESC (Spark's double order: NaN above every number), then vec_id
+    val top = cands.indices.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(cos(b), cos(a))
+      if (c != 0) c < 0 else cands(a).key < cands(b).key
+    }.take(k)
+    val rows = top.zipWithIndex.map { case (i, r) =>
+      Row(q.id, cands(i).id, cands(i).label, cells.head, cands.size.toLong, cos(i), r + 1)
+    }
+    Some(s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("query_id", queryId.dataType, queryId.nullable),
+      StructField("vec_id", idType), StructField("label", labelType),
+      StructField("cell", LongType), StructField("n_cands", LongType, nullable = false),
+      StructField("cosine", DoubleType), StructField("rank", IntegerType, nullable = false)))))
+  }
+
+  /** The decoder of one stored-vector file, from the schema its Spark writer
+    * recorded in the footer: (vec_id and label types, record → vector).
+    * None for a file without that schema, with a vec_id that is not a
+    * long or int, a label that is not a long, int or string, or an
+    * embedding that is not a float or double array. A record decodes to
+    * None when it holds a null id, embedding or element, or a value whose
+    * fixed-point form the SQL cast to BIGINT would reject. */
+  private def storedDecoder(meta: FileMetaData)
+      : Option[((DataType, DataType), Group => Option[Stored])] = for {
+    json <- Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+    schema = DataType.fromJson(json).asInstanceOf[StructType]
+    idF <- schema.find(_.name == "vec_id")
+    labelF <- schema.find(_.name == "label")
+    id <- Seq(LongType, IntegerType).find(_ == idF.dataType).flatMap(atom)
+    label <- atom(labelF.dataType)
+    element <- schema.find(_.name == "embedding").map(_.dataType).collect {
+      case ArrayType(FloatType, _) => (e: Group) => e.getFloat(0, 0).toDouble
+      case ArrayType(DoubleType, _) => (e: Group) => e.getDouble(0, 0)
+    }
+  } yield ((idF.dataType, labelF.dataType), { g =>
+    val idv = id(g, "vec_id")
+    if (idv == null || g.getFieldRepetitionCount("embedding") == 0) None
+    else {
+      // a parquet LIST: one repeated group holding one element each; a
+      // null element reads as NaN, which no cast accepts
+      val list = g.getGroup("embedding", 0)
+      val xs = Array.tabulate(list.getFieldRepetitionCount(0)) { i =>
+        val e = list.getGroup(0, i)
+        if (e.getFieldRepetitionCount(0) == 0) Double.NaN else element(e)
+      }
+      if (!xs.forall(x => math.abs(x * Similarity.Q) < 9.0e18)) None
+      else {
+        val qv = xs.map(fixedPoint)
+        Some(Stored(idv, idv.asInstanceOf[Number].longValue, label(g, "label"), qv, dot(qv, qv)))
+      }
+    }
+  })
+
+  /** A reader of one atomic field of a parquet record as its Spark type
+    * holds it (null when the field is absent), for the types the
+    * driver-served plan passes through. */
+  private def atom(t: DataType): Option[(Group, String) => Any] = (t match {
+    case LongType => Some((g: Group, f: String) => g.getLong(f, 0): Any)
+    case IntegerType => Some((g: Group, f: String) => g.getInteger(f, 0): Any)
+    case StringType => Some((g: Group, f: String) => g.getString(f, 0): Any)
+    case _ => None
+  }).map(get => (g: Group, f: String) => if (g.getFieldRepetitionCount(f) == 0) null else get(g, f))
+
+  /** [[graft.functions.FixedPointDot]]'s arithmetic: wrapping long sum over
+    * the shorter length. */
+  private def dot(a: Array[Long], b: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** One float as [[qn]] quantizes it, `CAST(round(x * Q) AS BIGINT)`: SQL
+    * round() is HALF_UP away from zero, while Math.round is half-up toward
+    * +infinity — they disagree at negative exact-.5 products, which would
+    * send a probe to the wrong cell directory. */
+  private def fixedPoint(x: Double): Long = {
+    val v = x * Similarity.Q
+    if (v < 0) -Math.round(-v) else Math.round(v)
   }
 
   /** Score the probed generation cells and the live delta against a probe
@@ -462,7 +601,7 @@ object VecStore {
       / (sqrt(aNorm2.cast("double")) * sqrt(bNorm2.cast("double")))).as("cosine")
 
   /** Shared top-k rank over a scored candidate frame. */
-  private[sources] def rankTopK(scored: DataFrame, k: Int): DataFrame =
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
     scored
       .withColumn("n_cands",
         count(lit(1)).over(Window.partitionBy(col("query_id"))).cast("long"))
@@ -474,15 +613,10 @@ object VecStore {
 
   /** The cell a raw float-array embedding is assigned to under a trained
     * codebook (driver-side helper for single-query probes): quantization
-    * as stored, then [[Codebook.rank]] — exact integer dots, cosine
-    * ranking with ties to the smallest c_id. */
+    * as stored ([[fixedPoint]]), then [[Codebook.rank]] — exact integer
+    * dots, cosine ranking with ties to the smallest c_id. */
   def cellOf(embedding: Seq[Float], cents: Seq[(Long, Seq[Long])]): Long = {
-    // SQL round() is HALF_UP away from zero; Math.round is half-up toward
-    // +infinity — they disagree at negative exact-.5 products, which would
-    // send a probe to the wrong cell directory. Mirror the stored
-    // arithmetic exactly.
-    def sqlRound(v: Double): Long = if (v < 0) -Math.round(-v) else Math.round(v)
-    val qv = embedding.map(x => sqlRound(x.toDouble * Similarity.Q)).toArray
+    val qv = embedding.map(x => fixedPoint(x.toDouble)).toArray
     Codebook(cents).rank(qv, Codebook.selfDot(qv)).head
   }
 }

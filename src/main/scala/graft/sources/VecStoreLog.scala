@@ -385,29 +385,34 @@ object VecStoreLog {
     * delta, ranked together. `n_cands` counts both legs — the pruning
     * evidence plus the (bounded) delta cost, visible per query.
     *
-    * Two plans, routed by where the queries are ([[VecStore.probeScored]]):
-    *  - a one-row query frame already on the driver (its optimized plan
-    *    is a one-row LocalRelation — `Seq(...).toDF`, so collecting it
-    *    runs no job) is planned there: the committed codebook is read once
-    *    off its parquet file, the query's cells are ranked with the SQL
-    *    path's arithmetic, and the generation is scanned under a static
-    *    `cell IN (…)` partition filter beside the live epochs, the query
-    *    scored as a literal. Such a probe submits two jobs (the rank
-    *    window's shuffle and its result) once each root's parquet schema
-    *    is cached ([[graft.ops.Tables.cachedParquet]]);
-    *  - any other frame (several rows, or read from parquet as the
-    *    registered queries' are) keeps the distributed plan: the codebook,
-    *    packed once on the driver, crossJoins the queries, and both legs
-    *    join the broadcast probe set, the generation's cells pruned
-    *    dynamically.
-    * Every output column and tie agrees between the two (VecStoreLogSpec). */
+    * Two plans ([[VecStore.probeRanked]]), one arithmetic:
+    *  - **driver-served**: a one-row query frame already on the driver
+    *    (its optimized plan is a one-row LocalRelation — `Seq(...).toDF`,
+    *    so collecting it runs no job) whose probed bytes pass the gate.
+    *    The committed codebook is read off its parquet file and ranks the
+    *    query's cells; one listing of the probed `cell=` directories and
+    *    the live epochs gives the probed bytes, and when they are at most
+    *    [[VecStore.DriverProbeMaxBytes]] those files are read on the driver
+    *    through parquet-hadoop, quantized (SQL `round`, HALF_UP), scored
+    *    with the fixed-point cosine in the SQL operation order, the query's
+    *    own id excluded, ranked by cosine then `vec_id`, and returned as a
+    *    local relation of the distributed plan's schema. The probe submits
+    *    no Spark job and builds no file index;
+    *  - **distributed**: any other frame (several rows, or read from
+    *    parquet as the registered queries' are), and a one-row frame over
+    *    the gate. The codebook, packed once on the driver, crossJoins the
+    *    queries, and both legs join the broadcast probe set, the
+    *    generation's cells pruned dynamically.
+    * Input the driver path does not mirror (nulls, zero norms, types it
+    * does not decode) takes the distributed plan too. Every output column
+    * and tie agrees between the two (VecStoreLogSpec). */
   def probeTopK(s: SparkSession, dir: String, queryEmbeddings: DataFrame,
       probeCells: Int, k: Int = 5): DataFrame = {
     val v = CubeLog.view(s, dir)
     require(v.foldedDir.nonEmpty,
       s"maintained vector store $dir has no committed generation — compact first")
-    VecStore.rankTopK(VecStore.probeScored(s, v.foldedDir.get, queryEmbeddings,
-      probeCells, v.liveBatches.map(_._2)), k)
+    VecStore.probeRanked(s, v.foldedDir.get, queryEmbeddings, probeCells, k,
+      v.liveBatches.map(_._2))
   }
 
   /** RTBF for the maintained ANN index — the one governance discipline

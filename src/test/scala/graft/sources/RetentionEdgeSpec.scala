@@ -272,6 +272,20 @@ class RetentionEdgeSpec extends SparkSpec {
     assert(exPq.getMessage.contains("would empty"))
   }
 
+  test("a flat bronze fails expiry like every store without the retention axis; an absent one expires nothing") {
+    val docs = graft.ops.Tables.documents(spark, sf0001)
+      .select($"doc_id", $"text").limit(20)
+    val dir = Files.createTempDirectory("bronze_flat_").toString + "/st"
+    assert(DocStore.expireBefore(spark, dir, "2026-01-02") === 0L)
+    val landed = DocStore.appendDeduped(spark, docs, dir, 0L)
+    assert(landed > 0L)
+    val ex = intercept[IllegalArgumentException] {
+      DocStore.expireBefore(spark, dir, "2026-01-02")
+    }
+    assert(ex.getMessage.contains("has no retention axis"))
+    assert(spark.read.parquet(s"$dir/docs").count() === landed, "nothing dropped")
+  }
+
   test("an explicit first-landing bucket count must be a positive power of two") {
     val docs = graft.ops.Tables.documents(spark, sf0001)
       .select($"doc_id", $"text").limit(20)

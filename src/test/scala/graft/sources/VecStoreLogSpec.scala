@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** The maintained ANN index ([[VecStoreLog]]): exactly-once epoch
@@ -163,30 +164,46 @@ class VecStoreLogSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/folded_gen=9")))
   }
 
-  /** A probe's every output column, in (query_id, rank) order. */
-  private def answer(df: org.apache.spark.sql.DataFrame) =
-    (df.schema.map(f => (f.name, f.dataType)),
-      df.orderBy($"query_id", $"rank").collect().toSeq)
+  /** A probe's schema and every output column, in (query_id, rank) order;
+    * or the error condition it fails with. */
+  private def answer(df: => org.apache.spark.sql.DataFrame) =
+    scala.util.Try { val d = df; (d.schema, d.orderBy($"query_id", $"rank").collect().toSeq) }
+      .toEither.left.map { e =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+          case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+        }.getOrElse(e.toString)
+      }
 
   test("driver-planned probes ≡ the distributed plan on every column, across store shapes") {
-    val part = emb.filter($"vec_id" < 300).localCheckpoint(eager = true)
+    // two stored copies of vector 7's embedding tie with it (and each
+    // other) at cosine 1: 1003 lands with 7 in the folded epochs, 1004 in
+    // the live one, so ties are broken by vec_id within and across legs
+    val base = emb.filter($"vec_id" < 300)
+    val part = Seq(1003L, 1004L).foldLeft(base)((df, id) =>
+      df.unionByName(base.filter($"vec_id" === 7L).withColumn("vec_id", lit(id))))
+      .localCheckpoint(eager = true)
     val vecs = part.select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toMap
     // (query id, whose embedding): frames built from driver-side rows
     // (LocalRelation); each frame's repartitioned twin is the same rows
-    // on the distributed plan. One-row frames are driver-planned; the
+    // on the distributed plan. One-row frames are driver-served; the
     // several-row frame takes the distributed plan from either side
-    def frame(qs: (Long, Long)*) =
-      qs.map { case (id, src) => (id, vecs(src)) }.toDF("vec_id", "embedding")
+    def frame(qs: (Long, Array[Float])*) = qs.toDF("vec_id", "embedding")
     val frames = Seq(
-      "one query, id not stored" -> frame(-1L -> 7L),
-      "one query whose id is a stored vec_id" -> frame(7L -> 7L),
-      "several queries" -> frame(7L -> 7L, -2L -> 123L, 45L -> 45L))
+      "one query, id not stored" -> frame(-1L -> vecs(7L)),
+      "one query whose id is a stored vec_id" -> frame(7L -> vecs(7L)),
+      "several queries" -> frame(7L -> vecs(7L), -2L -> vecs(123L), 45L -> vecs(45L)),
+      // a zero query's cosine divides by zero: under ANSI (the session's
+      // default) the SQL division fails, and both plans must fail alike
+      "a zero-vector query" -> frame(-3L -> Array.fill(vecs(7L).length)(0f)))
     def agree(store: String, dir: String): Unit = frames.foreach { case (name, q) =>
       val twin = q.repartition(1)
       assert(VecStore.localQuery(q).isDefined === (q.count() == 1L) &&
         VecStore.localQuery(twin).isEmpty, s"$store, $name: routing")
-      val got = answer(VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells))
-      assert(got._2.nonEmpty, s"$store, $name: no rows")
+      val probe = VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells)
+      assert(probe.queryExecution.logical.isInstanceOf[LocalRelation] ===
+        (q.count() == 1L && name != "a zero-vector query"), s"$store, $name: plan")
+      val got = answer(probe)
+      assert(got.forall(_._2.nonEmpty), s"$store, $name: no rows")
       assert(got === answer(VecStoreLog.probeTopK(spark, dir, twin, VecStore.ProbeCells)),
         s"$store, $name")
     }
@@ -199,10 +216,23 @@ class VecStoreLogSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vlog_local_").toString + "/idx"
     flatStore(dir, part)
     agree("flat, all folded", dir)
+    val tied = answer(VecStoreLog.probeTopK(spark, dir, frames.head._2, VecStore.ProbeCells))
+    val top2 = tied.map(_._2.take(2).map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))))
+    assert(top2.map(_.map(_._1)) === Right(Seq(7L, 1003L)) &&
+      top2.exists(t => t(0)._2 == t(1)._2), s"a cosine tie ranks by vec_id: $top2")
     VecStoreLog.appendBatch(part.filter(pmod($"vec_id", lit(3L)) === 2L), dir, 2L)
     agree("flat, one live epoch", dir)
     assert(VecStoreLog.eraseByIds(spark, dir, (0L until 300L by 37L)) > 0L)
     agree("flat, after an in-place erase", dir)
+    // empty one of the query's probed cells: the erase deletes its directory
+    val gen = CubeLog.view(spark, dir).foldedDir.get
+    val q7 = VecStore.localQuery(frames.head._2).get
+    val probed = VecStore.codebook(spark, gen).rank(q7.qv, q7.norm2)(1)
+    val inCell = spark.read.parquet(gen).filter($"cell" === probed)
+      .select($"vec_id").as[Long].collect().toSeq
+    assert(VecStoreLog.eraseByIds(spark, dir, inCell) === inCell.size.toLong)
+    assert(!new java.io.File(s"$gen/cell=$probed").exists(), "the emptied cell is deleted")
+    agree("flat, a probed cell erased and deleted", dir)
 
     val chunked = java.nio.file.Files.createTempDirectory("vlog_local_ch_").toString + "/idx"
     val dated = VecStoreLog.withCrawlDates(part)
@@ -226,32 +256,58 @@ class VecStoreLogSpec extends SparkSpec {
     }
   }
 
-  /** A folded store with one live epoch, for the probe-cost guards. */
-  private lazy val liveStore: String = {
-    val dir = java.nio.file.Files.createTempDirectory("vlog_guard_").toString + "/idx"
-    VecStoreLog.appendBatch(emb.filter($"vec_id" < 200), dir, 0L)
-    VecStoreLog.compact(spark, dir, Some(VecStore.CellK))
-    VecStoreLog.appendBatch(emb.filter($"vec_id" >= 200 && $"vec_id" < 260), dir, 1L)
-    dir
+  test("a one-query probe whose probed bytes exceed the driver gate takes the distributed plan") {
+    assert(VecStore.servedOnDriver(VecStore.DriverProbeMaxBytes))
+    assert(!VecStore.servedOnDriver(VecStore.DriverProbeMaxBytes + 1))
+    // wide random vectors (poorly compressible, ~16 KB each): a small
+    // folded generation, then a live epoch over the gate — every live
+    // byte is probed
+    val dims = 4096
+    val r = new scala.util.Random(11)
+    def wide(ids: Range) = ids.map(i => (i.toLong, i % 7, Array.fill(dims)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "label", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("vlog_gate_").toString + "/idx"
+    VecStoreLog.appendBatch(wide(0 until 40), dir, 0L)
+    VecStoreLog.compact(spark, dir, Some(4))
+    val live = wide(40 until 40 + (VecStore.DriverProbeMaxBytes / (dims * 4) * 3 / 2).toInt)
+    VecStoreLog.appendBatch(live, dir, 1L)
+    val epochBytes = new java.io.File(s"$dir/batch_id=1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(!VecStore.servedOnDriver(epochBytes), s"live epoch of $epochBytes bytes")
+    val q = Seq((-1L, Array.fill(dims)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    val (got, jobs) = jobsOf(answer(VecStoreLog.probeTopK(spark, dir, q, 1)))
+    assert(jobs > 0, "over the gate, the probe runs on the cluster")
+    assert(got === answer(VecStoreLog.probeTopK(spark, dir, q.repartition(1), 1)))
+    assert(got.map(_._2.length) === Right(5))
   }
 
   private def oneQuery(id: Long) = emb.filter($"vec_id" === id)
     .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toSeq
     .toDF("vec_id", "embedding")
 
-  test("a single-query driver-planned probe submits at most two Spark jobs") {
-    // the first probe of a store reads each root's parquet schema once
-    // (Tables.cachedParquet); the guard counts a later probe: the rank
-    // window's shuffle and its result, no codebook scan, no pruning subquery
-    VecStoreLog.probeTopK(spark, liveStore, oneQuery(3L), VecStore.ProbeCells).collect()
-    val q = oneQuery(11L)
-    val (top, jobs) = jobsOf(
-      VecStoreLog.probeTopK(spark, liveStore, q, VecStore.ProbeCells).collect())
-    assert(top.length === 5)
-    assert(jobs <= 2, s"a one-query probe submitted $jobs jobs")
+  test("a single-query driver-served probe submits no Spark job, cold or warm") {
+    // cold: the first probe right after a fold and right after a landing
+    // (new roots, nothing cached); warm: a later probe of the same store
+    val dir = java.nio.file.Files.createTempDirectory("vlog_guard_").toString + "/idx"
+    VecStoreLog.appendBatch(emb.filter($"vec_id" < 200), dir, 0L)
+    VecStoreLog.compact(spark, dir, Some(VecStore.CellK))
+    val probes = Seq("after compact" -> 3L, "after appendBatch" -> 11L, "warm" -> 17L)
+    probes.foreach { case (when, id) =>
+      if (when == "after appendBatch")
+        VecStoreLog.appendBatch(emb.filter($"vec_id" >= 200 && $"vec_id" < 260), dir, 1L)
+      val q = oneQuery(id)
+      val (top, jobs) = jobsOf(
+        VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells).collect())
+      assert(top.length === 5, when)
+      assert(jobs === 0, s"a one-query probe $when submitted $jobs jobs")
+    }
   }
 
   test("a probe reads the codebook without an ignored-path warning") {
+    val liveStore = java.nio.file.Files.createTempDirectory("vlog_warn_").toString + "/idx"
+    VecStoreLog.appendBatch(emb.filter($"vec_id" < 200), liveStore, 0L)
+    VecStoreLog.compact(spark, liveStore, Some(VecStore.CellK))
+    VecStoreLog.appendBatch(emb.filter($"vec_id" >= 200 && $"vec_id" < 260), liveStore, 1L)
     val (_, warned) = warningsOf("org.apache.spark.sql.execution.datasources.DataSource") {
       VecStoreLog.probeTopK(spark, liveStore, oneQuery(5L), VecStore.ProbeCells).collect()
       VecStoreLog.probeTopK(spark, liveStore, oneQuery(5L).repartition(1),
