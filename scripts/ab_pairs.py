@@ -20,6 +20,14 @@ of the pairs and its median beats the parent's by more than the parent's
 IQR. Runs that report `correct: false` or failed ops are listed. `--out FILE`
 also writes every run's result as JSON.
 
+With `--trace`, the runs take `--trace 1` instead, and for each span named in
+`--spans` (a comma-separated list, e.g. `probe_posting,probe_vec,erase,fsck`)
+the script prints every per-layer metric BENCHMARK.json declares for it as
+"parent median -> change median" (traced runs report per-layer metrics only):
+
+    python3 scripts/ab_pairs.py --parent ../parent --change . --workload corpus_rtbf \
+        --seeds 5-7 --trace --spans probe_posting,probe_vec
+
 Make the parent checkout with `git worktree add <dir> <parent-commit>` and
 give it its own clean build (its first benchmark run builds it). Do not copy
 a checkout that carries `target/` along: both copies then share build state,
@@ -41,10 +49,10 @@ import time
 SECONDS = 10
 
 
-def run(checkout, workload, seed):
+def run(checkout, workload, seed, trace):
     """One benchmark run in `checkout`: its result object, or None when it crashed."""
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(SECONDS), "--trace", str(int(trace))]
     t0 = time.time()
     proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                           text=True)
@@ -75,10 +83,17 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="inclusive range A-B")
     ap.add_argument("--out", help="write every run's result here as JSON")
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs; print the per-layer medians of --spans")
+    ap.add_argument("--spans", default="",
+                    help="comma-separated spans whose per-layer metrics --trace prints")
     args = ap.parse_args()
+    if args.trace and not args.spans:
+        ap.error("--trace needs --spans")
     lo, hi = (int(x) for x in args.seeds.split("-"))
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        declared = json.load(fh)
+    metrics = declared["end_to_end"]
 
     pairs = []
     for i, seed in enumerate(range(lo, hi + 1)):
@@ -87,7 +102,7 @@ def main():
             sides.reverse()
         pair = {"seed": seed, "first": sides[0][0]}
         for name, checkout in sides:
-            pair[name] = run(checkout, args.workload, seed)
+            pair[name] = run(checkout, args.workload, seed, args.trace)
         pairs.append(pair)
     if args.out:
         with open(args.out, "w") as fh:
@@ -95,8 +110,12 @@ def main():
 
     bad = [f"{p['seed']} {side}" for p in pairs for side in ("parent", "change")
            if p[side] is None or not p[side].get("correct") or p[side].get("failed", 0)]
-    print(f"{args.workload}: {len(pairs)} pairs, seeds {lo}-{hi}, --seconds {SECONDS}")
+    print(f"{args.workload}: {len(pairs)} pairs, seeds {lo}-{hi}, --seconds {SECONDS}"
+          + (", traced" if args.trace else ""))
     print("incorrect, crashed or failed-op runs: " + (", ".join(bad) or "none"))
+    if args.trace:
+        print_spans(pairs, declared["per_layer"], args.spans.split(","))
+        return
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         both = [(p["parent"]["metrics"][name]["value"], p["change"]["metrics"][name]["value"])
@@ -118,6 +137,22 @@ def main():
         delta = (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
         print(f"  change wins {wins}/{len(both)}; median {delta:+.1%} of parent; gain {gain:.4g} "
               f"vs parent IQR {p_iqr:.4g}: {'claimable' if claim else 'not claimable'}")
+
+
+def print_spans(pairs, per_layer, spans):
+    """Per span, each declared per-layer metric's median on both sides."""
+    for span in spans:
+        print(span)
+        for m in per_layer:
+            name = m["name"]
+            if not name.startswith(span + "."):
+                continue
+            meds = []
+            for side in ("parent", "change"):
+                xs = [p[side]["metrics"][name]["value"] for p in pairs
+                      if p[side] and name in p[side]["metrics"]]
+                meds.append(f"{statistics.median(xs):.4g}" if xs else "-")
+            print(f"  {name} ({m['unit']}): {meds[0]} -> {meds[1]}")
 
 
 if __name__ == "__main__":

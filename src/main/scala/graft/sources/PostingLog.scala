@@ -4,8 +4,13 @@ import graft.GraftQuery
 import graft.GraftQuery.q
 import graft.llm.TextAnalysis
 import graft.ops.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** MAINTAINED inverted index — [[PostingStore]]'s term-bucketed layout
   * brought under the [[CubeLog]] maintenance discipline, completing the
@@ -38,11 +43,11 @@ import org.apache.spark.sql.functions._
   *    the doc count, dl the total length) so every file in the store has
   *    ONE schema; [[stats]] is the only reader and renames them.
   *
-  * Posting row: (term, doc_id, tf, dl, tb) — tf the in-doc term count,
-  * dl the doc's token length (denormalized onto each posting: +8 bytes a
-  * row buys BM25's length normalization without a doc-length sidecar
-  * join, and makes erased docs' stats contribution recoverable from the
-  * postings being erased).
+  * Posting row ([[schema]]): (term, doc_id, tf, dl, positions, tb) — tf
+  * the in-doc term count, dl the doc's token length (denormalized onto
+  * each posting: +8 bytes a row buys BM25's length normalization without
+  * a doc-length sidecar join, and makes erased docs' stats contribution
+  * recoverable from the postings being erased).
   *
   * Reference behavior: the reference's query side is served by Postgres
   * indexes maintained by the database on every INSERT
@@ -130,12 +135,9 @@ object PostingLog {
   private def readNb(s: SparkSession,
       p: org.apache.hadoop.fs.Path): Option[Long] = {
     val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(p)) None
-    else {
-      val in = hfs.open(p)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
-      finally in.close()
-    }
+    val in = try hfs.open(p) catch { case _: java.io.FileNotFoundException => return None }
+    try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
+    finally in.close()
   }
 
   private def writeNb(s: SparkSession, dirPath: String, nb: Long): Unit = {
@@ -174,11 +176,6 @@ object PostingLog {
     if (stored.isEmpty) writeNb(s, dir, nb)
     nb
   }
-
-  /** The probe-pruning count for one root: its own `_nb`, else the store
-    * sidecar, else the library default. */
-  private def probeCount(s: SparkSession, dir: String, root: String): Long =
-    rootNBuckets(s, root).getOrElse(landingCount(s, dir))
 
   /** One epoch's posting rows + its stats row. Tokenization, tf, dl, and
     * the per-(doc, term) position list are all per-doc map-side work; the
@@ -245,7 +242,7 @@ object PostingLog {
       nBuckets: Long = -1L): Long = {
     val s = docs.sparkSession
     val axis = CubeLog.axis(CubeLog.carriesCrawlDate(docs))
-    CubeLog.requireLayout(s, "posting store", dir, dataRoots(s, dir), axis.nonEmpty)
+    CubeLog.requireLayout(s, "posting store", dir, dataRoots(s, dir).map(_.path), axis.nonEmpty)
     val nb = resolveLandingCount(s, dir, nBuckets)
     if (CubeLog.isFolded(s, dir, batchId)) return 0L
     CubeLog.claimEpoch(s, dir, batchId) // single-writer guard
@@ -283,9 +280,9 @@ object PostingLog {
     val nb = landingCount(spark, dir)
     CubeLog.compactFrom(spark, dir, force) { (v, out) =>
       // a fully-expired fold root folds as zero rows
-      val roots = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2)).filter(hasDataDirs(spark, _))
-      val axis = CubeLog.axis(CubeLog.chunkedStore(spark, roots))
-      val all = roots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      val roots = withData(spark, v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
+      val axis = CubeLog.axis(chunked(roots))
+      val all = roots.map(readRoot(spark, _)).reduce(_ unionByName _)
         .select(RowCols ++ axis.map(col): _*)
       val postings = all.filter(col("tb") =!= StatsBucket)
         .withColumn("tb", pmod(graft.functions.Md5Prefix64(col("term")), lit(nb)))
@@ -305,29 +302,60 @@ object PostingLog {
     }
   }
 
-  /** True iff the root still holds at least one data partition dir. A
-    * root reduced to its `_SUCCESS` marker (every chunk_date expired out
-    * of a committed fold) must read as data-free, not crash the next
-    * schema-inferring read — the [[DocStore]] `_SUCCESS`-only poison
-    * guard applied on the READ side, since the fold root cannot simply be
-    * deleted (the commit marker resolves it by name). */
-  private def hasDataDirs(spark: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.exists(p) && hfs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isDirectory && (n.startsWith("tb=") || n.startsWith("chunk_date="))
-    }
+  /** The posting row as every reader reads a root: the five data columns,
+    * then the partition columns the root's directories carry (`chunk_date`
+    * on the calendar-chunked layout, then `tb`), typed as partition
+    * inference types them (`chunk_date` a date, `tb` an int) and nullable
+    * as a parquet read makes every column — `spark.read.parquet(root)
+    * .schema` on every root shape (PostingLogSpec). Declared, so a read
+    * infers nothing: no footer job for a new root and no JVM-global
+    * schema cache. */
+  private[sources] def schema(chunked: Boolean): StructType = StructType(
+    Seq(StructField("term", StringType), StructField("doc_id", LongType),
+      StructField("tf", LongType), StructField("dl", LongType),
+      StructField("positions", ArrayType(IntegerType))) ++
+      CubeLog.axis(chunked).map(StructField(_, DateType)) :+
+      StructField("tb", IntegerType))
+
+  /** A data root — the committed fold or a live epoch — as one listing of
+    * it shows it: its layout, whether it still holds data, and whether it
+    * records its own bucket count. */
+  private[sources] final case class Root(path: String, kids: Seq[FileStatus]) {
+    private def dirs(prefix: String) =
+      kids.filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+    /** The `chunk_date=` directories of a calendar-chunked root. */
+    def dates: Seq[FileStatus] = dirs("chunk_date=")
+    def chunked: Boolean = dates.nonEmpty
+    /** False for a root reduced to its markers (every chunk_date expired
+      * out of a committed fold): it must read as data-free — the fold root
+      * cannot simply be deleted, the commit marker resolves it by name. */
+    def hasData: Boolean = chunked || dirs("tb=").nonEmpty
+    def hasBucketDir(b: Long): Boolean =
+      kids.exists(st => st.isDirectory && st.getPath.getName == s"tb=$b")
+    def hasNb: Boolean = kids.exists(_.getPath.getName == "_nb")
   }
 
-  /** The view's roots that actually hold data — fully-expired roots are
-    * skipped (see [[hasDataDirs]]); live epochs emptied by expiry are
-    * already invisible at the [[CubeLog.view]] level. */
-  private def dataRoots(spark: SparkSession, dir: String): Seq[String] = {
-    val v = CubeLog.view(spark, dir)
-    (v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
-      .filter(hasDataDirs(spark, _))
+  /** The roots among `paths` that still hold data, one listing each. */
+  private def withData(spark: SparkSession, paths: Seq[String]): Seq[Root] = paths.flatMap { r =>
+    val p = new Path(r)
+    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kids = try hfs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    Some(Root(r, kids)).filter(_.hasData)
   }
+
+  /** The store's layout, read off the first of its data roots. */
+  private def chunked(roots: Seq[Root]): Boolean = roots.headOption.exists(_.chunked)
+
+  /** The view's roots that actually hold data; live epochs emptied by
+    * expiry are already invisible at the [[CubeLog.view]] level. */
+  private[sources] def dataRoots(spark: SparkSession, dir: String): Seq[Root] = {
+    val v = CubeLog.view(spark, dir)
+    withData(spark, v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
+  }
+
+  /** One root read through [[schema]] at its own layout. */
+  private[sources] def readRoot(spark: SparkSession, root: Root): DataFrame =
+    spark.read.schema(schema(root.chunked)).parquet(root.path)
 
   /** Every probe-readable root — the committed fold + live epoch dirs —
     * as ONE unioned frame, read per root (sibling roots cannot share a
@@ -337,24 +365,117 @@ object PostingLog {
   private def readAll(spark: SparkSession, dir: String): DataFrame = {
     val roots = dataRoots(spark, dir)
     require(roots.nonEmpty, s"empty posting store: $dir")
-    roots.map(Tables.cachedParquet(spark, _)).reduce(_ unionByName _)
+    roots.map(readRoot(spark, _)).reduce(_ unionByName _)
   }
 
-  /** Pruned posting probe: the query terms' bucket ids are arithmetic
+  /** Pruned posting probe: the rows of `terms` over the committed fold and
+    * every live epoch. The query terms' bucket ids are arithmetic
     * constants ([[PostingStore.h64]] driver-side) computed PER ROOT at
-    * that root's own stored count, so BOTH the fold and every live epoch
-    * are read under a static PartitionFilter — only the probed `tb=`
-    * directories are ever listed, and a store mid-resize (roots at two
-    * counts) still answers exactly. */
+    * that root's own stored count, so a store mid-resize (roots at two
+    * counts) still answers exactly. Two plans, one row set:
+    *  - **driver-served**: one listing of the probed `tb=` directories of
+    *    each root (under each `chunk_date=` directory on the chunked
+    *    layout; a bucket an erase deleted holds nothing). When their data
+    *    files hold at most [[DriverRead.PostingProbeMaxBytes]] (a gate of
+    *    its own: the distributed posting plan costs far less than the
+    *    vector one), they are read through the driver reader the one-query
+    *    vector probe shares ([[DriverRead]]), the rows whose `term` is in
+    *    `terms` kept (the SQL `isin` set), the partition values taken off
+    *    the directory names, and returned as a local relation of
+    *    [[schema]]. No Spark job, no file index over the root;
+    *  - **distributed**: over the gate, or files whose footer does not
+    *    carry the declared data columns, each root is read through
+    *    [[schema]] under a static PartitionFilter on `tb`, so only the
+    *    probed `tb=` directories are scanned.
+    * Schema, nullability included, and every row agree between the two
+    * (PostingLogSpec). */
   def probe(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
+    val probed = probedBuckets(spark, dir, terms)
+    onDriver(spark, probed, terms).getOrElse(probeScan(spark, probed, terms))
+  }
+
+  /** [[probe]]'s distributed plan whatever the probed bytes — the twin the
+    * driver-served plan is pinned against. */
+  private[sources] def distributedProbe(spark: SparkSession, dir: String,
+      terms: Seq[String]): DataFrame =
+    probeScan(spark, probedBuckets(spark, dir, terms), terms)
+
+  /** Each data root with the buckets `terms` hash to at its own count: its
+    * `_nb`, else the store sidecar, else the library default. */
+  private def probedBuckets(spark: SparkSession, dir: String,
+      terms: Seq[String]): Seq[(Root, Seq[Long])] = {
     val roots = dataRoots(spark, dir)
     require(roots.nonEmpty, s"empty posting store: $dir")
+    lazy val landing = landingCount(spark, dir)
     roots.map { r =>
-      val nb = probeCount(spark, dir, r)
-      val tbs = terms.map(t => PostingStore.h64(t) % nb).distinct
-      Tables.cachedParquet(spark, r)
-        .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+      val nb = (if (r.hasNb) readNb(spark, new Path(r.path, "_nb")) else None)
+        .getOrElse(landing)
+      r -> terms.map(t => PostingStore.h64(t) % nb).distinct
+    }
+  }
+
+  private def probeScan(spark: SparkSession, probed: Seq[(Root, Seq[Long])],
+      terms: Seq[String]): DataFrame =
+    probed.map { case (r, tbs) =>
+      readRoot(spark, r).filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
     }.reduce(_ unionByName _)
+
+  /** The driver-served plan ([[probe]]); None sends the probe to the
+    * distributed plan. */
+  private def onDriver(spark: SparkSession, probed: Seq[(Root, Seq[Long])],
+      terms: Seq[String]): Option[DataFrame] = {
+    val layout = probed.head._1.chunked
+    if (probed.exists(_._1.chunked != layout)) return None // a mixed store fails as the scan does
+    val hfs = new Path(probed.head._1.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // each probed directory with the partition values its name carries
+    val dirs: Seq[(Path, Seq[Any])] = probed.flatMap { case (r, tbs) =>
+      if (!layout) tbs.filter(r.hasBucketDir).map(b => new Path(r.path, s"tb=$b") -> Seq(b.toInt))
+      else r.dates.flatMap { d =>
+        val date = scala.util.Try(java.time.LocalDate.parse(
+          d.getPath.getName.stripPrefix("chunk_date="))).toOption
+        tbs.map(b => new Path(d.getPath, s"tb=$b") -> Seq(date.orNull, b.toInt))
+      }
+    }
+    if (dirs.exists(_._2.contains(null))) return None
+    val files = dirs.flatMap { case (d, parts) => DriverRead.probedFiles(hfs, d).map(_ -> parts) }
+    if (!DriverRead.servedOnDriver(files.map(_._1.getLen).sum, DriverRead.PostingProbeMaxBytes))
+      return None
+    val read = DriverRead(spark, files.map(_._1))((meta, records) =>
+      postingDecoder(meta, terms.toSet).map(decode => records.flatMap(decode).toVector))
+    if (read.exists(_.isEmpty)) return None
+    val rows = read.flatten.zip(files).flatMap { case (data, (_, parts)) =>
+      data.map(d => Row.fromSeq(d ++ parts))
+    }
+    Some(spark.createDataFrame(rows.asJava, schema(layout)))
+  }
+
+  /** The decoder of one posting file's data columns, when the schema its
+    * Spark writer recorded in the footer carries them at [[schema]]'s
+    * types: a record whose term is `wanted` decodes to (term, doc_id, tf,
+    * dl, positions), nulls kept. */
+  private def postingDecoder(meta: FileMetaData, wanted: Set[String])
+      : Option[Group => Option[Seq[Any]]] = {
+    val str = DriverRead.atom(StringType).get
+    val long = DriverRead.atom(LongType).get
+    DriverRead.sparkSchema(meta).filter { fs =>
+      def typeOf(n: String) = fs.find(_.name == n).map(_.dataType)
+      typeOf("term").contains(StringType) &&
+        Seq("doc_id", "tf", "dl").forall(typeOf(_).contains(LongType)) &&
+        typeOf("positions").exists { case ArrayType(IntegerType, _) => true; case _ => false }
+    }.map(_ => { (g: Group) =>
+      val term = str(g, "term").asInstanceOf[String]
+      if (!wanted.contains(term)) None
+      else Some(Seq(term, long(g, "doc_id"), long(g, "tf"), long(g, "dl"),
+        // a parquet LIST: one repeated group holding one element each
+        if (g.getFieldRepetitionCount("positions") == 0) null
+        else {
+          val list = g.getGroup("positions", 0)
+          IndexedSeq.tabulate(list.getFieldRepetitionCount(0)) { i =>
+            val e = list.getGroup(0, i)
+            if (e.getFieldRepetitionCount(0) == 0) null else Int.box(e.getInteger(0, 0))
+          }
+        }))
+    })
   }
 
   /** Posting rows the store currently holds (stats rows excluded) — the
@@ -509,21 +630,23 @@ object PostingLog {
     import spark.implicits._
     val req = broadcast(docIds.toDF("doc_id"))
     val v = CubeLog.view(spark, dir)
+    // live epochs first, then the fold; a fully-expired fold holds nothing
+    val roots = withData(spark, v.liveBatches.map(_._2) ++ v.foldedDir.toSeq)
     // calendar-chunked stores carry the retention axis — their rewrite is
     // date-sliced (a doc's postings live in exactly its crawl chunk)
-    if (CubeLog.chunkedStore(spark, dataRoots(spark, dir)))
-      return eraseDocsChunked(spark, dir, req)
+    if (chunked(roots)) return eraseDocsChunked(spark, dir, req, roots)
     var removed = 0L
 
-    def rewriteRoot(root: String, wholeEpoch: Boolean): Unit = {
-      val slim = spark.read.parquet(root).select(col("doc_id"), col("tb"))
+    def rewriteRoot(r: Root, wholeEpoch: Boolean): Unit = {
+      val root = r.path
+      val slim = readRoot(spark, r).select(col("doc_id"), col("tb"))
         .filter(col("tb") =!= StatsBucket)
       val affected = slim.join(req, Seq("doc_id"), "left_semi")
         .select(col("tb").cast("long")).distinct().as[Long].collect().sorted
       if (affected.isEmpty) return
       // the slice to rewrite: affected buckets + the stats partition
       val tbs: Seq[Long] = affected :+ StatsBucket
-      val cur0 = spark.read.parquet(root).select(RowCols: _*)
+      val cur0 = readRoot(spark, r).select(RowCols: _*)
       val cur = if (wholeEpoch) cur0 else cur0.filter(col("tb").isin(tbs: _*))
       val hits = cur.filter(col("tb") =!= StatsBucket)
         .join(req, Seq("doc_id"), "left_semi")
@@ -533,8 +656,10 @@ object PostingLog {
       val gone = hits.select(col("doc_id"), col("dl")).distinct()
         .agg(coalesce(count(lit(1)), lit(0L)).as("gone_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("gone_dl"))
+      // the join puts its key first: select back the landing's column
+      // order, which every file of the root shares ([[schema]])
       val keptPost = cur.filter(col("tb") =!= StatsBucket)
-        .join(req, Seq("doc_id"), "left_anti")
+        .join(req, Seq("doc_id"), "left_anti").select(RowCols: _*)
       val newStats = cur.filter(col("tb") === StatsBucket)
         .agg(sum(col("tf")).as("tf0"), sum(col("dl")).as("dl0"))
         .crossJoin(broadcast(gone))
@@ -565,9 +690,7 @@ object PostingLog {
 
     // live epochs rewrite whole (tiny by cadence, and their stats row must
     // move in the same commit); the fold rewrites only affected buckets
-    v.liveBatches.foreach { case (_, path) => rewriteRoot(path, wholeEpoch = true) }
-    v.foldedDir.filter(hasDataDirs(spark, _))
-      .foreach(f => rewriteRoot(f, wholeEpoch = false))
+    roots.foreach(r => rewriteRoot(r, wholeEpoch = !v.foldedDir.contains(r.path)))
     // the grace generation is PRE-ERASE state (the previous fold + the
     // batch dirs it absorbed) — purge it, or the erased docs' postings
     // persist on disk until a compaction that a quiesced store never runs,
@@ -633,8 +756,8 @@ object PostingLog {
     val cur = landingCount(spark, dir)
     val roots = dataRoots(spark, dir)
     require(roots.nonEmpty, s"empty posting store: $dir")
-    roots.filter(rootNBuckets(spark, _).isEmpty)
-      .foreach(writeNb(spark, _, cur)) // self-describe legacy roots FIRST
+    roots.filterNot(_.hasNb)
+      .foreach(r => writeNb(spark, r.path, cur)) // self-describe legacy roots FIRST
     if (cur != newNb) { writeNb(spark, dir, newNb); true } else false
   }
 
@@ -655,7 +778,7 @@ object PostingLog {
     // contract): silently dropping zero dirs would let an operator
     // believe data expired when nothing did
     dataRoots(spark, dir).headOption.foreach { r =>
-      require(CubeLog.isChunkedRoot(spark, r),
+      require(r.chunked,
         s"posting store $dir has no retention axis — land docs carrying " +
           "crawl_date through appendBatch to expire by crawl date")
     }
@@ -683,19 +806,19 @@ object PostingLog {
     * rewritten minus the requested docs with its stats row corrected,
     * every other date directory byte-identical. Grace dirs purged like
     * every erase. Called through [[eraseDocs]], which dispatches on the
-    * store's layout. */
+    * store's layout and passes its data `roots`. */
   private def eraseDocsChunked(spark: SparkSession, dir: String,
-      req: DataFrame): Long = {
+      req: DataFrame, roots: Seq[Root]): Long = {
     import spark.implicits._
-    val v = CubeLog.view(spark, dir)
     var removed = 0L
-    (v.liveBatches.map(_._2) ++ v.foldedDir.toSeq).foreach { root =>
-      val slim = spark.read.parquet(root).select(col("doc_id"), col("chunk_date"))
+    roots.foreach { r =>
+      val root = r.path
+      val slim = readRoot(spark, r).select(col("doc_id"), col("chunk_date"))
       val dates = slim.join(req, Seq("doc_id"), "left_semi")
         .select(col("chunk_date").cast("string")).distinct()
         .as[String].collect().sorted
       if (dates.nonEmpty) {
-        val cur = spark.read.parquet(root)
+        val cur = readRoot(spark, r)
           .filter(col("chunk_date").cast("string").isin(dates: _*))
           .select(RowCols :+ col("chunk_date"): _*)
         // snapshot the slice's (chunk_date, tb) composite partitions
@@ -716,7 +839,7 @@ object PostingLog {
           .agg(count(lit(1)).as("gone_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("gone_dl"))
         val keptPost = cur.filter(col("tb") =!= StatsBucket)
-          .join(req, Seq("doc_id"), "left_anti")
+          .join(req, Seq("doc_id"), "left_anti").select(RowCols :+ col("chunk_date"): _*)
         val newStats = cur.filter(col("tb") === StatsBucket)
           .groupBy(col("chunk_date"))
           .agg(sum(col("tf")).as("tf0"), sum(col("dl")).as("dl0"))

@@ -153,21 +153,14 @@ object StoreCheck {
     val out = scala.collection.mutable.ArrayBuffer.empty[Finding]
     out ++= checkCubeLog(spark, dir)
     if (out.exists(_.severity == "error")) return out.toSeq
-    val v = CubeLog.view(spark, dir)
-    val roots = (v.foldedDir.toSeq ++ v.liveBatches.map(_._2))
-      .filter { r => // a fully-expired root holds only its _SUCCESS marker
-        val p = new org.apache.hadoop.fs.Path(r)
-        val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        hfs.listStatus(p).exists(st => st.isDirectory &&
-          (st.getPath.getName.startsWith("tb=") ||
-            st.getPath.getName.startsWith("chunk_date=")))
-      }
+    // a fully-expired root holds only its markers
+    val roots = PostingLog.dataRoots(spark, dir)
     if (roots.isEmpty) return out.toSeq
-    out ++= axisFindings(spark, roots, s"posting store $dir")
+    out ++= axisFindings(spark, roots.map(_.path), s"posting store $dir")
     if (out.exists(_.severity == "error")) return out.toSeq
-    val chunked = CubeLog.isChunkedRoot(spark, roots.head)
+    val chunked = roots.head.chunked
     def all(cols: Seq[String]): DataFrame =
-      roots.map(r => spark.read.parquet(r).select(cols.map(col): _*))
+      roots.map(r => PostingLog.readRoot(spark, r).select(cols.map(col): _*))
         .reduce(_ unionByName _)
     if (chunked) {
       import spark.implicits._

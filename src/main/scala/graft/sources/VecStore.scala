@@ -5,18 +5,12 @@ import graft.GraftQuery.q
 import graft.llm.Similarity
 import graft.ops.Tables
 import graft.functions.{CosRankCells, FixedPointDotMulti}
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.HadoopReadOptions
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.FileMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -183,13 +177,14 @@ object VecStore {
 
   /** The k-row trained codebook stored beside the index at
     * `dir/_centroids`, read on the driver straight off its parquet data
-    * file(s) ([[readOnDriver]]): no Spark job, and no Spark file index
+    * file(s) ([[DriverRead]]): no Spark job, and no Spark file index
     * (which treats the `_centroids` leaf itself as hidden and warns on
     * every read). */
   private[sources] def codebook(spark: SparkSession, dir: String): Codebook = {
     val cents = new Path(s"$dir/_centroids")
-    val files = dataFiles(cents.getFileSystem(spark.sparkContext.hadoopConfiguration), cents)
-    Codebook(readOnDriver(spark, files) { (_, records) =>
+    val files = DriverRead.dataFiles(
+      cents.getFileSystem(spark.sparkContext.hadoopConfiguration), cents)
+    Codebook(DriverRead(spark, files) { (_, records) =>
       records.map { g =>
         // a parquet LIST: one repeated group holding one element each
         val cqv = g.getGroup("cqv", 0)
@@ -197,40 +192,6 @@ object VecStore {
           i => cqv.getGroup(0, i).getLong(0, 0)))
       }.toVector
     }.flatten)
-  }
-
-  /** The parquet data files under `dir`, in name order, descending into
-    * partition directories; names starting with `_` or `.` (`_SUCCESS`,
-    * checksums, `_centroids`) are skipped as Spark's file index skips
-    * them. */
-  private def dataFiles(hfs: FileSystem, dir: Path): Seq[FileStatus] =
-    hfs.listStatus(dir).toSeq
-      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
-      .flatMap(st => if (st.isDirectory) dataFiles(hfs, st.getPath) else Seq(st))
-
-  /** One value per parquet file of `files`, read on the driver through
-    * parquet-hadoop's record API: `read` gets the file's footer and its
-    * records, and must consume the records before it returns. The reader
-    * takes the session's Hadoop conf (a fresh one would re-parse the
-    * Hadoop XML defaults on every probe) and the listed status (no extra
-    * stat per file). */
-  private def readOnDriver[T](spark: SparkSession, files: Seq[FileStatus])(
-      read: (FileMetaData, Iterator[Group]) => T): Seq[T] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
-        HadoopReadOptions.builder(conf, st.getPath).build())
-      try {
-        val meta = reader.getFooter.getFileMetaData
-        val io = new ColumnIOFactory().getColumnIO(meta.getSchema)
-        read(meta, Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
-          .flatMap { rg =>
-            val rows = io.getRecordReader(rg, new GroupRecordConverter(meta.getSchema))
-            Iterator.fill(rg.getRowCount.toInt)(rows.read())
-          })
-      } finally reader.close()
-    }
   }
 
   /** Vectors in one cell of the index — a partition-pruned scan (the
@@ -385,19 +346,6 @@ object VecStore {
       probeCells: Int, k: Int = 5): DataFrame =
     probeRanked(s, dir, queryEmbeddings, probeCells, k)
 
-  /** Probed bytes (data files of the probed cells plus the live epochs) at
-    * or under which a one-query probe is served on the driver. Sized by
-    * measurement on a 4-core host (CHANGES.md): the driver read, scored and
-    * ranked 4.2 MB of 64-dim vectors in 0.62 s with a C1-only JIT (0.25 s
-    * with C2), about the distributed plan's fixed cost (0.8–1.0 s, resp.
-    * 0.55–0.8 s, for its smallest probe); the driver's time grows about
-    * 0.14 s (0.05 s) per MB, the distributed plan's fixed cost does not. */
-  private[sources] val DriverProbeMaxBytes: Long = 4L << 20
-
-  /** The gate [[probeRanked]] applies to a one-query probe's probed bytes. */
-  private[sources] def servedOnDriver(probedBytes: Long): Boolean =
-    probedBytes <= DriverProbeMaxBytes
-
   /** The top `k` per query over the generation at `dir` — each query's top
     * `probeCells` cells — plus every vector of the live epochs `deltaDirs`
     * ([[VecStoreLog]]'s delta leg), with the codebook read once on the
@@ -466,8 +414,8 @@ object VecStore {
     * the distributed plan: over the gate, or input whose SQL arithmetic
     * this path does not mirror — an id that is not a long or int, a file
     * without a Spark footer schema, types differing across files, a null,
-    * a value the quantizing cast rejects, or a zero norm (the SQL division
-    * fails under ANSI, or yields null). */
+    * or a value the quantizing cast rejects. A zero norm, stored or asked,
+    * scores a null cosine as [[cosine]] does. */
   private def onDriver(s: SparkSession, dir: String, deltaDirs: Seq[String],
       book: Codebook, q: LocalQuery, queryId: StructField, probeCells: Int,
       k: Int): Option[DataFrame] = {
@@ -475,26 +423,34 @@ object VecStore {
       case n @ (_: java.lang.Long | _: java.lang.Integer) => n.asInstanceOf[Number].longValue
       case _ => return None
     }
-    if (q.norm2 == 0L) return None
     val cells = book.rank(q.qv, q.norm2)
     val hfs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    def listed(d: String) =
-      try dataFiles(hfs, new Path(d)) catch { case _: java.io.FileNotFoundException => Nil }
+    def listed(d: String) = DriverRead.probedFiles(hfs, new Path(d))
     val files = cells.take(probeCells).toSeq.flatMap(c => listed(s"$dir/cell=$c")) ++
       deltaDirs.flatMap(listed)
-    if (files.isEmpty || !servedOnDriver(files.map(_.getLen).sum)) return None
-    val read = readOnDriver(s, files)((meta, records) =>
+    if (files.isEmpty ||
+        !DriverRead.servedOnDriver(files.map(_.getLen).sum, DriverRead.VecProbeMaxBytes))
+      return None
+    val read = DriverRead(s, files)((meta, records) =>
       storedDecoder(meta).map { case (types, decode) => (types, records.map(decode).toVector) })
     if (read.exists(_.isEmpty) || read.flatten.map(_._1).distinct.size != 1) return None
     val ((idType, labelType), decoded) = (read.head.get._1, read.flatten.flatMap(_._2))
     if (decoded.exists(_.isEmpty)) return None
     val cands = decoded.flatten.filter(_.key != qKey)
-    if (cands.exists(_.norm2 == 0L)) return None
     val qNorm = math.sqrt(q.norm2.toDouble)
-    val cos = cands.map(v => dot(q.qv, v.qv).toDouble / (qNorm * math.sqrt(v.norm2.toDouble)))
-    // cosine DESC (Spark's double order: NaN above every number), then vec_id
+    val cos = cands.map { v =>
+      val norms = qNorm * math.sqrt(v.norm2.toDouble)
+      if (norms == 0.0) null else java.lang.Double.valueOf(dot(q.qv, v.qv).toDouble / norms)
+    }
+    // cosine DESC (Spark's double order: NaN above every number, nulls
+    // last), then vec_id
     val top = cands.indices.sortWith { (a, b) =>
-      val c = SQLOrderingUtil.compareDoubles(cos(b), cos(a))
+      val c = (cos(a), cos(b)) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x, y) => SQLOrderingUtil.compareDoubles(y, x)
+      }
       if (c != 0) c < 0 else cands(a).key < cands(b).key
     }.take(k)
     val rows = top.zipWithIndex.map { case (i, r) =>
@@ -516,12 +472,11 @@ object VecStore {
     * fixed-point form the SQL cast to BIGINT would reject. */
   private def storedDecoder(meta: FileMetaData)
       : Option[((DataType, DataType), Group => Option[Stored])] = for {
-    json <- Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-    schema = DataType.fromJson(json).asInstanceOf[StructType]
+    schema <- DriverRead.sparkSchema(meta)
     idF <- schema.find(_.name == "vec_id")
     labelF <- schema.find(_.name == "label")
-    id <- Seq(LongType, IntegerType).find(_ == idF.dataType).flatMap(atom)
-    label <- atom(labelF.dataType)
+    id <- Seq(LongType, IntegerType).find(_ == idF.dataType).flatMap(DriverRead.atom)
+    label <- DriverRead.atom(labelF.dataType)
     element <- schema.find(_.name == "embedding").map(_.dataType).collect {
       case ArrayType(FloatType, _) => (e: Group) => e.getFloat(0, 0).toDouble
       case ArrayType(DoubleType, _) => (e: Group) => e.getDouble(0, 0)
@@ -544,16 +499,6 @@ object VecStore {
       }
     }
   })
-
-  /** A reader of one atomic field of a parquet record as its Spark type
-    * holds it (null when the field is absent), for the types the
-    * driver-served plan passes through. */
-  private def atom(t: DataType): Option[(Group, String) => Any] = (t match {
-    case LongType => Some((g: Group, f: String) => g.getLong(f, 0): Any)
-    case IntegerType => Some((g: Group, f: String) => g.getInteger(f, 0): Any)
-    case StringType => Some((g: Group, f: String) => g.getString(f, 0): Any)
-    case _ => None
-  }).map(get => (g: Group, f: String) => if (g.getFieldRepetitionCount(f) == 0) null else get(g, f))
 
   /** [[graft.functions.FixedPointDot]]'s arithmetic: wrapping long sum over
     * the shorter length. */
@@ -595,10 +540,13 @@ object VecStore {
     }
   }
 
-  /** Exact fixed-point cosine, in the oracle's operation order. */
+  /** Exact fixed-point cosine, in the oracle's operation order; null when
+    * either norm is 0 (`try_divide`: Spark's non-ANSI result, where ANSI
+    * division would fail the whole probe over one all-zero embedding), so
+    * `desc` ranks it after every number. */
   private def cosine(aQv: Column, aNorm2: Column, bQv: Column, bNorm2: Column): Column =
-    (graft.functions.FixedPointDot(aQv, bQv).cast("double")
-      / (sqrt(aNorm2.cast("double")) * sqrt(bNorm2.cast("double")))).as("cosine")
+    try_divide(graft.functions.FixedPointDot(aQv, bQv).cast("double"),
+      sqrt(aNorm2.cast("double")) * sqrt(bNorm2.cast("double"))).as("cosine")
 
   /** Shared top-k rank over a scored candidate frame. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =

@@ -392,8 +392,9 @@ object VecStoreLog {
     *    The committed codebook is read off its parquet file and ranks the
     *    query's cells; one listing of the probed `cell=` directories and
     *    the live epochs gives the probed bytes, and when they are at most
-    *    [[VecStore.DriverProbeMaxBytes]] those files are read on the driver
-    *    through parquet-hadoop, quantized (SQL `round`, HALF_UP), scored
+    *    [[DriverRead.VecProbeMaxBytes]] those files are read through the
+    *    driver reader [[PostingLog.probe]] shares ([[DriverRead]]),
+    *    quantized (SQL `round`, HALF_UP), scored
     *    with the fixed-point cosine in the SQL operation order, the query's
     *    own id excluded, ranked by cosine then `vec_id`, and returned as a
     *    local relation of the distributed plan's schema. The probe submits
@@ -403,8 +404,9 @@ object VecStoreLog {
     *    the gate. The codebook, packed once on the driver, crossJoins the
     *    queries, and both legs join the broadcast probe set, the
     *    generation's cells pruned dynamically.
-    * Input the driver path does not mirror (nulls, zero norms, types it
-    * does not decode) takes the distributed plan too. Every output column
+    * Input the driver path does not mirror (nulls, types it does not
+    * decode) takes the distributed plan too; a zero norm scores a null
+    * cosine on both, ranked after every number. Every output column
     * and tie agrees between the two (VecStoreLogSpec). */
   def probeTopK(s: SparkSession, dir: String, queryEmbeddings: DataFrame,
       probeCells: Int, k: Int = 5): DataFrame = {

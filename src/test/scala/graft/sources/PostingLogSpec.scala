@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.llm.TextAnalysis
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.io.File
 
@@ -306,5 +307,161 @@ class PostingLogSpec extends SparkSpec {
     assert(PostingLog.appendBatch(
       Seq((3L, null.asInstanceOf[String])).toDF("doc_id", "text"), dir, 2L) === 0L)
     assert(CubeLog.view(spark, dir).liveBatches.map(_._1) === Seq(0L))
+  }
+
+  private def tmpStore(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+
+  /** Docs carrying a crawl day (2026-01-01 + id mod 3): a chunked landing. */
+  private def datedDocs = corpusDocs.withColumn("crawl_date",
+    date_add(lit("2026-01-01").cast("date"), pmod($"doc_id", lit(3L)).cast("int")))
+
+  /** Single-term docs in three distinct buckets, the fold holding docs 1–3
+    * and a live epoch doc 4 — the shape of the erase case above. */
+  private def craftedStore(): (String, Seq[String]) = {
+    val tbOf = (t: String) => PostingStore.h64(t) % PostingLog.NBuckets
+    val ts = ('a' to 'z').map(c => s"$c$c$c").groupBy(tbOf).values.map(_.head).take(3).toSeq
+    val Seq(tA, tB, tC) = ts
+    val docs = Seq((1L, s"$tA $tA"), (2L, tB), (3L, s"$tC $tC $tC"), (4L, s"$tA $tB"))
+      .toDF("doc_id", "text")
+    val dir = tmpStore("posting_crafted_")
+    PostingLog.appendBatch(docs.filter($"doc_id" <= 3L), dir, 0L)
+    PostingLog.compact(spark, dir)
+    PostingLog.appendBatch(docs.filter($"doc_id" === 4L), dir, 1L)
+    (dir, ts)
+  }
+
+  test("the declared posting schema equals the inferred schema on every root shape") {
+    def check(shape: String, dir: String): Unit = {
+      val roots = PostingLog.dataRoots(spark, dir)
+      assert(roots.nonEmpty, shape)
+      roots.foreach { r =>
+        val inferred = spark.read.parquet(r.path).schema
+        assert(PostingLog.schema(r.chunked) === inferred, s"$shape: ${r.path}")
+        assert(PostingLog.readRoot(spark, r).schema === inferred, s"$shape: ${r.path}")
+      }
+    }
+    val flat = buildStore()
+    check("flat, folded and live", flat)
+    PostingLog.eraseDocs(spark, flat, (0L until 300L by 7L))
+    check("flat, after erase", flat)
+    PostingLog.rebucket(spark, flat, 32L)
+    check("flat, after rebucket", flat)
+
+    val chunked = tmpStore("posting_schema_ch_")
+    PostingLog.appendBatch(datedDocs.filter(pmod($"doc_id", lit(2L)) === 0L), chunked, 0L)
+    PostingLog.compact(spark, chunked)
+    PostingLog.appendBatch(datedDocs.filter(pmod($"doc_id", lit(2L)) === 1L), chunked, 1L)
+    assert(PostingLog.dataRoots(spark, chunked).forall(_.chunked))
+    check("chunked, folded and live", chunked)
+    PostingLog.eraseDocs(spark, chunked, (0L until 300L by 7L))
+    check("chunked, after erase", chunked)
+
+    // erasing the live epoch's only doc leaves it the stats row alone
+    val (crafted, _) = craftedStore()
+    PostingLog.eraseDocs(spark, crafted, Seq(4L))
+    val live = PostingLog.dataRoots(spark, crafted).last.path.stripPrefix("file:")
+    assert(new File(live).list().filter(_.startsWith("tb=")).toSeq ===
+      Seq(s"tb=${PostingLog.StatsBucket}"), "the live epoch holds stats only")
+    check("a stats-only live root", crafted)
+  }
+
+  /** A probe's schema and its rows in (term, doc_id, tb) order. */
+  private def answer(df: org.apache.spark.sql.DataFrame) =
+    (df.schema, df.orderBy($"term", $"doc_id", $"tb").collect().toSeq)
+
+  test("driver-served posting probes ≡ the distributed plan on every column, across store shapes") {
+    // every query on every store: a term no document holds, a repeated term
+    val queries = Seq(terms, Seq("the"), Seq("zzzz-held-by-none"),
+      Seq("data", "data", "scan"), Seq("scan", "zzzz-held-by-none"))
+    def agree(store: String, dir: String, extra: Seq[Seq[String]] = Nil): Unit = {
+      val rows = (queries ++ extra).map { q =>
+        val probe = PostingLog.probe(spark, dir, q)
+        val twin = PostingLog.distributedProbe(spark, dir, q)
+        assert(probe.queryExecution.logical.isInstanceOf[LocalRelation], s"$store, $q: plan")
+        assert(!twin.queryExecution.logical.isInstanceOf[LocalRelation], s"$store, $q: twin")
+        val got = answer(probe)
+        assert(got === answer(twin), s"$store, $q")
+        if (q.forall(_.startsWith("zzzz"))) assert(got._2.isEmpty, s"$store, $q: rows")
+        got._2
+      }
+      assert(rows.exists(_.nonEmpty), s"$store: no query matched a row")
+    }
+
+    agree("flat, folded plus one live epoch", buildStore())
+
+    val chunked = tmpStore("posting_eq_ch_")
+    PostingLog.appendBatch(datedDocs.filter(pmod($"doc_id", lit(2L)) === 0L), chunked, 0L)
+    PostingLog.compact(spark, chunked)
+    PostingLog.appendBatch(datedDocs.filter(pmod($"doc_id", lit(2L)) === 1L), chunked, 1L)
+    agree("chunked, one live epoch", chunked)
+
+    // the fold lands at 16 buckets, the live epoch at 32
+    val mixed = tmpStore("posting_eq_nb_")
+    (0L to 1L).foreach(e =>
+      PostingLog.appendBatch(corpusDocs.filter(pmod($"doc_id", lit(3L)) === e), mixed, e))
+    PostingLog.compact(spark, mixed)
+    assert(PostingLog.rebucketDeferred(spark, mixed, 32L))
+    PostingLog.appendBatch(corpusDocs.filter(pmod($"doc_id", lit(3L)) === 2L), mixed, 2L)
+    assert(PostingLog.dataRoots(spark, mixed).map(r => PostingLog.rootNBuckets(spark, r.path))
+      === Seq(Some(16L), Some(32L)))
+    agree("roots at two bucket counts", mixed)
+
+    // erasing doc 1 empties the fold's bucket of tA, and the erase deletes it
+    val (crafted, Seq(tA, tB, tC)) = craftedStore()
+    assert(PostingLog.eraseDocs(spark, crafted, Seq(1L)) === 1L)
+    val fold = CubeLog.view(spark, crafted).foldedDir.get.stripPrefix("file:")
+    assert(!new File(s"$fold/tb=${PostingStore.h64(tA) % PostingLog.NBuckets}").exists())
+    agree("a probed bucket emptied and deleted", crafted, Seq(Seq(tA), Seq(tA, tB, tC)))
+
+    // every crawl day of the fold expires: the fold root keeps its markers only
+    val expired = tmpStore("posting_eq_exp_")
+    val days = datedDocs.filter($"crawl_date" === lit("2026-01-01").cast("date"))
+    PostingLog.appendBatch(days, expired, 0L)
+    PostingLog.compact(spark, expired)
+    PostingLog.appendBatch(datedDocs.filter($"crawl_date" > lit("2026-01-01").cast("date")),
+      expired, 1L)
+    assert(PostingLog.expireBefore(spark, expired, "2026-01-02") > 0L)
+    assert(CubeLog.view(spark, expired).foldedDir.nonEmpty &&
+      PostingLog.dataRoots(spark, expired).size === 1, "only the live epoch holds data")
+    agree("a fully expired fold root", expired)
+  }
+
+  test("a posting probe under the gate submits no Spark job, cold or warm") {
+    val dir = tmpStore("posting_guard_")
+    def probed(when: String): Unit = {
+      val (rows, jobs) = jobsOf(PostingLog.probe(spark, dir, terms).collect())
+      assert(rows.nonEmpty, when)
+      assert(jobs === 0, s"a posting probe $when submitted $jobs jobs")
+    }
+    PostingLog.appendBatch(corpusDocs.filter(pmod($"doc_id", lit(2L)) === 0L), dir, 0L)
+    probed("right after appendBatch")
+    PostingLog.compact(spark, dir)
+    probed("right after compact")
+    PostingLog.appendBatch(corpusDocs.filter(pmod($"doc_id", lit(2L)) === 1L), dir, 1L)
+    probed("right after a live appendBatch")
+    probed("warm")
+  }
+
+  test("a posting probe whose probed bytes exceed the driver gate takes the distributed plan") {
+    val gate = DriverRead.PostingProbeMaxBytes
+    assert(DriverRead.servedOnDriver(gate, gate) && !DriverRead.servedOnDriver(gate + 1, gate))
+    // one bucket holds every posting; random 48-char terms barely compress
+    val r = new scala.util.Random(5)
+    def token() = r.alphanumeric.take(48).mkString
+    val texts = (0 until 10).map(i => (i.toLong, Seq.fill(1500)(token()).mkString(" ")))
+    val dir = tmpStore("posting_gate_")
+    PostingLog.appendBatch(texts.toDF("doc_id", "text"), dir, 0L, nBuckets = 1L)
+    val bucket = new File(s"${PostingLog.dataRoots(spark, dir).head.path.stripPrefix("file:")}/tb=0")
+    val bytes = bucket.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(!DriverRead.servedOnDriver(bytes, gate), s"the probed bucket holds $bytes bytes")
+    val q = Seq(texts(3)._2.split(" ").head, texts(7)._2.split(" ").last, "zzzz")
+    val probe = PostingLog.probe(spark, dir, q)
+    assert(!probe.queryExecution.logical.isInstanceOf[LocalRelation])
+    val (_, jobs) = jobsOf(probe.collect())
+    assert(jobs > 0, "over the gate, the probe runs on the cluster")
+    val got = answer(probe)
+    assert(got === answer(PostingLog.distributedProbe(spark, dir, q)))
+    assert(got._2.map(_.getAs[Long]("doc_id")).toSet === Set(3L, 7L))
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
@@ -177,10 +178,16 @@ class VecStoreLogSpec extends SparkSpec {
   test("driver-planned probes ≡ the distributed plan on every column, across store shapes") {
     // two stored copies of vector 7's embedding tie with it (and each
     // other) at cosine 1: 1003 lands with 7 in the folded epochs, 1004 in
-    // the live one, so ties are broken by vec_id within and across legs
+    // the live one, so ties are broken by vec_id within and across legs.
+    // Two stored all-zero vectors score a null cosine against any query:
+    // 2001 lands in the flat store's folded epochs and 2000 in its live
+    // one (the chunked store swaps them)
     val base = emb.filter($"vec_id" < 300)
-    val part = Seq(1003L, 1004L).foldLeft(base)((df, id) =>
-      df.unionByName(base.filter($"vec_id" === 7L).withColumn("vec_id", lit(id))))
+    val zeros = Seq(2000L, 2001L).map(id => base.filter($"vec_id" === 7L)
+      .withColumn("vec_id", lit(id)).withColumn("embedding", transform($"embedding", _ => lit(0f))))
+    val part = (Seq(1003L, 1004L).map(id =>
+      base.filter($"vec_id" === 7L).withColumn("vec_id", lit(id))) ++ zeros)
+      .foldLeft(base)(_ unionByName _)
       .localCheckpoint(eager = true)
     val vecs = part.select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toMap
     // (query id, whose embedding): frames built from driver-side rows
@@ -192,18 +199,18 @@ class VecStoreLogSpec extends SparkSpec {
       "one query, id not stored" -> frame(-1L -> vecs(7L)),
       "one query whose id is a stored vec_id" -> frame(7L -> vecs(7L)),
       "several queries" -> frame(7L -> vecs(7L), -2L -> vecs(123L), 45L -> vecs(45L)),
-      // a zero query's cosine divides by zero: under ANSI (the session's
-      // default) the SQL division fails, and both plans must fail alike
-      "a zero-vector query" -> frame(-3L -> Array.fill(vecs(7L).length)(0f)))
+      // a zero query's cosine is null against every candidate: it ranks
+      // its probed cells' vectors by vec_id alone
+      "a zero-vector query" -> frame(-3L -> vecs(2000L)))
     def agree(store: String, dir: String): Unit = frames.foreach { case (name, q) =>
       val twin = q.repartition(1)
       assert(VecStore.localQuery(q).isDefined === (q.count() == 1L) &&
         VecStore.localQuery(twin).isEmpty, s"$store, $name: routing")
       val probe = VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells)
-      assert(probe.queryExecution.logical.isInstanceOf[LocalRelation] ===
-        (q.count() == 1L && name != "a zero-vector query"), s"$store, $name: plan")
+      assert(probe.queryExecution.logical.isInstanceOf[LocalRelation] === (q.count() == 1L),
+        s"$store, $name: plan")
       val got = answer(probe)
-      assert(got.forall(_._2.nonEmpty), s"$store, $name: no rows")
+      assert(got.exists(_._2.nonEmpty), s"$store, $name: $got")
       assert(got === answer(VecStoreLog.probeTopK(spark, dir, twin, VecStore.ProbeCells)),
         s"$store, $name")
     }
@@ -222,6 +229,20 @@ class VecStoreLogSpec extends SparkSpec {
       top2.exists(t => t(0)._2 == t(1)._2), s"a cosine tie ranks by vec_id: $top2")
     VecStoreLog.appendBatch(part.filter(pmod($"vec_id", lit(3L)) === 2L), dir, 2L)
     agree("flat, one live epoch", dir)
+    // every candidate, ranked: a null cosine ranks after every number
+    def ranked(q: org.apache.spark.sql.DataFrame) =
+      answer(VecStoreLog.probeTopK(spark, dir, q, VecStore.ProbeCells, k = 10000))
+    def nulls(a: Either[String, (org.apache.spark.sql.types.StructType, Seq[Row])]) =
+      a.map(_._2.map(r => r.getAs[Long]("vec_id") -> r.isNullAt(r.fieldIndex("cosine"))))
+    frames.filter(_._2.count() == 1L).foreach { case (name, q) =>
+      assert(ranked(q) === ranked(q.repartition(1)), s"every candidate, $name")
+    }
+    val asked = nulls(ranked(frames.head._2)).toOption.get
+    assert(asked.dropWhile(!_._2).forall(_._2) && asked.filter(_._2).map(_._1).contains(2000L),
+      s"the live zero vector ranks last under a null cosine: ${asked.filter(_._2)}")
+    val zero = nulls(ranked(frames.last._2)).toOption.get
+    assert(zero.forall(_._2) && Set(2000L, 2001L).subsetOf(zero.map(_._1).toSet) &&
+      zero.map(_._1) === zero.map(_._1).sorted, s"a zero query ranks by vec_id: $zero")
     assert(VecStoreLog.eraseByIds(spark, dir, (0L until 300L by 37L)) > 0L)
     agree("flat, after an in-place erase", dir)
     // empty one of the query's probed cells: the erase deletes its directory
@@ -257,8 +278,8 @@ class VecStoreLogSpec extends SparkSpec {
   }
 
   test("a one-query probe whose probed bytes exceed the driver gate takes the distributed plan") {
-    assert(VecStore.servedOnDriver(VecStore.DriverProbeMaxBytes))
-    assert(!VecStore.servedOnDriver(VecStore.DriverProbeMaxBytes + 1))
+    val gate = DriverRead.VecProbeMaxBytes
+    assert(DriverRead.servedOnDriver(gate, gate) && !DriverRead.servedOnDriver(gate + 1, gate))
     // wide random vectors (poorly compressible, ~16 KB each): a small
     // folded generation, then a live epoch over the gate — every live
     // byte is probed
@@ -269,11 +290,11 @@ class VecStoreLogSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vlog_gate_").toString + "/idx"
     VecStoreLog.appendBatch(wide(0 until 40), dir, 0L)
     VecStoreLog.compact(spark, dir, Some(4))
-    val live = wide(40 until 40 + (VecStore.DriverProbeMaxBytes / (dims * 4) * 3 / 2).toInt)
+    val live = wide(40 until 40 + (gate / (dims * 4) * 3 / 2).toInt)
     VecStoreLog.appendBatch(live, dir, 1L)
     val epochBytes = new java.io.File(s"$dir/batch_id=1").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    assert(!VecStore.servedOnDriver(epochBytes), s"live epoch of $epochBytes bytes")
+    assert(!DriverRead.servedOnDriver(epochBytes, gate), s"live epoch of $epochBytes bytes")
     val q = Seq((-1L, Array.fill(dims)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
     val (got, jobs) = jobsOf(answer(VecStoreLog.probeTopK(spark, dir, q, 1)))
     assert(jobs > 0, "over the gate, the probe runs on the cluster")
