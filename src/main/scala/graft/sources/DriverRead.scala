@@ -30,10 +30,12 @@ private[sources] object DriverRead {
 
   /** Probed bytes at or under which a posting probe is served on the
     * driver. Smaller than the vector gate because the distributed posting
-    * plan is cheap: one pruned scan through a declared schema, 60–90 ms
+    * plan is cheap: one pruned scan through a declared schema, 60–110 ms
     * warm on a 4-core host, where the driver decodes postings at about
-    * 0.17 ms per KB under a C1-only JIT (0.11 with C2). The two meet near
-    * 256 KB (CHANGES.md). */
+    * 0.17–0.31 ms per KB under a C1-only JIT (0.11 with C2). Two
+    * measurements put the crossover at 135–256 KB (CHANGES.md); the gate
+    * takes the upper end because the first probe after a landing, which
+    * sees new roots, costs the distributed plan more than a warm one. */
   val PostingProbeMaxBytes: Long = 256L << 10
 
   /** The gate a probe applies to its probed bytes: inclusive. */
